@@ -14,12 +14,11 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# default heap: half the machine's memory, clamped to 2..8 GB (build.sbt's
+# formula); Spark confs come from graft.Harness.session, not -D flags
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)"
 exec java $ADD_OPENS ${EXTRA_JAVA_OPTS:-} \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.codegen.cache.maxEntries=4096 \
-  -Dspark.sql.codegen.useIdInClassName=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$HEAP}" \
   -XX:ReservedCodeCacheSize="${SPARK_CODE_CACHE:-1g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$@"

@@ -24,38 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r17 (ADVICE): the triangle lane's broadcast-adjacency plan
-      // collects up to 50 M-element adjacency rows (~400 MB raw, more
-      // serialized) through TWO broadcast exchanges; the 1 g default
-      // would abort near the threshold instead of degrading to the
-      // shuffle plan. 8 g comfortably exceeds the worst case on this
-      // 48 g heap.
-      .config("spark.driver.maxResultSize", "8g")
-      // r17 (VERDICT r16 ask 4, measured by tools/FanoutAB on a clean
-      // box): mid-size derived-table scans (DocTerms ≈ 100–200 MB at
-      // sf1) pack into 1–2 splits at the default 128 MB, idling 30 of
-      // 32 cores on exactly the scan stages a degraded disk hurts most.
-      // 32 MB fans them out 4–8× at negligible small-file cost
-      // (openCost packing still applies): sf1 cold q_bmw 191→82 s,
-      // q_wand 34→14 s, q_bm25_pruned 15→7 s — and the 32 MB samples'
-      // run-to-run spread collapses (0.01–0.3 s vs 16–29 s), which is
-      // the latency-sensitivity story SCALE.md's r16 note predicted.
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      // static conf: the 100-entry default codegen cache recompiles
-      // stage-rich lanes every execution (r17; see build.sbt)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // keep codegen class names stable across AQE stage renumbering
-      // so repeat executions hit the codegen cache (r17; see build.sbt)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietKnownNoise()
+    val spark = Harness.session("graft-bench")
+    val cpus = Harness.cpus
     // r16 — the gate diagnoses ITSELF (VERDICT r15 asks 1 and 7): three
     // rounds of sf0.1 gate degradation were argued from inference
     // because the degraded runs carried no telemetry. Now:
@@ -166,7 +136,10 @@ object Bench {
           """"([^"]+)":([0-9.]+)""".r.findAllMatchIn(s)
             .map(m => m.group(1) -> m.group(2).toDouble).toMap
         }
-      } catch { case _: Throwable => Map.empty }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] committed medians unreadable: $e")
+        Map.empty
+      }
     val expected: Map[String, Double] =
       if (sfDir.replaceAll("/+$", "").endsWith("sf0.1")) committedMedians
       else Map.empty
@@ -210,7 +183,7 @@ object Bench {
           // whichever query ran first against `documents` paid the
           // one-time disk read (q_mixture_sample 7.19 s cold, 1.13 s
           // warm). Table I/O is catalog state, not query work; Spark's
-          // own cache is still cleared per query by cleanup().
+          // own cache is still cleared per query by Harness.teardown.
           t.write.format("noop").mode("overwrite").save()
         } catch { case e: Throwable =>
           System.err.println(s"[bench] warmup for table $n failed: ${e.getMessage}")
@@ -227,39 +200,6 @@ object Bench {
       } catch { case e: Throwable =>
         ((System.nanoTime() - t0) / 1e9, Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}"))
       }
-    }
-
-    /** Drop anything a query left pinned in the block manager (cached
-      * plans, persisted/localCheckpoint'd RDDs) so queries are measured
-      * independently — accumulated blocks turn the tail of the run into a
-      * GC benchmark instead of a query benchmark. */
-    def cleanup(): Unit = {
-      spark.catalog.clearCache()
-      // releaseAll is the library caller's teardown (clears the operator
-      // cache registry); the getPersistentRDDs sweep below then catches
-      // anything persisted outside the registry (e.g. localCheckpoints)
-      graft.operators.OpCaches.releaseAll()
-      // blocking=true (r15): an async unpersist lets block removal
-      // bleed into the NEXT timed run — under box pressure that is
-      // exactly the kind of cross-run state the gate's warm-inversion
-      // guard exists to catch. Teardown cost belongs to cleanup(),
-      // which is outside every timed window.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // r16: reclaim loop-checkpoint files too — nothing from a
-      // finished run is ever read again (each run builds fresh
-      // DataFrames), and 480 runs' accumulated generations otherwise
-      // share the local disk + page cache with every later run's
-      // shuffles (VERDICT r15's q_pagerank warm>cold suspect #1)
-      graft.operators.Ckpt.clearAll(spark)
-      // Spark's ContextCleaner reclaims dead broadcasts/shuffles/RDD blocks
-      // only when the JVM GCs their weak references. 126 query runs in one
-      // JVM without explicit GC let that debris pile up, so late-running
-      // queries pay extra GC/memory tax for earlier queries' leftovers
-      // (measured: identical queries 5-8× slower at the tail of a bench
-      // run than in isolation). One explicit GC per query keeps runs
-      // independent at ~100 ms cost.
-      System.gc()
     }
 
     // SPARK_GRAFT_SKIP: comma-separated query names to exclude — for
@@ -359,8 +299,8 @@ object Bench {
         /** One pre-warm execution + light teardown; returns seconds
           * (negative on error). Light teardown only: enough that the
           * pre-warm queries don't accumulate pinned blocks/checkpoints;
-          * the full cleanup() (incl. System.gc) runs once below,
-          * outside the pass. */
+          * the full Harness.teardown (incl. System.gc) runs once
+          * below, outside the pass. */
         def runOnce(dir: String,
                     f: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
           val r0 = System.nanoTime()
@@ -454,7 +394,7 @@ object Bench {
             }
           }
         }
-        cleanup() // full teardown (incl. GC) before any timed window
+        Harness.teardown(spark) // full teardown (incl. GC) before any timed window
         val secs = (System.nanoTime() - t0) / 1e9
         val buildSecs = graft.operators.BuildMeter.seconds - b0
         def tierJson(t: Option[(String, (Int, Int, Map[String, Double]))],
@@ -548,8 +488,8 @@ object Bench {
       // the cold run's pinned blocks are pure dead weight the warm run
       // pays for (r13: q_minhash_recall warm 98.8 s vs cold 36.4 s on
       // the driver box — 2.7× INVERTED). JIT/codegen caches survive
-      // cleanup(), which is what "warm" is meant to measure here.
-      cleanup()
+      // the teardown, which is what "warm" is meant to measure here.
+      Harness.teardown(spark)
       quiesceListeners() // let late async stage events land (ADVICE r16)
       val (stagesCold, nStCold, wallStCold) = snapStages()
       val b1 = graft.operators.BuildMeter.seconds
@@ -557,7 +497,7 @@ object Bench {
       val warm = run(f)
       val bWarm = graft.operators.BuildMeter.seconds - b1
       val jit3 = Sentinel.jitMs(); val cg3 = Sentinel.codegenCompiles()
-      cleanup()
+      Harness.teardown(spark)
       quiesceListeners()
       val (stagesWarm, nStWarm, wallStWarm) = snapStages()
       // keep the telemetry when the run needs explaining: cold beyond
@@ -630,9 +570,9 @@ object Bench {
     // end-of-catalog re-run sample for every flagged lane (cold-style:
     // construction inside the timer, teardown before and after)
     val reruns = rerunQueue.toSeq.map { case (n, f) =>
-      cleanup()
+      Harness.teardown(spark)
       val (t, err) = run(f)
-      cleanup()
+      Harness.teardown(spark)
       System.err.println(s"[bench] RERUN $n: ${t3(t)} s" +
         err.map(e => s" ($e)").getOrElse(""))
       (n, if (err.isDefined) -1.0 else t)
@@ -738,11 +678,13 @@ object Bench {
         s""""${esc(k)}":$v,"attributed":"${attributed(k, diagMeta(k))}"}"""
       }.mkString("{", ",", "}")
     val detail = s"""{"metric":"total_cold","value":${t3(total)},"unit":"sec","queries_cold":$coldJson,"queries_warm":$warmJson,"build_cold":$buildColdJson,"build_warm":$buildWarmJson,"errors":$errors,"skipped":$skipJson,"warm_inversions":$invJson,"sentinel":$sentinelJson,"sentinel_io":$sentinelIoJson,"rerun":$rerunJson,"code_cache_mb":$ccJson,"diagnostics":$diagJson,"prewarm":$prewarmJson,"sf":"$sfDir","cpus":$cpus}"""
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_detail.json"),
-        detail.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    // the fixed path the contract line names, plus a run-qualified copy
+    // so a run at another core count or SF never overwrites this one's
+    val sfName = new java.io.File(sfDir).getName
+    Seq("bench_detail.json", s"bench_detail_c${cpus}_$sfName.json").foreach { f =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(f), detail.getBytes("UTF-8"))
+      catch { case e: Throwable => System.err.println(s"[bench] writing $f failed: $e") }
+    }
 
     spark.stop()
     // contract line: LAST line of stdout, bare JSON, compact. The driver

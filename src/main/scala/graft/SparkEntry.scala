@@ -1504,8 +1504,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * installs [[graft.plans.GraftExtensions]] on the session it is given
+    * before it builds its plan, so a lane plans the same whatever ran
+    * before it in the JVM and whoever built the session (the TopK
+    * rewrites are result-identical; their oracles still apply). */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    lanes.map { case (name, lane) =>
+      name -> ((s: SparkSession, dir: String) => {
+        graft.plans.GraftExtensions.install(s)
+        lane(s, dir)
+      })
+    }
+
+  private def lanes: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ================= relational / analytic core =====================
 
@@ -1969,7 +1981,6 @@ object SparkEntry {
       // graft's optimizer rule rewrites this window+filter into the bounded
       // TopKPerGroup operator (partial per-partition top-k heaps instead of
       // a full window sort) — results identical, oracle still applies
-      graft.plans.GraftExtensions.install(s)
       val w = Window.partitionBy($"o_custkey").orderBy($"o_totalprice".desc, $"o_orderkey")
       Tables.orders(s, dir)
         .withColumn("rk", row_number().over(w))
@@ -2532,7 +2543,6 @@ object SparkEntry {
       import s.implicits._
       // lake upsert/merge primitive: collapse the append history to the
       // newest row per (user, event_type); rewrites to TopKPerGroup k=1
-      graft.plans.GraftExtensions.install(s)
       etl.Compaction.latestByKey(Tables.events(s, dir),
           keys = Seq($"user_id", $"event_type"),
           version = Seq($"ts", $"event_id"))
@@ -2553,7 +2563,6 @@ object SparkEntry {
       // 'D' deletes, others replace the row image; one collapse + one
       // key equi-join. Changelog derived from orders: a customer's
       // latest order updates their balance, or closes ('F') the account.
-      graft.plans.GraftExtensions.install(s)
       val base = Tables.customer(s, dir)
         .select($"c_custkey", dec2($"c_acctbal").as("acctbal"))
       val changes = Tables.orders(s, dir).select(
@@ -2576,7 +2585,6 @@ object SparkEntry {
       // added / removed / changed / unchanged from ONE full-outer key
       // join with map-side null-safe payload comparison. Balances compared
       // as decimal (exact), emitted as double (parity rules).
-      graft.plans.GraftExtensions.install(s)
       val baseAll = Tables.customer(s, dir)
         .select($"c_custkey", dec2($"c_acctbal").as("acctbal"))
       val before = baseAll.filter($"c_custkey" % 20 =!= 7)
@@ -2840,8 +2848,8 @@ object SparkEntry {
       // perNodeMergeAuto broadcasts the adjacency while it fits
       // executor memory (one metadata-only count decides) — the joins
       // become hash probes and the Σ(d⁺u+d⁺v) array payload (10.6 GB
-      // at sf1, GraphStatsProbe) never shuffles; past the bound the
-      // shuffle plan engages, same rows.
+      // at sf1, SCALE.md "The triangle lane, fully decomposed") never
+      // shuffles; past the bound the shuffle plan engages, same rows.
       val oriented = operators.CoPurchase.orientedFull(s, dir)
       val adj = operators.CoPurchase.triAdjacency(s, dir)
       operators.Triangles.perNodeMergeAuto(oriented, adj)
@@ -2946,7 +2954,6 @@ object SparkEntry {
       // bit-for-bit (the CountMin recipe for distincts). The rn<=k build
       // rewrites to TopKPerGroup heaps; exact distinct joined alongside
       // is the verification harness — production keeps only sketches.
-      graft.plans.GraftExtensions.install(s)
       val li = Tables.lineitem(s, dir)
       val sk = operators.KmvSketch.sketch(li, $"l_returnflag", $"l_partkey",
         k = 256)
@@ -2966,7 +2973,6 @@ object SparkEntry {
       // trick — below the combined k-th min, sketch membership IS set
       // membership). Exact union/intersection joined alongside as the
       // harness; every estimate replays integer-exactly in the oracle.
-      graft.plans.GraftExtensions.install(s)
       val li = Tables.lineitem(s, dir)
       val sk = operators.KmvSketch.sketch(li, $"l_returnflag", $"l_partkey",
         k = 256)
@@ -3031,7 +3037,6 @@ object SparkEntry {
       // days, one bounded merge. Each day's rows explode to the ≤7
       // window-ends they serve (row-local), re-rank, re-estimate; exact
       // trailing distincts ride along as the harness.
-      graft.plans.GraftExtensions.install(s)
       val k = 256
       val ev = Tables.events(s, dir)
       val daily = operators.KmvSketch.sketch(ev, to_date($"ts"), $"user_id", k)
@@ -3285,7 +3290,6 @@ object SparkEntry {
 
     "q_inverted_index" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.GraftExtensions.install(s)
       // inverted index — the IR primitive TF-IDF/BM25 assume: per-term
       // document frequency, total term frequency, and a BOUNDED posting
       // sample (10 lowest doc ids). The sample comes from row_number<=10,
@@ -3403,7 +3407,6 @@ object SparkEntry {
       // cluster keep the longest document (row_number=1 rewrites to the
       // bounded TopKPerGroup); singletons keep themselves. Oracle:
       // recursive-CTE components + the same keep policy in SQL.
-      graft.plans.GraftExtensions.install(s)
       val docs = Tables.documents(s, dir)
       val clusters = Dedup.minhashLshClusters(docs, $"text", $"doc_id",
         shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
@@ -3482,7 +3485,6 @@ object SparkEntry {
       // exact cosine rerank — the second ANN scale path next to LSH.
       // The trained model is cached per dir so oracleSql can emit its
       // centroids as SQL literals (see ivfModel).
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.embeddings(s, dir)
       val model = ivfModel(s, dir)
       operators.IvfAnn.topK(e.filter($"vec_id" < 10), e, k = 5, model, nProbe = 4)
@@ -3499,7 +3501,6 @@ object SparkEntry {
       // by the same codegen kernel as IVF cells (argmin L2 == argmax
       // augmented dot); exact_dist rides along to exhibit the
       // approximation. Both trained models replay as oracle literals.
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.embeddings(s, dir)
       val coarse = ivfModel(s, dir)
       val pq = pqModel(s, dir)
@@ -3518,7 +3519,6 @@ object SparkEntry {
       // operators, same parameters as its own hash-checked query);
       // ground truth (50 rows) is pinned once and broadcast into the
       // three intersection joins.
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.embeddings(s, dir)
       val q = e.filter($"vec_id" < 10)
       val brute = operators.Ckpt.viaParquet(
@@ -3561,7 +3561,6 @@ object SparkEntry {
       // rule), per-query DCG/MRR are exact integer sums (mrr_micro =
       // 1e6 div first-relevant-rank), and the two means are ONE double
       // division of exact integers each, round-6.
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.embeddings(s, dir)
       val q = e.filter($"vec_id" < 10)
       val brute = operators.Ckpt.viaParquet(
@@ -3621,7 +3620,6 @@ object SparkEntry {
       // n_scored = candidate pairs the lane actually scores (its scan);
       // scan_ppm = that as a fraction of the bruteforce scan. All
       // columns integer -> bit-stable hash vs the literal-replay oracle.
-      graft.plans.GraftExtensions.install(s)
       val e = Tables.embeddings(s, dir)
       val q = e.filter($"vec_id" < 10)
       val brute = operators.Ckpt.viaParquet(
@@ -3886,7 +3884,6 @@ object SparkEntry {
 
     "q_tfidf" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.GraftExtensions.install(s)
       // n_docs counts ALL docs (token-less included) — the one thing the
       // term table can't see; the count(*) scan is metadata-cheap
       operators.TfIdf.topTermsFromTf(operators.DocTerms.table(s, dir),
@@ -3928,7 +3925,6 @@ object SparkEntry {
       import s.implicits._
       // cap-per-source curation: 20 docs per language, md5-priority keyed
       // reservoir — deterministic, and rewritten to TopKPerGroup
-      graft.plans.GraftExtensions.install(s)
       operators.Sampling.perGroupSample(
           Tables.documents(s, dir), $"lang", $"doc_id", k = 20)
         .select($"lang", $"doc_id", $"sample_rank".cast(LongType).as("sample_rank"))
@@ -4144,7 +4140,6 @@ object SparkEntry {
       // (etl_job_auditor analogue for the LLM pipeline). Every stage
       // reuses the individually-verified operator; the oracle replays
       // the full chain.
-      graft.plans.GraftExtensions.install(s)
       val toks = TextFns.tokens($"text")
       val base = Tables.documents(s, dir)
         .select($"doc_id", $"text",
@@ -4343,7 +4338,6 @@ object SparkEntry {
 
     "q_bm25" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.GraftExtensions.install(s)
       // rides the materialized doc-term table (the shared index build —
       // see operators.DocTerms); scoring never re-tokenizes the corpus
       operators.Bm25.topTermsFromTf(operators.DocTerms.table(s, dir), k = 3)
@@ -4367,7 +4361,6 @@ object SparkEntry {
 
     "q_bm25_pruned" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.GraftExtensions.install(s)
       // champion-list pruning as a FRONTIER audit (the q_ann_tuned
       // discipline for the lexical lane): each depth m runs the exact
       // production operator against the full-index truth and reports
@@ -4423,7 +4416,6 @@ object SparkEntry {
 
     "q_wand" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.GraftExtensions.install(s)
       // the query-time DYNAMIC-pruning retrieval lane (MaxScore) the
       // champion lists and certificate algebra were built toward
       // (judge r13 #4): seed τ from the depth-64 static lists, split
@@ -4443,7 +4435,6 @@ object SparkEntry {
 
     "q_bmw" -> ((s, dir) => {
       import s.implicits._
-      graft.plans.GraftExtensions.install(s)
       // Block-Max WAND (Ding & Suel SIGIR'11) — q_wand's MaxScore
       // candidates refined by per-(term, docid-block) max weights
       // before the exact rescore: a candidate whose block-bound falls
@@ -4467,9 +4458,9 @@ object SparkEntry {
       // replay as SQL literals, the kmeansOracle recipe), candidates
       // form only within a cell — one shuffle join on the cell id, the
       // exact plan a corpus-scale miner runs; margins/mutual-best
-      // evaluate block-locally. BitextScale measured what the blocking
-      // trades (SCALE.md); this lane pins that the traded computation
-      // itself is engine-exact.
+      // evaluate block-locally. SCALE.md "Bitext mining: brute vs
+      // IVF-cell-blocked" measured what the blocking trades; this lane
+      // pins that the traded computation itself is engine-exact.
       val e = Tables.embeddings(s, dir)
       val model = bitextModel(s, dir)
       operators.BitextMine.minePairsBlocked(
@@ -6104,7 +6095,6 @@ object SparkEntry {
       // partitioning itself — and the rank filter is bounded top-k
       // (WindowGroupLimit / TopKPerGroup), never a full per-shard sort
       // materialization.
-      graft.plans.GraftExtensions.install(s)
       operators.Sharding.withPositions(
           Tables.documents(s, dir).select($"doc_id"), $"doc_id", nShards = 16)
         .filter($"shuffle_pos" <= 3)

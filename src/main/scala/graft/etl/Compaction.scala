@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * business key (the batch form of what the reference's audit-trail
   * lambda does per-update in DynamoDB, generalized to any key/version).
   *
-  * One shuffle on the key; with GraftExtensions installed the
+  * One shuffle on the key; with the GraftExtensions rules in place the
   * row_number()=1 shape rewrites to the bounded TopKPerGroup operator
   * (k=1 heaps map-side), so the shuffle carries at most one candidate
   * row per key per input partition instead of the whole history. */

@@ -93,7 +93,8 @@ object PageRank {
     * (InMemoryRelation preserves both partitioning and ordering), so
     * per-iteration movement drops to the small ranks side + the
     * map-side-combined contribution aggregation. Measured sf10
-    * (QueryTime, settled runs): 142.3 s → see SCALE.md r18 table.
+    * (settled runs): 142.3 s → 41.3 s, SCALE.md "sf10 confirmation
+    * sweep on final r18 code".
     * Values unchanged — partitioning never affects the exact integer
     * arithmetic (PageRankSpec pins the forms equal). */
   private def pinnedBySrc(trans: DataFrame): DataFrame = {

@@ -31,9 +31,9 @@ object Sampling {
 
   /** Deterministic per-group sample: keep k rows per group, chosen by
     * md5-hash priority (a keyed reservoir without randomness — the
-    * "cap documents per source/domain" curation op). With
-    * GraftExtensions installed the row_number+filter rewrites to the
-    * bounded TopKPerGroup operator, so no full per-group sort runs. */
+    * "cap documents per source/domain" curation op). With the
+    * GraftExtensions rules in place the row_number+filter rewrites to
+    * the bounded TopKPerGroup operator, so no full per-group sort runs. */
   def perGroupSample(df: DataFrame, group: Column, key: Column, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(group).orderBy(md5(key.cast(StringType)), key)

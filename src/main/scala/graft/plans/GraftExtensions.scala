@@ -64,9 +64,10 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** Register via `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * — or after the fact with [[GraftExtensions.install]] (the experimental
-  * hooks), which lets graft accelerate sessions it did not create. */
+/** Register on a session builder with `withExtensions(new GraftExtensions)`
+  * — or after the fact with the companion's `install` (the experimental
+  * hooks), which lets graft accelerate sessions it did not create;
+  * every `SparkEntry.queries` lane does the latter. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RewriteTopKWindow)

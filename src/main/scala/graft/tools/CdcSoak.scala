@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming-CDC scale soak: drive the partition-scoped upsert sink
@@ -34,14 +33,7 @@ object CdcSoak {
     val nBatches = if (args.length > 2) args(2).toInt else 8
     val keysPerBatch = if (args.length > 3) args(3).toInt else 20000
     val replicate = if (args.length > 4) args(4).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-cdc-soak")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Logs.quietKnownNoise()
+    val spark = graft.Harness.session("graft-cdc-soak")
     import spark.implicits._
 
     val orders0 = spark.read.parquet(s"$sfDir/orders.parquet")

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.operators.{CoPurchase, PageRank}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures incremental co-purchase edge refresh against a full rebuild
@@ -18,13 +17,7 @@ object RefreshBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("tmp/sf1")
     val mod = if (args.length > 1) args(1).toInt else 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-refreshbench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-refreshbench")
 
     val li = Tables.lineitem(spark, dir)
     val base = li.filter(col("l_orderkey") % mod =!= 0)

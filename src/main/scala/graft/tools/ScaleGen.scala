@@ -73,13 +73,7 @@ object ScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "tmp/sf1"
     val n = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-scalegen")
     // events carries parquet TIMESTAMP(NANOS); read the nanos as long
     // (see Tables.events) and write them back as plain int64 — the
     // loader's `ts div 1000` shim works identically on either encoding.

@@ -19,10 +19,13 @@ class CorpusAuditsSpec extends AnyFunSuite with SparkSpec {
     // "bursty" 4 times in one doc → counts [4,0,0,0]:
     // vmr = (4·16 − 16) / (4·4) = 3.0
     val dir = tmpDir("burst_")
+    // the real documents columns: the lane reads the doc-term table,
+    // whose build carries lang through
     Seq(
       (1L, "even bursty bursty bursty bursty"),
       (2L, "even"), (3L, "even"), (4L, "even"))
-      .toDF("doc_id", "text")
+      .map { case (id, text) => (id, text, "en", "src0", text.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = SparkEntry.queries("q_burstiness")(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))

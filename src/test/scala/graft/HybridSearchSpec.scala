@@ -121,8 +121,9 @@ class HybridSearchSpec extends AnyFunSuite with SparkSpec {
     val dt = graft.operators.DocTerms.table(spark, sf)
       .withColumn("is_q", $"doc_id" < 8)
     val (ranked, qT) = HybridSearch.impactAuditParts(dt)
+    // multisets (row -> count): a duplicated or dropped row must fail
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
     assert(rows(HybridSearch.bm25RetrieveFromRanked(ranked, qT, k = 10)) ==
       rows(HybridSearch.bm25RetrieveFromTf(dt, k = 10)))
     Seq(32, 600).foreach { m =>
@@ -146,8 +147,9 @@ class HybridSearchSpec extends AnyFunSuite with SparkSpec {
       .withColumn("is_q", $"doc_id" < 8)
     val mat = HybridSearch.rankedTable(spark, sf)
     val (inlineRanked, qT) = HybridSearch.impactAuditParts(dt)
+    // multisets (row -> count): a duplicated or dropped row must fail
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
     assert(rows(mat) == rows(inlineRanked), "materialized != inline champions")
     assert(rows(HybridSearch.bm25RetrieveFromRanked(mat, qT, k = 10)) ==
       rows(HybridSearch.bm25RetrieveFromRanked(inlineRanked, qT, k = 10)))

@@ -760,4 +760,19 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("events"),
       s"iteration lineage leaked into the output plan:\n$p")
   }
+
+  test("a lane plans the same in a fresh session and after another lane ran") {
+    // no rewrite registered yet, as in a session nothing else touched
+    spark.experimental.extraOptimizations = Nil
+    spark.experimental.extraStrategies = Nil
+    def optimized(name: String): String =
+      SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+L?", "#")
+    val fresh = optimized("q_cooccur_recs")
+    SparkEntry.queries("q_window_topk")(spark, sf).collect()
+    val after = optimized("q_cooccur_recs")
+    assert(fresh.contains("TopKPerGroup"), s"fresh-session plan not rewritten:\n$fresh")
+    assert(after.contains("TopKPerGroup"), s"plan not rewritten:\n$after")
+    assert(fresh == after, s"plan depends on run order:\n$fresh\n---\n$after")
+  }
 }

@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session for all suites (getOrCreate → one JVM-wide session). */
+/** Shared session for all suites (getOrCreate → one JVM-wide session),
+  * built by the same factory as Bench and Verify. */
 trait SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "target/test-warehouse")
-    .config("spark.ui.enabled", "false")
-    // plan pins grep scan metadata (PushedFilters/ReadSchema); the
-    // 100-char default silently truncates longer filter lists, making a
-    // pin's hit-or-miss depend on the PRINT length of unrelated
-    // predicates earlier in the list
-    .config("spark.sql.maxMetadataStringLength", "2000")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session("graft-spec", cores = 4,
+    warehouseDir = Some("target/test-warehouse"))
 
   val sf: String = "/root/testdata/sf0.001"
 }
