@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place graft builds a SparkSession, and the one teardown run
-  * between catalog lanes. Bench, Verify, every `graft.tools` main and the
-  * test suites all get their session here, so a lane runs under the same
-  * confs whichever of them runs it.
+/** The one place graft builds a SparkSession, the one lane meter and the
+  * one teardown run between catalog lanes. Bench, Verify, every
+  * `graft.tools` main and the test suites all get their session here, so
+  * a lane runs under the same confs whichever of them runs it.
   *
   * The confs are production settings, not switches: the parameters are
   * only the deployment facts callers differ on (app name, local core
@@ -73,6 +73,39 @@ object Harness {
     spark.sparkContext.setLogLevel("WARN")
     Logs.quietKnownNoise()
     spark
+  }
+
+  /** Run one lane through the noop sink and meter it. Construction sits
+    * inside the timer (several operators do real work eagerly while the
+    * DataFrame is built), and the noop sink materializes every row and
+    * column — count() would let Catalyst prune the work being measured.
+    * A failure is recorded in the returned [[LaneRun]], never rethrown.
+    * Stage totals cover exactly this run: the listener bus is drained
+    * before the run starts and again before the snapshot. */
+  def runLane(spark: SparkSession,
+              f: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+              dir: String): LaneRun = {
+    val meter = StageMeter.on(spark.sparkContext)
+    meter.drain(spark.sparkContext)
+    meter.snapshot()
+    val jit0 = Sentinel.jitMs()
+    val cg0 = Sentinel.codegenCompiles()
+    val b0 = operators.BuildMeter.seconds
+    val t0 = System.nanoTime()
+    val error =
+      try { f(spark, dir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable =>
+        Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(160)}")
+      }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    val build = operators.BuildMeter.seconds - b0
+    val jit1 = Sentinel.jitMs()
+    val cg1 = Sentinel.codegenCompiles()
+    meter.drain(spark.sparkContext)
+    val (top, stages, stageWall) = meter.snapshot()
+    LaneRun(seconds, error, build,
+      if (jit0 < 0 || jit1 < 0) None else Some(jit1 - jit0),
+      cg1 - cg0, stages, stageWall, top)
   }
 
   /** Drop everything a finished lane left behind so the next one is

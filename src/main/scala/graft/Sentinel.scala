@@ -24,9 +24,11 @@ import org.apache.spark.sql.functions._
   *                   deleted immediately: pays the sink write path.
   * A degraded disk now reads as flat cpu + elevated shuffle/write — the
   * r16 gate's "box moved vs lane regressed" separation, made
-  * self-classifying for the IO axis too.
+  * self-classifying for the IO axis too. [[point]] runs all three and
+  * reads the code cache: the one sentinel record Bench and Verify write.
   *
-  * Also here: the JVM-state snapshots the per-lane diagnostics attach —
+  * Also here: the JVM-state snapshots the lane meter
+  * ([[Harness.runLane]]) takes around every run —
   * JIT code-cache occupancy (the r15 degradation mechanism), HotSpot
   * total compilation time, and Spark's whole-stage-codegen (Janino)
   * compilation count/size (CodegenMetrics — a compile is a codegen-cache
@@ -79,6 +81,22 @@ object Sentinel {
     s
   }
 
+  /** One (cpu, shuffle, write, code-cache) box-state reading. */
+  final case class Point(cpu: Double, shuffle: Double, write: Double,
+                         codeCacheUsedMb: Double, codeCacheMaxMb: Double) {
+    def json: String =
+      s"""{"cpu":${Json.num(cpu)},"shuffle":${Json.num(shuffle)},""" +
+      s""""write":${Json.num(write)},"code_cache_mb":[""" +
+      s"""${Json.num(codeCacheUsedMb)},${Json.num(codeCacheMaxMb)}]}"""
+  }
+
+  /** Run the three fixed-work probes, then read the code cache. */
+  def point(spark: SparkSession): Point = {
+    val (c, sh, wr) = (cpuRun(spark), shuffleRun(spark), writeRun(spark))
+    val (used, max) = codeCacheMb()
+    Point(c, sh, wr, used, max)
+  }
+
   /** (used MB, max MB) across the JIT code-heap pools — the r15
     * degradation mechanism. */
   def codeCacheMb(): (Double, Double) = {
@@ -96,22 +114,15 @@ object Sentinel {
     * the "first-execution JIT warmup" story the r16 traces could only
     * infer from CPU shape). Returns -1 when the JVM does not support
     * compilation-time monitoring — callers MUST pass the sentinel
-    * through (diagnostics emit null), never fold it into a zero delta:
-    * "no JIT meter" and "no JIT work" are different facts (r18,
-    * ADVICE). [[jitDeltaJson]] is the shared delta formatter. */
+    * through (the lane record's jit_ms is null), never fold it into a
+    * zero delta: "no JIT meter" and "no JIT work" are different facts
+    * (r18, ADVICE). */
   def jitMs(): Long = {
     val b = java.lang.management.ManagementFactory.getCompilationMXBean
     if (b != null && b.isCompilationTimeMonitoringSupported)
       b.getTotalCompilationTime
     else -1L
   }
-
-  /** JSON value for a (before, after) [[jitMs]] pair: the delta, or the
-    * literal `null` when either read came from an unsupported JVM —
-    * the r18 ADVICE fix (a silent 0 was indistinguishable from "no JIT
-    * work" in exactly the diagnostics that lean on this meter). */
-  def jitDeltaJson(before: Long, after: Long): String =
-    if (before < 0 || after < 0) "null" else (after - before).toString
 
   /** Cumulative whole-stage-codegen compile COUNT from Spark's
     * CodegenMetrics. A compile is a codegen-cache MISS — a warm run

@@ -1461,18 +1461,9 @@ object SparkEntry {
     * touches the full ~2,500-doc sample. Charged to BuildMeter: it is
     * once-per-JVM warm-up work, exactly like a DerivedCache build. */
   private val minhashRecallPrewarmed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    new java.util.concurrent.atomic.AtomicBoolean(false)
   private def prewarmMinhashRecall(s: SparkSession, dir: String): Unit =
-    // r18b: keyed per DATA DIR, not per JVM — Bench's catalog-level
-    // pre-warm runs every lane against the tiny sf0.001 sibling first,
-    // and a per-JVM flag let that pass CONSUME the pre-warm: the timed
-    // sf0.1 cold run then executed the full ~2,500-doc sample on
-    // HotSpot state trained only on ~50 docs (measured: cold 40.3 s /
-    // warm 17.8 s vs the 8.5 s median). Per-dir keying restores the
-    // 1-in-11 real-data slice before the first full run on EACH dir
-    // (still metered in BuildMeter; still once per dir per JVM).
-    if (minhashRecallPrewarmed.add(
-        new java.io.File(dir).getCanonicalPath)) operators.BuildMeter.time {
+    if (!minhashRecallPrewarmed.getAndSet(true)) operators.BuildMeter.time {
       val (df, pinned) = minhashRecallPlan(s, dir, minhashAuditSampleBudget / 11)
       df.write.format("noop").mode("overwrite").save()
       pinned.foreach(_.unpersist(blocking = false))

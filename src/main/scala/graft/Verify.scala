@@ -16,16 +16,11 @@ object Verify {
     // carry the same (cpu, shuffle, write) fixed-work triples. Written
     // to the REPO root, not outDir — the driver treats outDir entries
     // as query results.
-    val sentinels = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val sentinels = scala.collection.mutable.LinkedHashMap.empty[String, Sentinel.Point]
     def sentinelPoint(tag: String): Unit = {
-      val c = Sentinel.cpuRun(spark)
-      val sh = Sentinel.shuffleRun(spark)
-      val wr = Sentinel.writeRun(spark)
-      val (ccU, ccM) = Sentinel.codeCacheMb()
-      sentinels(tag) =
-        f"""{"cpu":$c%.3f,"shuffle":$sh%.3f,"write":$wr%.3f,"code_cache_mb":[$ccU%.3f,$ccM%.3f]}"""
-      System.err.println(
-        f"[verify-sentinel $tag] cpu $c%.3f s  shuffle $sh%.3f s  write $wr%.3f s  code-cache $ccU%.0f/$ccM%.0f MB")
+      val p = Sentinel.point(spark)
+      sentinels(tag) = p
+      System.err.println(s"[verify-sentinel $tag] ${p.json}")
     }
     sentinelPoint("early")
     val plan = SparkEntry.queries
@@ -41,23 +36,11 @@ object Verify {
       Harness.teardown(spark)
     }
     sentinelPoint("late")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     try Files.writeString(Paths.get("verify_sentinel.json"),
-      sentinels.map { case (k, v) => s""""$k":$v""" }
+      sentinels.map { case (k, p) => s""""$k":${p.json}""" }
         .mkString("{", ",", "}"))
     catch { case e: Throwable =>
       System.err.println(s"[verify] writing verify_sentinel.json failed: $e")

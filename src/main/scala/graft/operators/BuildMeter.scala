@@ -9,8 +9,8 @@ package graft.operators
   * charges the whole cold time to that query is measuring the build,
   * not the query (r14: q_lr_calibration 11.7 s cold / 2.4 s warm was
   * ~80% model train). Every such build records its wall time here;
-  * graft.Bench snapshots the counter around each run and emits a
-  * per-query `build_cold`/`build_warm` map in bench_detail.json, so
+  * graft.Harness.runLane snapshots the counter around each run into the
+  * lane record's `build_s` (Bench's `build_cold`/`build_warm` maps), so
   * cold numbers can be read as query + build split instead of a blur.
   *
   * Reentrancy: nested timed sections (a derived build that reads

@@ -29,14 +29,20 @@ import org.apache.spark.sql.types.LongType
   * metadata column the per-language consumers (CCNet bucketing) need —
   * real indexes carry doc metadata for the same reason.
   *
-  * Keyed by (dir, input fingerprint) through [[DerivedCache.tableFor]]:
+  * Keyed by (dir, input fingerprint) through [[DerivedCache.tableAt]]:
   * a rewrite of documents.parquet within the JVM triggers a rebuild. */
 object DocTerms {
 
   /** The materialized (doc_id, lang, term, tf, dl) table for `dir`. */
   def table(s: SparkSession, dir: String): DataFrame =
-    DerivedCache.tableFor(s, s"$dir#docterms",
-      Seq(s"$dir/documents.parquet")) {
+    tableAt(s, dir, DerivedCache.fingerprint(Seq(s"$dir/documents.parquet")))
+
+  /** [[table]] keyed by a caller-supplied fingerprint of
+    * documents.parquet — for derivations built FROM this table
+    * (HybridSearch.rankedTable), so both stages key to one snapshot. */
+  def tableAt(s: SparkSession, dir: String, fp: String): DataFrame =
+    DerivedCache.tableAt(s, s"$dir#docterms",
+      Seq(s"$dir/documents.parquet"), fp) {
       of(Tables.documents(s, dir))
     }
 

@@ -97,12 +97,18 @@ object HybridSearch {
     * lesson). Columns: (term, doc_id, w DECIMAL(18,6), rn) — decimals
     * round-trip parquet exactly, and rn's (w desc, doc_id) order is
     * deterministic, so the table is byte-stable across rebuilds;
-    * HybridSearchSpec pins it row-identical to the inline derivation. */
-  def rankedTable(s: SparkSession, dir: String): DataFrame =
-    DerivedCache.tableFor(s, s"$dir#champions",
-      Seq(s"$dir/documents.parquet")) {
-      championsRanked(DocTerms.table(s, dir), k1 = 1.2, b = 0.75)
+    * HybridSearchSpec pins it row-identical to the inline derivation.
+    * documents.parquet is fingerprinted once and the same fingerprint
+    * keys this table and the DocTerms table it reads (the CoPurchase
+    * chain discipline), so a concurrent rewrite cannot key the champions
+    * to a newer snapshot than the doc-terms they were built from. */
+  def rankedTable(s: SparkSession, dir: String): DataFrame = {
+    val input = s"$dir/documents.parquet"
+    val fp = DerivedCache.fingerprint(Seq(input))
+    DerivedCache.tableAt(s, s"$dir#champions", Seq(input), fp) {
+      championsRanked(DocTerms.tableAt(s, dir, fp), k1 = 1.2, b = 0.75)
     }
+  }
 
   /** [[rankedTable]] pinned for an execution that consumes it through
     * several sub-lanes (q_bm25_pruned's seven) — see [[pinScan]]. */
