@@ -1341,31 +1341,28 @@ object SparkEntry {
 
   /** The q_minhash_recall plan body, parameterized by the deterministic
     * doc-sample budget so the once-per-JVM pre-warm below can run the
-    * IDENTICAL plan shape on a ~1/11 slice. Returns (result, pinned
-    * frames): the two persisted intermediates are handed back so the
-    * pre-warm can release its own slice's blocks (the real lane leaves
-    * release to the harness teardown, as before). All plan logic is
-    * unchanged from r17 — only the 250000 literal became a parameter
-    * (it reaches codegen solely through the 1-row pct aggregate, so
-    * every downstream generated class is byte-identical between the
-    * pre-warm slice and the real run). */
+    * IDENTICAL plan shape on a ~1/11 slice. Its two persisted
+    * intermediates register with OpCaches, so the caller's release frees
+    * them. All plan logic is unchanged from r17 — only the 250000
+    * literal became a parameter (it reaches codegen solely through the
+    * 1-row pct aggregate, so every downstream generated class is
+    * byte-identical between the pre-warm slice and the real run). */
   private def minhashRecallPlan(s: SparkSession, dir: String,
-      sampleBudget: Long): (DataFrame, Seq[DataFrame]) = {
+      sampleBudget: Long): DataFrame = {
     import s.implicits._
     val mrDocsAll = Tables.documents(s, dir)
     val mrPct = mrDocsAll.agg(
       expr(s"least(100, greatest(1, $sampleBudget div count(1)))").as("doc_pct"))
     // the distinct (doc, shingle) table feeds THREE subtrees (the
     // signature aggregation, the shingle-df ordering, the truth sets)
-    // — persist it so the explode+distinct shuffle runs once (the
-    // bench/seq harnesses unpersist all persistent RDDs per query)
-    val sh = mrDocsAll.crossJoin(broadcast(mrPct))
+    // — persist it so the explode+distinct shuffle runs once
+    val sh = operators.OpCaches.track(mrDocsAll.crossJoin(broadcast(mrPct))
       .filter(operators.Sampling.hashBucket($"doc_id") < $"doc_pct")
       .select($"doc_id", TextFns.tokens($"text").as("toks"))
       .select($"doc_id",
         explode(operators.Dedup.wordShinglesOf($"toks", 2)).as("sh0"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // 16 md5s per (doc, shingle) row make the signature aggregation
     // scan-heavy — it feeds exactly one consumer (the exploded band
     // table below), so it is NOT persisted; the band table is
@@ -1409,11 +1406,11 @@ object SparkEntry {
         struct(lit(bands).as("lane"), lit(j).as("band"), key.as("bk"))
       }
     }
-    val allBands = mh
+    val allBands = operators.OpCaches.track(mh
       .select($"doc_id", explode(array(bandRows: _*)).as("b"))
       .select($"doc_id", $"b.lane".as("lane"), $"b.band".as("band"),
         $"b.bk".as("bk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val candFlags = allBands.as("x")
       .join(allBands.as("y"),
         col("x.lane") === col("y.lane") && col("x.band") === col("y.band") &&
@@ -1427,7 +1424,7 @@ object SparkEntry {
     val flagged = truth.withColumn("t", lit(1L))
       .join(candFlags, Seq("id_a", "id_b"), "full_outer")
     def both(c: String) = sum(when($"t" === 1L && col(c) === 1L, 1L).otherwise(0L))
-    val res = flagged.agg(
+    flagged.agg(
         sum($"t").as("nt"), sum($"c2").as("nc2"), sum($"c4").as("nc4"),
         sum($"c8").as("nc8"), both("c2").as("nd2"), both("c4").as("nd4"),
         both("c8").as("nd8"))
@@ -1444,7 +1441,6 @@ object SparkEntry {
           " ELSE (1000000 * n_detected) div n_candidates END")
           .as("precision_ppm"))
       .orderBy($"bands")
-    (res, Seq(sh, allBands))
   }
 
   /** Once-per-JVM JIT pre-warm of the minhash audit's generated classes
@@ -1459,14 +1455,18 @@ object SparkEntry {
     * (~230 docs at sf0.1 — the banded self-joins are O(slice²), trivial)
     * compiles and HotSpot-promotes every class before the real audit
     * touches the full ~2,500-doc sample. Charged to BuildMeter: it is
-    * once-per-JVM warm-up work, exactly like a DerivedCache build. */
+    * once-per-JVM warm-up work, exactly like a DerivedCache build. It
+    * builds under its own OpCaches scope and frees every cache the slice
+    * persisted before the real run starts. */
   private val minhashRecallPrewarmed =
     new java.util.concurrent.atomic.AtomicBoolean(false)
   private def prewarmMinhashRecall(s: SparkSession, dir: String): Unit =
     if (!minhashRecallPrewarmed.getAndSet(true)) operators.BuildMeter.time {
-      val (df, pinned) = minhashRecallPlan(s, dir, minhashAuditSampleBudget / 11)
-      df.write.format("noop").mode("overwrite").save()
-      pinned.foreach(_.unpersist(blocking = false))
+      val (_, slice) = operators.OpCaches.scoped {
+        minhashRecallPlan(s, dir, minhashAuditSampleBudget / 11)
+          .write.format("noop").mode("overwrite").save()
+      }
+      slice.release()
     }
 
   /** q_interleave's oracle: the same lcm/weight strides as VALUES
@@ -2737,7 +2737,7 @@ object SparkEntry {
       // semantics), behind the once-per-JVM JIT pre-warm — see
       // prewarmMinhashRecall's note for the mechanism and numbers.
       prewarmMinhashRecall(s, dir)
-      minhashRecallPlan(s, dir, minhashAuditSampleBudget)._1
+      minhashRecallPlan(s, dir, minhashAuditSampleBudget)
     }),
 
     "q_dedup_simhash" -> ((s, dir) => {

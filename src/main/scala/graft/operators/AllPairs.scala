@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * Similarity Joins for Near Duplicate Detection", WWW 2008 — public
   * algorithms).
   *
-  * Complements the MinHash-LSH path (Dedup.minhashNearDupPairs): LSH is
+  * Complements the MinHash-LSH path (Dedup.minhashLshPairs): LSH is
   * probabilistic (tunable false-negative rate), this join is EXACT —
   * zero false negatives — at the cost of a candidate set that grows with
   * token-frequency skew. Production pipelines use LSH for web-scale
@@ -42,18 +42,16 @@ import org.apache.spark.storage.StorageLevel
   * persisted once and feeds prefix emission + both verify sides (three
   * consumers; without the cache the tokenize+sort pipeline would run 3×).
   *
-  * Exact-dup clique collapse (the Dedup.scala move, same gate): when
-  * distinct token SETS are < collapseDupFraction of the docs, the whole
-  * pipeline sees one representative per distinct set (array-equality
-  * groupBy — exact, no hash domain) and member pairs are re-expanded by
-  * keyed joins afterwards. Jaccard is a function of the two sets, so a
-  * rep pair's verified value is every cross pair's value, and
-  * intra-clique pairs are exactly 1.0. Output-identical (AllPairsSpec
-  * pins it); detection work becomes a function of the DISTINCT corpus —
-  * what survives a duplicate-heavy 100 TB crawl — while only the
-  * (inherently quadratic-in-duplication) output expansion scales with
-  * the total pair count. When even the expanded pair LIST is the
-  * bottleneck, [[compactJoin]] returns the linear-size form.
+  * Exact-dup clique collapse ([[Cliques]], the gate and expansion the
+  * MinHash/SimHash pipelines share): when duplicates dominate, the whole
+  * pipeline sees one representative per distinct token set
+  * (array-equality groupBy — exact, no hash domain); intra-clique pairs
+  * are exactly 1.0 (token-free docs never enter the table). Detection
+  * work becomes a function of the DISTINCT corpus — what survives a
+  * duplicate-heavy 100 TB crawl — while only the (inherently
+  * quadratic-in-duplication) output expansion scales with the total
+  * pair count. When even the expanded pair LIST is the bottleneck,
+  * [[compactJoin]] returns the linear-size form.
   */
 object AllPairs {
 
@@ -156,49 +154,11 @@ object AllPairs {
   def jaccardJoinFromSets(sets0: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val allSets = OpCaches.track(sets0
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val nRaw = allSets.count()
-    val distinctSets = OpCaches.track(
-      allSets.groupBy(col("tokens"), col("sz"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("tokens"), col("sz"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val collapsed =
-      distinctSets.count() < (nRaw * Dedup.collapseDupFraction).toLong
-    val sets = if (collapsed) distinctSets
-      else { distinctSets.unpersist(); OpCaches.untrack(distinctSets); allSets }
-    val pairs = verifiedPairs(sets, threshold)
-    if (!collapsed) pairs
-    else {
-      // member → representative map (array-equality join, one shuffle);
-      // allSets' last consumer is this join — free it once materialized
-      val memb = OpCaches.track(
-        allSets.join(distinctSets
-            .select(col("tokens"), col("sz"), col("doc_id").as("rep")),
-          Seq("tokens", "sz"))
-        .select(col("rep"), col("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-      memb.count()
-      allSets.unpersist(blocking = false)
-      OpCaches.untrack(allSets)
-      // cross pairs inherit the rep pair's Jaccard (same sets); member
-      // ids of different cliques can order either way, so re-orient
-      val inter2 = pairs
-        .join(memb.select(col("rep").as("id_a"), col("doc_id").as("ma")),
-          "id_a")
-        .join(memb.select(col("rep").as("id_b"), col("doc_id").as("mb")),
-          "id_b")
-        .select(least(col("ma"), col("mb")).as("id_a"),
-          greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-      // intra-clique pairs: identical non-empty sets, exactly 1.0
-      val intra = memb.as("x").join(memb.as("y"),
-          col("x.rep") === col("y.rep") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-          lit(1.0).as("jaccard"))
-      inter2.unionAll(intra)
-    }
+    val cliques = Cliques.collapse(sets0, Seq("tokens", "sz"), "doc_id")
+    val pairs = verifiedPairs(cliques.docs, threshold)
+    if (!cliques.collapsed) pairs
+    else Cliques.expand(pairs, cliques.memb, "jaccard",
+      cliques.reps.select(col("doc_id").as("rep"), lit(1.0).as("jaccard")))
   }
 
   /** The LINEAR-SIZE form of the exact similarity join: one row per
@@ -266,29 +226,14 @@ object AllPairs {
     *
     * This is the serving shape for the full list at scale (r15): the
     * expensive prefix-filter detection runs ONCE into the compact
-    * parquet, and expansion is three cheap keyed joins over plain
-    * scans — no persisted blocks, no lineage to evict, warm cost =
+    * parquet, and expansion is [[Cliques.expand]]'s keyed joins over
+    * plain scans — no persisted blocks, no lineage to evict, warm cost =
     * read cost. The n_pairs column is consumed here as multiplicity
-    * and dropped. */
-  def expandCompact(compact: DataFrame, members: DataFrame): DataFrame = {
-    val memb = members.select(col("rep"), col("doc_id"))
-    val inter = compact.filter(col("id_a") =!= col("id_b"))
-      .join(memb.select(col("rep").as("id_a"), col("doc_id").as("ma")),
-        "id_a")
-      .join(memb.select(col("rep").as("id_b"), col("doc_id").as("mb")),
-        "id_b")
-      .select(least(col("ma"), col("mb")).as("id_a"),
-        greatest(col("ma"), col("mb")).as("id_b"), col("jaccard"))
-    // intra pairs: members of each duplicated set, C(m,2) per set; the
-    // semi-join keeps only cliques the compact form recorded (m >= 2)
-    val im = members.join(
+    * and dropped; the intra rows (id_a = id_b, only cliques with m >= 2)
+    * name the reps that pair internally. */
+  def expandCompact(compact: DataFrame, members: DataFrame): DataFrame =
+    Cliques.expand(compact.filter(col("id_a") =!= col("id_b")),
+      members.select(col("rep"), col("doc_id")), "jaccard",
       compact.filter(col("id_a") === col("id_b"))
-        .select(col("id_a").as("rep")), "rep")
-    val intra = im.as("x").join(im.as("y"),
-        col("x.rep") === col("y.rep") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-        lit(1.0).as("jaccard"))
-    inter.unionAll(intra)
-  }
+        .select(col("id_a").as("rep"), col("jaccard")))
 }

@@ -58,16 +58,6 @@ object Dedup {
   def wordShingles(text: Column, k: Int): Column =
     wordShinglesOf(TextFns.tokens(text), k)
 
-  /** Distinct character n-grams (string arrays — for small inputs and
-    * debugging; the hot path is [[charShingleHashes]]). */
-  def charShingles(text: Column, n: Int): Column =
-    // same < n guard as wordShinglesOf: sequence(1, 0) descends through 0
-    // and would emit a spurious "" shingle for texts shorter than n
-    when(length(text) < n, typedlit(Seq.empty[String]))
-      .otherwise(array_distinct(
-        transform(sequence(lit(1), length(text) - (n - 1)),
-          i => substring(text, lit(i), lit(n)).asInstanceOf[Column])))
-
   /** Distinct char n-gram hashes, sorted — native kernel, one UTF-8 walk
     * per doc, no per-gram string allocation. Jaccard over these equals
     * Jaccard over the gram strings (64-bit hashes; collision odds are
@@ -117,53 +107,29 @@ object Dedup {
         slice(sig, (pmod(b + 1, lit(bands)) * rows) + 1, lit(rows)).as("sub")))
 
   /** Intermediate state of the LSH pipeline up to VERIFIED pairs, before
-    * any member expansion: `verified` is rep pairs when `collapsed`
-    * (member map in `memb`), raw doc pairs otherwise (`memb` null). */
-  private final case class LshCore(collapsed: Boolean,
-                                   memb: DataFrame, verified: DataFrame)
+    * any member expansion: `verified` is rep pairs when collapsed (member
+    * map in `memb`), raw doc pairs otherwise (`memb` and `intra` null).
+    * `intra` is the (rep, jaccard) table [[Cliques.expand]] takes: reps
+    * of non-empty shingle sets (two empty sets are jaccard 0.0 by
+    * convention, which the verify drops, so the expansion must too). */
+  private final case class LshCore(memb: DataFrame, verified: DataFrame,
+                                   intra: DataFrame)
 
   /** Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
     *
     * Emits (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
     * Pipeline: signature (row-local) → band explode (rows × bands) →
     * self-join on (band, band_hash) → distinct candidate pairs → exact
-    * verify on the candidates only.
-    *
-    * Caching contract: intermediates the returned plan references stay
-    * persisted (registered in [[OpCaches]]); materialize the result, then
-    * `OpCaches.releaseAll()` — see OpCaches for why they can't be freed
-    * in here. */
+    * verify on the candidates only. Exact-dup clique collapse and the
+    * caching contract: see [[Cliques]]. */
   def minhashLshPairs(df: DataFrame, text: Column, id: Column,
                       shingleK: Int = 3, numHashes: Int = 64,
                       bands: Int = 16, threshold: Double = 0.5,
                       splitThreshold: Int = 4096): DataFrame = {
     val core = minhashLshCore(df, text, id, shingleK, numHashes, bands,
       threshold, splitThreshold)
-    if (!core.collapsed) core.verified
-    else {
-      // Re-expand representative pairs to member pairs. Inter-clique:
-      // every member of a's clique × every member of b's, at the reps'
-      // verified jaccard (a function of the two identical-per-clique
-      // sets). Intra-clique: identical NON-EMPTY sets are exactly
-      // jaccard 1.0 (two empty sets are 0.0 by convention — the verify
-      // would have dropped them, so the expansion must too; the core's
-      // memb map already excludes empty-set cliques from `intra_ok`).
-      val memb = core.memb
-      val inter = core.verified
-        .join(memb.select(col("rep").as("id_a"), col("doc_id").as("da")), Seq("id_a"))
-        .join(memb.select(col("rep").as("id_b"), col("doc_id").as("db")), Seq("id_b"))
-        .select(least(col("da"), col("db")).as("id_a"),
-          greatest(col("da"), col("db")).as("id_b"), col("jaccard"))
-      val intra = memb.filter(col("intra_ok"))
-        .select(col("rep"), col("doc_id").as("da"))
-        .join(memb.filter(col("intra_ok"))
-          .select(col("rep"), col("doc_id").as("db")), Seq("rep"))
-        .filter(col("da") < col("db"))
-        .select(col("da").as("id_a"), col("db").as("id_b"),
-          lit(1.0).as("jaccard"))
-        .filter(lit(1.0) >= threshold)
-      inter.unionByName(intra)
-    }
+    if (core.memb == null) core.verified
+    else Cliques.expand(core.verified, core.memb, "jaccard", core.intra)
   }
 
   /** Incremental corpus dedup — the production shape of near-dup removal:
@@ -232,16 +198,16 @@ object Dedup {
                          maxIter: Int = 5): DataFrame = {
     val core = minhashLshCore(df, text, id, shingleK, numHashes, bands,
       threshold, splitThreshold)
-    if (!core.collapsed)
+    val clusters =
       DedupClusters.clusters(core.verified, col("id_a"), col("id_b"), maxIter)
+    if (core.memb == null) clusters
     else {
       val repClusters =
-        DedupClusters.clusters(core.verified, col("id_a"), col("id_b"), maxIter)
-          .select(col("doc_id").as("rep"), col("cluster_id").as("cl"))
+        clusters.select(col("doc_id").as("rep"), col("cluster_id").as("cl"))
       // members participate when their clique has intra pairs (size >= 2
       // with non-empty sets) or their rep has an inter pair — mirroring
       // "docs that appear in at least one pair"
-      val sizes = core.memb.filter(col("intra_ok"))
+      val sizes = core.memb.join(core.intra.select(col("rep")), Seq("rep"))
         .groupBy(col("rep")).agg(count(lit(1)).as("gsize"))
       core.memb
         .join(sizes, Seq("rep"), "left")
@@ -258,7 +224,7 @@ object Dedup {
     // threshold = 0 is degenerate (EVERY pair qualifies — including
     // empty-shingle docs, where the collapsed and direct regimes would
     // disagree: the verify emits empty∩empty at jaccard 0.0 >= 0 while
-    // the collapse's intra_ok gate excludes empty-set cliques). Real
+    // the collapse's intra table excludes empty-set cliques). Real
     // dedup thresholds are well above 0; refuse the corner instead of
     // carrying a convention only one regime honors.
     require(threshold > 0.0,
@@ -267,56 +233,19 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel
     // Shingle SETS are carried as distinct 64-bit hashes (native kernel —
     // no shingle strings ever materialize); Jaccard over hash sets equals
-    // Jaccard over shingle sets. Persisted: referenced by the collapse
-    // groupBy AND the member-map join — without it the shingle kernel
-    // runs twice. Eager counts throughout: multiple consumers otherwise
-    // race to populate each cache (block-lock contention + duplicated
-    // compute).
-    // Cache lifecycle: every persist below registers with OpCaches; blocks
-    // the returned (lazy) plan still references are freed by the caller
-    // via OpCaches.releaseAll() once results materialize, blocks whose
-    // last consumer runs in here are freed in here.
-    val raw = OpCaches.track(df.select(id.as("doc_id"),
+    // Jaccard over shingle sets. The collapse persists them: the groupBy
+    // and the member-map join both read them.
+    val cliques = Cliques.collapse(df.select(id.as("doc_id"),
         graft.plans.Signatures.shingleHashes(
-          graft.functions.TextFns.tokens(text), shingleK).as("sh_hashes"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val nRaw = raw.count()
-    // Clique-collapse decision (same move as simhashPairsFromSigs, same
-    // reason): every member of an m-copy exact-dup clique carries the
-    // same shingle set, so when duplicate mass is SUBSTANTIAL the LSH
-    // pipeline — signature, band explode, bucket windows, candidate
-    // dedup, jaccard verify — need only ever see one representative
-    // (minimum doc id) per distinct set, with member pairs re-expanded
-    // afterwards by hash joins: jaccard is a function of the two SETS, so
-    // a rep pair's verified value is every cross pair's value, and
-    // intra-clique pairs are exactly 1.0 (identical non-empty sets).
-    // Identical output, clique-factor smaller shuffles. When duplicates
-    // are sparse (< ~20% of the corpus) the expansion joins cost more
-    // than the collapse saves, and the direct pipeline over all docs is
-    // equally correct (intra-clique pairs surface as ordinary candidates
-    // that verify at 1.0) — so it is used as-is.
-    val distinct = OpCaches.track(
-      raw.groupBy(col("sh_hashes")).agg(min(col("doc_id")).as("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val collapsed = distinct.count() < (nRaw * collapseDupFraction).toLong
-    val docs = if (collapsed) distinct
-      else { distinct.unpersist(); OpCaches.untrack(distinct); raw }
-    // member → representative map (array-equality hash join, one
-    // shuffle); `intra_ok` marks members of NON-EMPTY-set cliques — the
-    // only ones whose intra pairs exist (empty sets verify at 0.0)
-    val memb = if (!collapsed) null else {
-      val m = OpCaches.track(raw
-        .join(docs.select(col("sh_hashes"), col("doc_id").as("rep")), Seq("sh_hashes"))
-        .select(col("rep"), col("doc_id"),
-          (size(col("sh_hashes")) > 0).as("intra_ok"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-      m.count()
-      // raw's last consumer was the member-map join just materialized —
-      // from here everything reads `distinct` or `memb`; free it now
-      raw.unpersist(blocking = false)
-      OpCaches.untrack(raw)
-      m
-    }
+          graft.functions.TextFns.tokens(text), shingleK).as("sh_hashes")),
+      Seq("sh_hashes"), "doc_id")
+    val docs = cliques.docs
+    // built before the banding work, so the raw shingle table is freed
+    // before the candidate pipeline runs
+    val memb = if (cliques.collapsed) cliques.memb else null
+    val intra = if (!cliques.collapsed) null
+      else cliques.reps.filter(size(col("sh_hashes")) > 0 && lit(1.0) >= threshold)
+        .select(col("doc_id").as("rep"), lit(1.0).as("jaccard"))
     // Band rows carry (band, band_hash, doc_id) plus the next band's
     // `rows` raw signature elements for hot-bucket sub-blocking — never
     // the shingle arrays. The bands explode multiplies row count by
@@ -380,7 +309,6 @@ object Dedup {
     val cand = OpCaches.track(candidates.persist(StorageLevel.MEMORY_AND_DISK))
     val candCount = cand.count()
     val slim = candCount <= maxBroadcastCandidates
-    lastVerifyPlan = (candCount, slim)
     val a = docs.select(col("doc_id").as("id_a"), col("sh_hashes").as("sh_a"))
     val b = docs.select(col("doc_id").as("id_b"), col("sh_hashes").as("sh_b"))
     val withA = a.join(if (slim) broadcast(cand) else cand, Seq("id_a"))
@@ -388,7 +316,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(jaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-    LshCore(collapsed, memb, verified)
+    LshCore(memb, verified, intra)
   }
 
   /** Candidate-pair count above which the exact-verify fetch stops
@@ -406,20 +334,6 @@ object Dedup {
     val p = OpCaches.track(pairs.persist(StorageLevel.MEMORY_AND_DISK))
     (p, p.count())
   }
-
-  /** Telemetry: the last verify-fetch plan decision as (candidate count,
-    * broadcast?). Production pipelines log this per run (a sudden lane
-    * flip is the first symptom of a duplication regime change), and the
-    * scale study uses it to PROVE which join lane a measurement actually
-    * exercised instead of inferring it from the corpus shape. */
-  @volatile var lastVerifyPlan: (Long, Boolean) = (-1L, true)
-
-  /** Distinct-fingerprint fraction below which the LSH/banding pipelines
-    * collapse to one representative per clique (and re-expand member
-    * pairs by joins afterwards): the collapse's extra member-map and
-    * expansion joins only pay for themselves once duplicates are a
-    * sizable share of the corpus. */
-  val collapseDupFraction: Double = 0.8
 
   // ---- SimHash -------------------------------------------------------
 
@@ -495,69 +409,19 @@ object Dedup {
     * 64-bit similarity-preserving fingerprint (text SimHash, an image
     * aHash/dHash from [[ImageCodec]], an audio chromaprint) gets the same
     * pigeonhole 4×16-band candidate generation, hot-bucket sub-splits and
-    * exact hamming verify. Caching contract: materialize, then
-    * `OpCaches.releaseAll()` (see [[OpCaches]]). */
+    * exact hamming verify. Exact-dup clique collapse and the caching
+    * contract: see [[Cliques]]. */
   def simhashPairsFromSigs(withSig: DataFrame,
                            maxHamming: Int = 3, splitThreshold: Int = 256): DataFrame = {
     require(maxHamming <= 3, s"4x16 banding guarantees recall only for hamming <= 3, got $maxHamming")
-    import org.apache.spark.storage.StorageLevel
-    // Collapse to DISTINCT signatures before banding when duplicates
-    // dominate. Crawl-scale corpora are full of exact duplicates, and
-    // every member of an m-copy clique carries the same fingerprint —
-    // banding the raw rows shuffles (and window-counts, and pair-kernels,
-    // and groupBy-dedups) m× the rows the signature space actually holds,
-    // with the clique's C(m,2) pair output materializing INSIDE shuffled
-    // bucket rows. The collapsed path bands/buckets/verifies one
-    // representative (minimum doc id) per distinct signature, then
-    // re-expands member pairs with plain hash joins — identical output,
-    // clique-factor smaller shuffles, and the quadratic part streams out
-    // of a join instead of through a shuffle. (Measured at 100× bench
-    // scale with 100-copy cliques: 110 s direct → 18 s collapsed; see
-    // SCALE.md.)
-    val sigs = OpCaches.track(withSig.persist(StorageLevel.MEMORY_AND_DISK))
-    val nDocs = sigs.count()
-    val sigTab = OpCaches.track(
-      sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)) // feeds banding + member map
-    // Collapse only when duplicate mass is substantial (see
-    // collapseDupFraction): with sparse duplicates the banding pipeline
-    // over all docs is equally correct — identical signatures land in the
-    // same buckets and pair at hamming 0 — and cheaper than the
-    // member-map + expansion joins.
-    val collapsed = sigTab.count() < (nDocs * collapseDupFraction).toLong
-    if (!collapsed) {
-      sigTab.unpersist()
-      OpCaches.untrack(sigTab)
-      simhashBandPairs(sigs, maxHamming, splitThreshold)
-    } else {
-      // representative pairs at hamming 1..maxHamming (0 is impossible
-      // between distinct signatures) via the banding machinery
-      val repPairs = simhashBandPairs(sigTab, maxHamming, splitThreshold)
-      // member → representative map: one hash join on the signature value
-      val memb = OpCaches.track(sigs
-        .join(sigTab.select(col("sig"), col("doc_id").as("rep")), Seq("sig"))
-        .select(col("rep"), col("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)) // feeds 3 expansion joins
-      memb.count()
-      // sigs' last consumer was the member-map join just materialized —
-      // everything downstream reads sigTab or memb; free it now
-      sigs.unpersist(blocking = false)
-      OpCaches.untrack(sigs)
-      // inter-clique expansion: every member of a's clique pairs with
-      // every member of b's clique at the reps' hamming — pure join output
-      val inter = repPairs
-        .join(memb.select(col("rep").as("id_a"), col("doc_id").as("da")), Seq("id_a"))
-        .join(memb.select(col("rep").as("id_b"), col("doc_id").as("db")), Seq("id_b"))
-        .select(least(col("da"), col("db")).as("id_a"),
-          greatest(col("da"), col("db")).as("id_b"), col("hamming"))
-      // intra-clique expansion: identical signatures → hamming 0 pairs;
-      // the self-join on the rep key streams each clique's C(m,2) rows
-      val intra = memb.select(col("rep"), col("doc_id").as("da"))
-        .join(memb.select(col("rep"), col("doc_id").as("db")), Seq("rep"))
-        .filter(col("da") < col("db"))
-        .select(col("da").as("id_a"), col("db").as("id_b"),
-          lit(0L).as("hamming"))
-      inter.unionByName(intra)
+    val cliques = Cliques.collapse(withSig, Seq("sig"), "doc_id")
+    if (!cliques.collapsed) simhashBandPairs(cliques.rows, maxHamming, splitThreshold)
+    else {
+      // rep pairs sit at hamming 1..maxHamming (0 is impossible between
+      // distinct signatures); identical signatures are hamming 0
+      val repPairs = simhashBandPairs(cliques.reps, maxHamming, splitThreshold)
+      Cliques.expand(repPairs, cliques.memb, "hamming",
+        cliques.reps.select(col("doc_id").as("rep"), lit(0L).as("hamming")))
     }
   }
 

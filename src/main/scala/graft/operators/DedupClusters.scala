@@ -195,11 +195,4 @@ object DedupClusters {
     nodes.unpersist()
     ClusteringResult(labels, iterations = iter, converged = converged)
   }
-
-  /** One row per cluster: representative, member count, member list
-    * (member list capped — at corpus scale use the exploded form). */
-  def clusterSummary(clustered: DataFrame): DataFrame =
-    clustered.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n_members"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
 }

@@ -89,14 +89,14 @@ object OpCaches {
   }
 
   /** Register a persisted intermediate for deferred release. */
-  private[operators] def track[T <: Dataset[_]](ds: T): T = {
+  private[graft] def track[T <: Dataset[_]](ds: T): T = {
     active.add(ds)
     ds
   }
 
   /** Drop ONE dataset from the registry after an in-operator unpersist —
     * keeps counts an exact mirror of live pipeline caches. */
-  private[operators] def untrack(ds: Dataset[_]): Unit = active.drop(ds)
+  private[graft] def untrack(ds: Dataset[_]): Unit = active.drop(ds)
 
   /** Unpersist every cache in the SHARED registry and clear it (scoped
     * handles are their owners' responsibility). Call once the returned

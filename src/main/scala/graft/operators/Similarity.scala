@@ -32,8 +32,8 @@ object Similarity {
     *
     * Exact-duplicate cliques are the scale hazard: m copies of one
     * embedding share a cell and alone contribute C(m,2) naive pairs. When
-    * duplicates dominate (same [[Dedup.collapseDupFraction]] heuristic as
-    * the LSH pipelines), the pair work runs on one REPRESENTATIVE per
+    * duplicates dominate ([[Cliques.collapse]], the same gate as the LSH
+    * pipelines), the pair work runs on one REPRESENTATIVE per
     * distinct embedding and member results are derived arithmetically —
     * output-identical to the naive path (SimilaritySpec pins it), because
     * with rep_id = min(member id):
@@ -45,17 +45,11 @@ object Similarity {
     *    < b) — member ids never beat their clique's rep_id. */
   def semanticDedup(vectors: DataFrame, model: IvfAnn.Model,
                     threshold: Double): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val v = OpCaches.track(vectors.select(col("vec_id"), col("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val nAll = v.count()
-    val reps = OpCaches.track(v.groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("rep_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val collapsed = reps.count() < (nAll * Dedup.collapseDupFraction).toLong
+    val cliques = Cliques.collapse(vectors.select(col("vec_id"), col("embedding")),
+      Seq("embedding"), "vec_id")
+    val v = cliques.rows
 
-    if (!collapsed) {
-      reps.unpersist(); OpCaches.untrack(reps)
+    if (!cliques.collapsed) {
       val a = v.select(col("vec_id"), col("embedding"),
         IvfAnn.assignCell(col("embedding"), model).as("cell"))
       val pairs = a.select(col("vec_id").as("id_a"),
@@ -72,7 +66,7 @@ object Similarity {
           coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
           col("dup_of").isNull.as("kept"))
     } else {
-      val r = reps.select(col("rep_id"), col("embedding"),
+      val r = cliques.reps.select(col("vec_id").as("rep_id"), col("embedding"),
         IvfAnn.assignCell(col("embedding"), model).as("cell"),
         (VectorFns.cosine6(col("embedding"), col("embedding")) >= threshold)
           .as("intra_ok"))
@@ -177,36 +171,17 @@ object Similarity {
     * q_dedup_embedding oracle, which carries the same plane constants as
     * literals), not a best-effort approximation: output is exactly
     * checkable, and at 10^9 vectors the plan is the one you'd want.
-    * Caching contract: materialize, then `OpCaches.releaseAll()` (see
-    * [[OpCaches]]). */
+    * Exact-dup clique collapse (intra pairs at the rep's computed
+    * self-cosine, so zero-norm embeddings drop exactly as the direct path
+    * drops them) and the caching contract: see [[Cliques]]. */
   def cosineNearDupPairs(vectors: DataFrame, threshold: Double,
                          sampleMod: Int = 1, nPlanes: Int = 6, dim: Int = 64,
                          probeRadius: Int = 1): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val planes = hyperplanes(nPlanes, dim)
-    // Clique collapse, as in Dedup's LSH pipelines: a corpus dominated by
-    // exact-duplicate embeddings (m copies → same sign bucket → C(m,2)
-    // bucket-local pairs, each carrying two full float arrays) need only
-    // bucket/verify one representative per DISTINCT embedding; member
-    // pairs re-expand by hash joins. Cosine is a function of the two
-    // embeddings, so a rep pair's verified value is every cross pair's
-    // value, and an intra-clique pair's value is the rep's self-cosine
-    // (1.0 after rounding for any non-degenerate vector — computed, not
-    // assumed, so zero-norm embeddings drop exactly as the direct path
-    // drops them). Sparse-duplicate corpora keep the direct plan.
-    val sampled = OpCaches.track(vectors.filter(col("vec_id") % sampleMod === 0)
-      .select(col("vec_id"), col("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val nAll = sampled.count()
-    val distinctEmb = OpCaches.track(sampled.groupBy(col("embedding"))
-      .agg(min(col("vec_id")).as("vec_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val collapsed =
-      distinctEmb.count() < (nAll * Dedup.collapseDupFraction).toLong
-    val base = if (collapsed) distinctEmb
-      else { distinctEmb.unpersist(); OpCaches.untrack(distinctEmb); sampled }
+    val cliques = Cliques.collapse(vectors.filter(col("vec_id") % sampleMod === 0)
+      .select(col("vec_id"), col("embedding")), Seq("embedding"), "vec_id")
 
-    val v = base.select(col("vec_id"), col("embedding"),
+    val v = cliques.docs.select(col("vec_id"), col("embedding"),
       bucketOf(col("embedding"), planes).as("bucket"))
     val probes: Seq[Column] = col("bucket") +:
       (if (probeRadius >= 1)
@@ -222,32 +197,10 @@ object Similarity {
         VectorFns.cosine6(col("emb_a"), col("emb_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
 
-    if (!collapsed) verified
-    else {
-      val memb = OpCaches.track(sampled
-        .join(distinctEmb.select(col("embedding"), col("vec_id").as("rep")),
-          Seq("embedding"))
-        .select(col("rep"), col("vec_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-      memb.count()
-      // sampled's last consumer was the member-map join just materialized
-      sampled.unpersist(blocking = false)
-      OpCaches.untrack(sampled)
-      val inter = verified
-        .join(memb.select(col("rep").as("id_a"), col("vec_id").as("va")), Seq("id_a"))
-        .join(memb.select(col("rep").as("id_b"), col("vec_id").as("vb")), Seq("id_b"))
-        .select(least(col("va"), col("vb")).as("id_a"),
-          greatest(col("va"), col("vb")).as("id_b"), col("cosine"))
-      val selfCos = distinctEmb
-        .select(col("vec_id").as("rep"),
+    if (!cliques.collapsed) verified
+    else Cliques.expand(verified, cliques.memb, "cosine",
+      cliques.reps.select(col("vec_id").as("rep"),
           VectorFns.cosine6(col("embedding"), col("embedding")).as("cosine"))
-        .filter(col("cosine") >= threshold)
-      val intra = selfCos
-        .join(memb.select(col("rep"), col("vec_id").as("va")), Seq("rep"))
-        .join(memb.select(col("rep"), col("vec_id").as("vb")), Seq("rep"))
-        .filter(col("va") < col("vb"))
-        .select(col("va").as("id_a"), col("vb").as("id_b"), col("cosine"))
-      inter.unionByName(intra)
-    }
+        .filter(col("cosine") >= threshold))
   }
 }

@@ -26,6 +26,10 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
   private def asSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
+  /** Row → count: a duplicated expansion row fails, unlike [[asSet]]. */
+  private def asBag(df: org.apache.spark.sql.DataFrame) =
+    bag(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+
   test("prefix-filtered join equals brute force (recall AND precision)") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
@@ -63,10 +67,10 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     val docs = (for ((t, g) <- base.zipWithIndex; k <- 0 until 12)
       yield (g * 100L + k, t)).toDF("doc_id", "text")
     for (t <- Seq(0.6, 0.72)) {
-      val got = asSet(AllPairs.jaccardJoin(docs, $"doc_id", $"text", t))
-      val want = asSet(brute(docs, t))
-      assert(got == want,
-        s"t=$t: missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
+      val got = asBag(AllPairs.jaccardJoin(docs, $"doc_id", $"text", t))
+      val want = asBag(brute(docs, t))
+      assert(got == want, s"t=$t: missing=${(want.toSet -- got.toSet).take(3)} " +
+        s"extra=${(got.toSet -- want.toSet).take(3)}")
       graft.operators.OpCaches.releaseAll()
     }
   }
@@ -127,13 +131,14 @@ class AllPairsSpec extends AnyFunSuite with SparkSpec {
     for ((docs, label) <- Seq((dupHeavy, "dup-heavy"), (dupFree, "dup-free"));
          t <- Seq(0.6, 1.0)) {
       val sets = AllPairs.buildTokenSets(docs, $"doc_id", $"text")
-      val full = asSet(AllPairs.jaccardJoinFromSets(sets, t))
+      val full = asBag(AllPairs.jaccardJoinFromSets(sets, t))
       graft.operators.OpCaches.releaseAll()
-      val expanded = asSet(AllPairs.expandCompact(
+      val expanded = asBag(AllPairs.expandCompact(
         AllPairs.compactJoinFromSets(sets, t), AllPairs.memberMap(sets)))
       graft.operators.OpCaches.releaseAll()
       assert(expanded == full, s"$label t=$t: " +
-        s"missing=${(full -- expanded).take(3)} extra=${(expanded -- full).take(3)}")
+        s"missing=${(full.toSet -- expanded.toSet).take(3)} " +
+        s"extra=${(expanded.toSet -- full.toSet).take(3)}")
     }
   }
 

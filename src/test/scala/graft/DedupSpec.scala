@@ -135,39 +135,40 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     } yield ((ti * 100 + c).toLong, t)
     val corpus = (rows :+ ((9999L, "!!! ??? ..."))).toDF("doc_id", "text")
 
-    // ground truth by brute force over all pairs
+    // ground truth by brute force over all pairs; both sides compare as
+    // multisets (row → count) so a duplicated expansion row fails
     val sh = corpus.select($"doc_id", Dedup.wordShingles($"text", 2).as("s"))
-    val bf = sh.select($"doc_id".as("id_a"), $"s".as("sh_a"))
+    val bf = bag(sh.select($"doc_id".as("id_a"), $"s".as("sh_a"))
       .join(sh.select($"doc_id".as("id_b"), $"s".as("sh_b")), $"id_a" < $"id_b")
       .filter(size($"sh_a") > 0 && size($"sh_b") > 0)
-      .filter(Dedup.jaccard($"sh_a", $"sh_b") >= 0.5)
-      .select($"id_a", $"id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .select($"id_a", $"id_b", round(Dedup.jaccard($"sh_a", $"sh_b"), 6).as("j"))
+      .filter($"j" >= 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
     // 5 cliques of 6 → 5·C(6,2)=75 intra pairs, plus 36 cross pairs of
     // the near-dup clique pair if its jaccard clears 0.5
     assert(bf.size >= 75, s"expected at least the 75 intra-clique pairs, got ${bf.size}")
 
-    val mh = Dedup.minhashLshPairs(corpus, $"text", $"doc_id",
+    val mh = bag(Dedup.minhashLshPairs(corpus, $"text", $"doc_id",
         shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-      .select($"id_a", $"id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(mh == bf,
-      s"collapsed minhash != brute force (missed ${(bf -- mh).size}, extra ${(mh -- bf).size})")
+      .select($"id_a", $"id_b", $"jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
+    assert(mh == bf, s"collapsed minhash != brute force " +
+      s"(missed ${(bf.toSet -- mh.toSet).size}, extra ${(mh.toSet -- bf.toSet).size})")
 
     // simhash: the collapsed path must equal the direct banding over all
     // docs (same sigs, same pigeonhole guarantee). Derive the expected
     // set by brute-forcing hamming over the signature table.
     val sigs = Dedup.simhashSignatures(corpus, $"text", $"doc_id")
-    val sbf = sigs.select($"doc_id".as("id_a"), $"sig".as("sig_a"))
+    val sbf = bag(sigs.select($"doc_id".as("id_a"), $"sig".as("sig_a"))
       .join(sigs.select($"doc_id".as("id_b"), $"sig".as("sig_b")), $"id_a" < $"id_b")
       .withColumn("h", bit_count($"sig_a".bitwiseXOR($"sig_b")).cast("long"))
       .filter($"h" <= 3)
       .select($"id_a", $"id_b", $"h")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val sp = Dedup.simhashPairs(corpus, $"text", $"doc_id", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sp == sbf,
-      s"collapsed simhash != brute force (missed ${(sbf -- sp).size}, extra ${(sp -- sbf).size})")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    val sp = bag(Dedup.simhashPairs(corpus, $"text", $"doc_id", maxHamming = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
+    assert(sp == sbf, s"collapsed simhash != brute force " +
+      s"(missed ${(sbf.toSet -- sp.toSet).size}, extra ${(sp.toSet -- sbf.toSet).size})")
   }
 
   test("exact dedup keeps one representative per distinct content") {

@@ -1,0 +1,34 @@
+package graft
+
+import graft.operators.OpCaches
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every cache a near-dup or retrieval lane persists is registered with
+  * OpCaches: after the lane runs, `OpCaches.releaseAll()` ALONE leaves
+  * the registry and the block manager empty. No `clearCache` and no
+  * `getPersistentRDDs` sweep afterwards — those free whatever anyone
+  * persisted and would hide a persist that bypasses the registry. */
+class LaneLeakSpec extends AnyFunSuite with SparkSpec {
+
+  /** The lanes that reach the clique collapse, plus the retrieval trio. */
+  private val lanes = Seq(
+    "q_dedup_minhash", "q_split_leakage", "q_dedup_clusters",
+    "q_dedup_keep_best", "q_dedup_incremental", "q_containment",
+    "q_dedup_simhash", "q_image_dedup", "q_audio_dedup",
+    "q_dedup_embedding", "q_semantic_dedup", "q_allpairs",
+    "q_allpairs_compact", "q_minhash_recall",
+    "q_bm25_pruned", "q_wand", "q_bmw")
+
+  for (lane <- lanes) test(s"$lane: OpCaches.releaseAll frees every cache it persisted") {
+    // start from an empty block manager, whatever ran before
+    Harness.teardown(spark)
+    val run = Harness.runLane(spark, SparkEntry.queries(lane), sf)
+    assert(run.error.isEmpty, s"$lane failed: ${run.error}")
+    OpCaches.releaseAll()
+    assert(OpCaches.trackedCount == 0)
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(live.isEmpty,
+      s"$lane left ${live.size} persisted RDD(s) outside OpCaches: " +
+        live.values.map(_.toDebugString.linesIterator.next()).mkString("; "))
+  }
+}

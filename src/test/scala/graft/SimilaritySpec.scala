@@ -149,20 +149,23 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
-    val expected = (for {
+    // multisets (row → count) including the cosine: a duplicated
+    // expansion row or a wrong inherited value fails
+    val expected = bag(for {
       (ia, va) <- members; (ib, vb) <- members
       if ia < ib
       if java.lang.Long.bitCount(bucket(va) ^ bucket(vb)) <= 1
-      if cos6(va, vb) >= 0.3
-    } yield (ia, ib)).toSet
-    val got = Similarity.cosineNearDupPairs(df,
+      c = cos6(va, vb)
+      if c >= 0.3
+    } yield (ia, ib, c))
+    val got = bag(Similarity.cosineNearDupPairs(df,
         threshold = 0.3, sampleMod = 1, nPlanes = 6, dim = 64, probeRadius = 1)
-      .select($"id_a", $"id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .select($"id_a", $"id_b", $"cosine")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))))
     // intra-clique pairs must be present (identical embeddings)
-    assert(expected.exists { case (x, y) => x / 1000 == y / 1000 })
-    assert(got == expected,
-      s"collapsed != reference (missed ${(expected -- got).size}, extra ${(got -- expected).size})")
+    assert(expected.keys.exists { case (x, y, _) => x / 1000 == y / 1000 })
+    assert(got == expected, s"collapsed != reference " +
+      s"(missed ${(expected.toSet -- got.toSet).size}, extra ${(got.toSet -- expected.toSet).size})")
   }
 
   test("cosine expression matches a driver-side reference computation") {

@@ -9,4 +9,9 @@ trait SparkSpec {
     warehouseDir = Some("target/test-warehouse"))
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Row → count: equality over these fails on a duplicated or dropped
+    * row, which a Set comparison lets pass. */
+  def bag[T](rows: Iterable[T]): Map[T, Int] =
+    rows.groupBy(identity).view.mapValues(_.size).toMap
 }
