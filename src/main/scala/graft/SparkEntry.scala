@@ -2,7 +2,8 @@ package graft
 
 import graft.etl.{AuditLog, CatalogRegistry, Conform, SqlTransform}
 import graft.functions.{TextFns, VectorFns}
-import graft.operators.{Dedup, Multimodal, Sessionize, Similarity, SkewAgg}
+import graft.operators.{Dedup, MinhashTables, Multimodal, Sessionize,
+  Similarity, SkewAgg}
 import graft.plans.RollingMinHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -2642,11 +2643,10 @@ object SparkEntry {
 
     "q_dedup_minhash" -> ((s, dir) => {
       import s.implicits._
-      // corpus-tuned: planted near-dups sit at word-2-shingle J>=0.8 while
-      // background pairs sit at ~0.02 — threshold 0.5 cleanly separates
-      Dedup.minhashLshPairs(Tables.documents(s, dir), $"text", $"doc_id",
-          shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-        .orderBy($"id_a", $"id_b")
+      // the corpus's MinHash-LSH pairs, derived once per documents.parquet
+      // fingerprint and shared with the five other near-dup lanes
+      // (operators.MinhashTables; operating point and tuning there)
+      MinhashTables.pairs(s, dir).orderBy($"id_a", $"id_b")
     }),
 
     "q_split_leakage" -> ((s, dir) => {
@@ -2655,7 +2655,7 @@ object SparkEntry {
       // near-duplicate pair STRADDLING the train/eval boundary leaks
       // the answer into training (decontamination's blind spot when
       // splits are drawn after dedup, or dedup after splits). Pairs
-      // come from the same banded LSH lane as q_dedup_minhash; split
+      // come from the same derived LSH pair table as q_dedup_minhash; split
       // labels are pure md5-bucket FUNCTIONS of doc identity
       // (q_train_test_split's exact assignment), so the audit adds
       // zero shuffles and zero joins on top of the dedup it rides.
@@ -2663,8 +2663,7 @@ object SparkEntry {
         val b = operators.Sampling.hashBucket(c)
         when(b < 10, "test").when(b < 20, "val").otherwise(lit("train"))
       }
-      Dedup.minhashLshPairs(Tables.documents(s, dir), $"text", $"doc_id",
-          shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
+      MinhashTables.pairs(s, dir)
         .select($"id_a", $"id_b", $"jaccard",
           split($"id_a").as("split_a"), split($"id_b").as("split_b"))
         .filter($"split_a" =!= $"split_b")
@@ -2782,14 +2781,13 @@ object SparkEntry {
     "q_dedup_clusters" -> ((s, dir) => {
       import s.implicits._
       // end-to-end near-dup removal: LSH pairs → connected components →
-      // one canonical representative per cluster. minhashLshClusters runs
-      // the iterative CC on the REP graph when exact-dup cliques dominate
+      // one canonical representative per cluster, read from the derived
+      // cluster table (operators.MinhashTables), whose build runs the
+      // iterative CC on the REP graph when exact-dup cliques dominate
       // (identical output, thousands of edges instead of millions). The
       // oracle closes the same pair set transitively with a RECURSIVE
       // CTE — an independent derivation of the Hash-Min fixpoint.
-      Dedup.minhashLshClusters(Tables.documents(s, dir), $"text", $"doc_id",
-          shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-        .orderBy($"doc_id")
+      MinhashTables.clusters(s, dir).orderBy($"doc_id")
     }),
 
     "q_pagerank" -> ((s, dir) => {
@@ -3399,8 +3397,7 @@ object SparkEntry {
       // bounded TopKPerGroup); singletons keep themselves. Oracle:
       // recursive-CTE components + the same keep policy in SQL.
       val docs = Tables.documents(s, dir)
-      val clusters = Dedup.minhashLshClusters(docs, $"text", $"doc_id",
-        shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
+      val clusters = MinhashTables.clusters(s, dir)
       val labeled = docs
         .select($"doc_id", size(TextFns.tokens($"text")).cast(LongType).as("n_tokens"))
         .join(clusters, Seq("doc_id"), "left")
@@ -3419,10 +3416,12 @@ object SparkEntry {
       // doc_id % 5 == 0 play today's increment against the rest as the
       // existing corpus; an increment doc is kept iff it has no near-dup
       // partner in the existing corpus and none among earlier (smaller
-      // id) increment docs. One-pass greedy (documented), not CC.
-      Dedup.minhashIncrementalKeep(Tables.documents(s, dir), $"text",
-          $"doc_id", isExisting = $"doc_id" % 5 =!= 0,
-          shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
+      // id) increment docs. One-pass greedy (documented), not CC. The
+      // pairs are the whole corpus's, so the keep step reads the derived
+      // pair table.
+      Dedup.incrementalKeep(MinhashTables.pairs(s, dir),
+          Tables.documents(s, dir), $"doc_id",
+          isExisting = $"doc_id" % 5 =!= 0)
         .select($"doc_id", $"n_existing_dups", $"n_earlier_incoming_dups",
           $"kept".cast(LongType).as("kept"))
         .orderBy($"doc_id")
@@ -5244,13 +5243,12 @@ object SparkEntry {
       // q_dedup_substring's territory.
       val docs = Tables.documents(s, dir)
       val (pairs0, nPairs) = Dedup.countedPairs(
-        Dedup.minhashLshPairs(docs, $"text", $"doc_id",
-            shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-          .select($"id_a", $"id_b", $"jaccard"))
+        MinhashTables.pairs(s, dir).select($"id_a", $"id_b", $"jaccard"))
       val pairs = if (nPairs <= Dedup.maxBroadcastCandidates / 10)
         broadcast(pairs0) else pairs0
       val sets = docs.select($"doc_id",
-        graft.plans.Signatures.shingleHashes(TextFns.tokens($"text"), 2).as("sh"))
+        graft.plans.Signatures.shingleHashes(TextFns.tokens($"text"),
+          MinhashTables.point.shingleK).as("sh"))
       sets.select($"doc_id".as("id_b"), $"sh".as("sh_b"))
         .join(sets.select($"doc_id".as("id_a"), $"sh".as("sh_a"))
           .join(pairs, Seq("id_a")), Seq("id_b"))

@@ -111,9 +111,13 @@ object Dedup {
     * map in `memb`), raw doc pairs otherwise (`memb` and `intra` null).
     * `intra` is the (rep, jaccard) table [[Cliques.expand]] takes: reps
     * of non-empty shingle sets (two empty sets are jaccard 0.0 by
-    * convention, which the verify drops, so the expansion must too). */
-  private final case class LshCore(memb: DataFrame, verified: DataFrame,
-                                   intra: DataFrame)
+    * convention, which the verify drops, so the expansion must too).
+    * [[MinhashTables]] writes it as derived parquet and reads it back in
+    * this shape, so the inline operators and the derived tables share
+    * [[pairsOf]] and [[clustersOf]]. */
+  private[operators] final case class LshCore(memb: DataFrame,
+                                              verified: DataFrame,
+                                              intra: DataFrame)
 
   /** Near-duplicate pairs via MinHash LSH, verified with exact Jaccard.
     *
@@ -121,16 +125,21 @@ object Dedup {
     * Pipeline: signature (row-local) → band explode (rows × bands) →
     * self-join on (band, band_hash) → distinct candidate pairs → exact
     * verify on the candidates only. Exact-dup clique collapse and the
-    * caching contract: see [[Cliques]]. */
+    * caching contract: see [[Cliques]]. The near-dup lanes read this
+    * result at their one operating point from the derived
+    * [[MinhashTables.pairs]] table instead of re-running the pipeline. */
   def minhashLshPairs(df: DataFrame, text: Column, id: Column,
                       shingleK: Int = 3, numHashes: Int = 64,
                       bands: Int = 16, threshold: Double = 0.5,
-                      splitThreshold: Int = 4096): DataFrame = {
-    val core = minhashLshCore(df, text, id, shingleK, numHashes, bands,
-      threshold, splitThreshold)
+                      splitThreshold: Int = 4096): DataFrame =
+    pairsOf(minhashLshCore(df, text, id, shingleK, numHashes, bands,
+      threshold, splitThreshold))
+
+  /** The member pairs of a core: its verified pairs on the direct side,
+    * re-expanded through the member map on the collapsed side. */
+  private[operators] def pairsOf(core: LshCore): DataFrame =
     if (core.memb == null) core.verified
     else Cliques.expand(core.verified, core.memb, "jaccard", core.intra)
-  }
 
   /** Incremental corpus dedup — the production shape of near-dup removal:
     * an INCREMENT (today's crawl) arrives against an EXISTING corpus and
@@ -144,19 +153,24 @@ object Dedup {
     * no dropped-or-existing partner; use [[minhashLshClusters]] when
     * component-level semantics are wanted).
     *
-    * Built compositionally on [[minhashLshPairs]] over the tagged union —
-    * all banding/collapse/verify machinery applies. At production scale
-    * the existing side's signatures come from a stored index and banding
-    * restricts to buckets containing an increment member (the existing ×
-    * existing candidate work is skipped entirely); the compositional form
-    * here verifies a superset of pairs, with identical output. */
+    * Built compositionally: [[minhashLshPairs]] over the tagged union —
+    * all banding/collapse/verify machinery applies — then
+    * [[incrementalKeep]] over those pairs. The pairs are those of the
+    * whole corpus, so a corpus whose pair table is already derived
+    * ([[MinhashTables.pairs]], what q_dedup_incremental reads) skips the
+    * LSH pass entirely and pays only the keep step. */
   def minhashIncrementalKeep(df: DataFrame, text: Column, id: Column,
                              isExisting: Column,
                              shingleK: Int = 3, numHashes: Int = 64,
                              bands: Int = 16, threshold: Double = 0.5,
-                             splitThreshold: Int = 4096): DataFrame = {
-    val pairs = minhashLshPairs(df, text, id, shingleK, numHashes, bands,
-      threshold, splitThreshold)
+                             splitThreshold: Int = 4096): DataFrame =
+    incrementalKeep(minhashLshPairs(df, text, id, shingleK, numHashes,
+      bands, threshold, splitThreshold), df, id, isExisting)
+
+  /** The keep step of [[minhashIncrementalKeep]] over a near-dup pair
+    * table (id_a, id_b, ...) of the corpus `df`. */
+  def incrementalKeep(pairs: DataFrame, df: DataFrame, id: Column,
+                      isExisting: Column): DataFrame = {
     val tags = df.select(id.as("doc_id"), isExisting.as("is_existing"))
     // both directed views of each undirected pair: (partner -> doc)
     val dir = pairs.select(col("id_a").as("partner"), col("id_b").as("doc"))
@@ -190,14 +204,20 @@ object Dedup {
     * every rep is its clique's MINIMUM member id, so the rep graph's
     * Hash-Min labels ARE the expanded graph's labels. At 100× bench
     * scale this iterates over thousands of rep edges instead of tens of
-    * millions of expanded clique edges. */
+    * millions of expanded clique edges. The near-dup lanes read it from
+    * the derived [[MinhashTables.clusters]] table. */
   def minhashLshClusters(df: DataFrame, text: Column, id: Column,
                          shingleK: Int = 3, numHashes: Int = 64,
                          bands: Int = 16, threshold: Double = 0.5,
                          splitThreshold: Int = 4096,
-                         maxIter: Int = 5): DataFrame = {
-    val core = minhashLshCore(df, text, id, shingleK, numHashes, bands,
-      threshold, splitThreshold)
+                         maxIter: Int = 5): DataFrame =
+    clustersOf(minhashLshCore(df, text, id, shingleK, numHashes, bands,
+      threshold, splitThreshold), maxIter)
+
+  /** The clusters of a core: CC over its verified pairs, which are the
+    * rep pairs on the collapsed side (never the expanded clique edges),
+    * with member labels attached there. */
+  private[operators] def clustersOf(core: LshCore, maxIter: Int): DataFrame = {
     val clusters =
       DedupClusters.clusters(core.verified, col("id_a"), col("id_b"), maxIter)
     if (core.memb == null) clusters
@@ -217,10 +237,11 @@ object Dedup {
     }
   }
 
-  private def minhashLshCore(df: DataFrame, text: Column, id: Column,
-                             shingleK: Int, numHashes: Int,
-                             bands: Int, threshold: Double,
-                             splitThreshold: Int): LshCore = {
+  private[operators] def minhashLshCore(df: DataFrame, text: Column,
+                                        id: Column, shingleK: Int,
+                                        numHashes: Int, bands: Int,
+                                        threshold: Double,
+                                        splitThreshold: Int): LshCore = {
     // threshold = 0 is degenerate (EVERY pair qualifies — including
     // empty-shingle docs, where the collapsed and direct regimes would
     // disagree: the verify emits empty∩empty at jaccard 0.0 >= 0 while

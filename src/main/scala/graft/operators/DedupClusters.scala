@@ -68,12 +68,12 @@ object DedupClusters {
     // edge CHECKPOINT FILES (4 union arms + distinct) — plain persist
     // keeps that cheap lineage, so evicted blocks recompute from disk
     // files instead of failing; no second checkpoint write needed
-    val sym = edges
+    val sym = OpCaches.track(edges
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .unionAll(edges.select(col("src"), col("src").as("dst")))
       .unionAll(edges.select(col("dst").as("src"), col("dst").as("dst")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // label(v) starts as v, then repeatedly takes the min label among
     // neighbors (including itself, via the self-loop)
@@ -108,6 +108,7 @@ object DedupClusters {
       iter += 1
     }
     sym.unpersist()
+    OpCaches.untrack(sym)
     ClusteringResult(
       labels.select(col("id").as("doc_id"), col("label").as("cluster_id")),
       iterations = iter, converged = converged)
@@ -166,8 +167,9 @@ object DedupClusters {
     // — and the truncated state must live on reliable storage, not in
     // evictable block-manager cache (r15; see Ckpt scaladoc).
     val base = Ckpt.viaParquet(pairs.select(idA.as("u"), idB.as("v")))
-    val nodes = base.select(col("u").as("id")).unionAll(base.select(col("v").as("id")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = OpCaches.track(base.select(col("u").as("id"))
+      .unionAll(base.select(col("v").as("id")))
+      .distinct().persist(StorageLevel.MEMORY_AND_DISK))
     nodes.count()
     var edges = Ckpt.viaParquet(base
       .filter(col("u") =!= col("v")).distinct())
@@ -193,6 +195,7 @@ object DedupClusters {
       .join(edges.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
       .select(col("id").as("doc_id"), coalesce(col("label"), col("id")).as("cluster_id"))
     nodes.unpersist()
+    OpCaches.untrack(nodes)
     ClusteringResult(labels, iterations = iter, converged = converged)
   }
 }

@@ -404,6 +404,22 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"merge application not a native replace:\n$p")
   }
 
+  test("near-dup lanes scan the derived MinHash-LSH tables, not a banding subtree") {
+    // q_dedup_minhash builds the shared tables; every lane below must
+    // then plan a parquet scan of them in place of signature + banding
+    SparkEntry.queries("q_dedup_minhash")(spark, sf).collect()
+    for (lane <- Seq("q_split_leakage", "q_dedup_keep_best",
+        "q_dedup_incremental", "q_containment")) {
+      val p = plan(lane)
+      assert(!p.contains("minhash_sig"), s"$lane computes MinHash signatures:\n$p")
+      assert(!p.linesIterator.exists(l => l.contains("Window") && l.contains("band_hash")),
+        s"$lane windows over LSH buckets:\n$p")
+      assert(p.linesIterator.exists(l =>
+          l.contains("FileScan parquet") && l.contains("graft-derived")),
+        s"$lane reads no derived table:\n$p")
+    }
+  }
+
   test("co-occurrence recs: the basket self-join reuses one distinct exchange") {
     plans.GraftExtensions.install(spark)
     val p = finalPlan("q_cooccur_recs")
