@@ -2786,7 +2786,7 @@ object SparkEntry {
       // iterative CC on the REP graph when exact-dup cliques dominate
       // (identical output, thousands of edges instead of millions). The
       // oracle closes the same pair set transitively with a RECURSIVE
-      // CTE — an independent derivation of the Hash-Min fixpoint.
+      // CTE — an independent derivation of the component minima.
       MinhashTables.clusters(s, dir).orderBy($"doc_id")
     }),
 
@@ -2851,14 +2851,15 @@ object SparkEntry {
       // connected components over a SAMPLED co-purchase graph (1-in-50
       // orders, baskets capped at 8): the full graph collapses into one
       // giant hairball whose transitive-closure oracle is quadratic;
-      // the sampled graph has ~44 real components at sf0.01. CC runs
-      // large-star/small-star (O(log d) rounds of keyed shuffles, edge
-      // set never grows — the same 100 TB-safe machinery the dedup
-      // clustering lane uses); the oracle re-derives the labels with a
-      // recursive-CTE transitive closure over the same edges. Shared
-      // materialized sampled-edge table (operators.CoPurchase).
+      // the sampled graph has ~44 real components at sf0.01. CC is the
+      // one operator the dedup clustering lane uses (operators.
+      // DedupClusters: large-star/small-star to a verified star forest,
+      // O(log d) rounds of keyed shuffles, edge set never grows); the
+      // oracle re-derives the labels with a recursive-CTE transitive
+      // closure over the same edges. Shared materialized sampled-edge
+      // table (operators.CoPurchase).
       val edges = operators.CoPurchase.sampledEdges(s, dir)
-      operators.DedupClusters.clustersLargeSmallStar(edges, $"src", $"dst")
+      operators.DedupClusters.clusters(edges, $"src", $"dst")
         .labels
         .select($"doc_id".as("node"), $"cluster_id".as("component"))
         .orderBy($"node")
@@ -2877,11 +2878,11 @@ object SparkEntry {
       // and takes the min round per node.
       // edges come from the shared write-once sampled-edge parquet
       // (operators.CoPurchase) — the expensive derivation is gone — but
-      // minHops still gets to repartition-by-src + pin its OWN copy
-      // (edgesPinned left false): the rounds join the frontier against
-      // edges co-partitioned on src, and pinning a cheap parquet scan
-      // costs far less than re-shuffling the scan every round
-      // (measured: pinned-scan 2.6 s vs raw-scan rounds 5.3 s at sf0.1)
+      // minHops still repartitions-by-src + pins its OWN copy: the
+      // rounds join the frontier against edges co-partitioned on src,
+      // and pinning a cheap parquet scan costs far less than
+      // re-shuffling the scan every round (measured: pinned-scan 2.6 s
+      // vs raw-scan rounds 5.3 s at sf0.1)
       val edges = operators.CoPurchase.sampledEdges(s, dir)
       val seeds = edges.select($"src".as("node")).distinct()
         .filter($"node" % 10 === 0)
@@ -9058,8 +9059,8 @@ object SparkEntry {
     // brute-force CTEs as q_dedup_minhash) symmetrized into an edge list,
     // closed transitively with a RECURSIVE CTE (UNION dedups rows, so the
     // fixpoint terminates; cluster sizes at oracle scale are tiny), and
-    // each node labeled min(reachable ∪ self) — exactly Hash-Min's
-    // fixpoint, derived independently of the iterative implementation.
+    // each node labeled min(reachable ∪ self) — exactly the component
+    // minima, derived independently of the iterative implementation.
     "q_dedup_clusters" ->
       s"""WITH RECURSIVE $minhashPairCtes,
         |edges AS (

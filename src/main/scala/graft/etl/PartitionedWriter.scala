@@ -22,11 +22,13 @@ object PartitionedWriter {
             partitionKeys: Seq[String] = DefaultPartitionKeys,
             format: String = "parquet"): Unit = {
     require(SupportedFormats.contains(format), s"unsupported format: $format")
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // per-write option, not the session conf: a later mode("overwrite")
+    // elsewhere in the JVM keeps the session's own mode
     var w = df.write
       .partitionBy(partitionKeys: _*)
       .format(format)
       .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
     if (format == "csv") w = w.option("header", "true")
     w.save(location)
   }

@@ -27,55 +27,43 @@ object Bfs {
     * nodes are absent — at scale the unreached set is the corpus).
     * `maxHops` bounds the rounds; nodes further than it stay absent.
     *
-    * `broadcastFrontier` (default true): hint the frontier/settled sides
-    * of the per-round joins. A checkpointed frontier has no size stats,
-    * so the planner would otherwise SortMergeJoin — re-shuffling and
-    * re-sorting the whole cached edge list EVERY round. Broadcast is
-    * right whenever the settled set fits an executor (node-id + hop
-    * pairs — millions of nodes are tens of MB); flip it off for
-    * billion-node frontiers and pre-partition the edges on src instead.
-    *
-    * `edgesPinned` (default false): set true when the caller passes an
-    * ALREADY distinct, self-loop-free, materialized edge list — the
-    * operator then skips its own defensive pin (a full distinct +
-    * shuffle + cache of the edge set, measured 3 s of a 27 s run at
-    * 100× bench scale). */
-  def minHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-              broadcastFrontier: Boolean = true,
-              edgesPinned: Boolean = false): DataFrame = {
-    // Edges are materialized ONCE: without the checkpoint every round
+    * The frontier/settled sides of the per-round joins are broadcast: a
+    * checkpointed frontier has no size stats, so the planner would
+    * otherwise SortMergeJoin — re-shuffling and re-sorting the whole
+    * cached edge list EVERY round. Broadcast is right whenever the
+    * settled set fits an executor (node-id + hop pairs — millions of
+    * nodes are tens of MB). */
+  def minHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    // Edges are materialized ONCE: without the pin every round
     // re-executes the caller's edge DERIVATION (for the co-purchase
     // graph, a self-join + distinct over the fact table — the dominant
     // cost). Only FRONTIERS are checkpointed beyond that (each is
     // materialized exactly once, when it's born); the settled set is a
-    // flat union over the cached frontiers — re-materializing it per
+    // flat union over the parquet frontiers — re-materializing it per
     // round would pay O(settled) again every round. (Probe-measured at
     // 100× bench scale: derivation 11 s, per-round cost ~2 s — the
     // round joins scan the cached edges once each, no re-shuffle.)
-    val e =
-      if (edgesPinned) edges
-      // plain persist with lineage KEPT (cheap deterministic upstream:
-      // scan + distinct + repartition — evicted blocks recompute);
-      // loop frames below cut lineage onto checkpoint files instead
-      else edges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-        .repartition(col("src"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Plain persist with lineage KEPT (cheap deterministic upstream:
+    // scan + distinct + repartition — evicted blocks recompute); loop
+    // frames below cut lineage onto checkpoint files instead. The
+    // result reads only those files, so the pin is released on return.
+    val e = OpCaches.track(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
+      .repartition(col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     var frontier = Ckpt.viaParquet(seeds.select(col("node")).distinct()
       .select(col("node"), lit(0L).as("hops")))
     var settled = frontier
     var h = 1L
     var nFrontier = frontier.count() // metadata-only; sizes round writes
     var done = nFrontier == 0L
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastFrontier) broadcast(df) else df
     while (h <= maxHops && !done) {
-      val fr = hint(frontier)
+      val fr = broadcast(frontier)
       val next = Ckpt.viaParquet(e
         .join(fr, fr("node") === e("src"))
         .select(col("dst").as("node")).distinct()
-        .join(hint(settled), Seq("node"), "left_anti")
+        .join(broadcast(settled), Seq("node"), "left_anti")
         .select(col("node"), lit(h).as("hops")), Ckpt.partsFor(nFrontier))
       nFrontier = next.count() // metadata-only on the parquet frame
       done = nFrontier == 0L
@@ -85,6 +73,8 @@ object Bfs {
       }
       h += 1
     }
+    e.unpersist(blocking = false)
+    OpCaches.untrack(e)
     settled
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Reliable (disk-file-backed) lineage truncation for iterative lanes
   * — r15's replacement for `localCheckpoint(true)` in the CC / BFS /
@@ -16,14 +15,10 @@ import org.apache.spark.storage.StorageLevel
   * cluster at 100 TB is under permanent pressure — lineage-free state
   * there must be on reliable storage, not in evictable cache.
   *
-  * Shape: persist(MEMORY_AND_DISK) → checkpoint(eager) → unpersist.
-  * The persist makes the checkpoint's two internal jobs (materialize +
-  * write files) compute the frame ONCE — without it, Spark's reliable
-  * checkpoint recomputes the whole upstream plan for the write job,
-  * which for the first truncation of a CC loop is the entire
-  * candidate-generation pipeline. The returned Dataset reads from the
-  * checkpoint FILES (recomputable never needed, evictable never), so
-  * per-iteration plans stay two nodes deep exactly as before.
+  * Shape: a parquet round-trip ([[viaParquet]]): one job computes the
+  * frame and writes it; the returned Dataset reads the FILES
+  * (recomputable never needed, evictable never), so per-iteration plans
+  * stay two nodes deep.
   *
   * The checkpoint dir is one per JVM under java.io.tmpdir, registered
   * with Hadoop's ShutdownHookManager at priority 0 (after Spark's own
@@ -51,41 +46,15 @@ object Ckpt {
     }
   }
 
-  /** Truncate `df`'s lineage onto reliable storage; computes the frame
-    * exactly once (through a transient cache — use for frames whose
-    * upstream is EXPENSIVE, e.g. the first truncation of a candidate
-    * pipeline). Safe to call in a loop — each call writes its own
-    * checkpoint files, and the previous iteration's files stay valid
-    * for any reader still holding that Dataset. */
-  def reliable(df: DataFrame): DataFrame = {
-    ensureDir(df)
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try cached.checkpoint(eager = true)
-    finally cached.unpersist(blocking = false)
-  }
-
-  /** [[reliable]] without the transient cache: Spark's eager reliable
-    * checkpoint runs two jobs (materialize, then write), so the frame
-    * computes TWICE — the right trade for loop-iteration frames whose
-    * parents are already checkpoint files (one cheap join/agg each):
-    * recomputing costs one extra cheap job, while the [[reliable]]
-    * cache round-trip (columnar write + read + row copies) costs more
-    * than the frame itself at small sizes. */
-  def reliableNoCache(df: DataFrame): DataFrame = {
-    ensureDir(df)
-    df.checkpoint(eager = true)
-  }
-
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Reliable lineage truncation via a parquet round-trip — the
-    * cheapest of the three shapes for LOOP frames, and the standard
-    * production substitute for RDD checkpointing: ONE job computes the
-    * frame and writes it columnar; the returned Dataset is a plain
-    * file scan (reliable storage, full pushdown/pruning, nothing in
-    * the block manager to evict). Spark's own Dataset.checkpoint costs
-    * either a second materialize job ([[reliableNoCache]]) or a cache
-    * round-trip ([[reliable]]) on top of the same write.
+    * standard production substitute for RDD checkpointing: ONE job
+    * computes the frame and writes it columnar; the returned Dataset is
+    * a plain file scan (reliable storage, full pushdown/pruning, nothing
+    * in the block manager to evict). Spark's own Dataset.checkpoint
+    * costs either a second materialize job or a cache round-trip on top
+    * of the same write.
     *
     * Exactness: loop frames here are longs/doubles/strings — parquet
     * round-trips them bit-exactly (the DerivedCache contract). Files
@@ -184,35 +153,4 @@ object Ckpt {
     * hint only costs parallelism, never correctness. */
   def partsFor(rows: Long): Int =
     math.min(math.max(1L, rows / 2000000L + 1L), 100000L).toInt
-}
-
-/** Per-round lineage management for iterative loops (CC / BFS / k-core
-  * / label-prop), balancing the two failure modes the r14 verdict named:
-  *
-  *  - `localCheckpoint` every round is FAST but pressure-fragile —
-  *    truncated lineage makes evicted blocks unrecomputable (fatal on
-  *    executor loss, i.e. routinely at 1000-executor scale);
-  *  - reliable checkpoint every round is ROBUST but pays a second
-  *    materialize job + file write per round — measured 2-3× on the
-  *    sf0.1 iterative lanes, pure overhead when rounds are cheap.
-  *
-  * The hybrid: PERSIST every round with lineage KEPT (one compute +
-  * cache write; an evicted block recomputes through its parents), and
-  * cut lineage onto reliable checkpoint FILES every `every`-th round —
-  * so logical plans and worst-case recompute chains are both bounded
-  * at `every` rounds, and nothing anywhere is unrecomputable. One
-  * instance per loop (it counts rounds); not thread-safe, like the
-  * loops it serves. */
-final class LoopCkpt(every: Int = 3) {
-  private var i = 0
-
-  /** Register round result `df`: persisted (lazily — the loop's own
-    * convergence aggregate materializes it) on non-checkpoint rounds,
-    * reliably checkpointed (eagerly, through a transient cache) every
-    * `every`-th round. */
-  def frame(df: DataFrame): DataFrame = {
-    i += 1
-    if (i % every == 0) Ckpt.reliable(df)
-    else df.persist(StorageLevel.MEMORY_AND_DISK)
-  }
 }

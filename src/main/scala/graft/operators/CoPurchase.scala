@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * let every consumer scan the (much smaller) edge table. At index scale
   * this is the nightly co-purchase edge build feeding all graph jobs —
   * writes are edge-sized (two longs a row), reads are cheap scans that
-  * iterative operators can re-consume per round without re-deriving
-  * (Bfs.minHops's `edgesPinned` contract).
+  * iterative operators can re-consume per round without re-deriving.
   *
   * The build functions are EXACTLY the inline derivations the queries
   * used before ([[PageRank.coOccurrenceEdges]] and its items stage), so

@@ -202,24 +202,28 @@ object Dedup {
     * distinct shingle set) and member labels attach afterwards with one
     * join: a clique's members all carry their rep's component label, and
     * every rep is its clique's MINIMUM member id, so the rep graph's
-    * Hash-Min labels ARE the expanded graph's labels. At 100× bench
+    * component minima ARE the expanded graph's labels. At 100× bench
     * scale this iterates over thousands of rep edges instead of tens of
-    * millions of expanded clique edges. The near-dup lanes read it from
-    * the derived [[MinhashTables.clusters]] table. */
+    * millions of expanded clique edges. The verified pairs are written
+    * to parquet once here, so the CC rounds scan them instead of
+    * re-running the LSH plan. The near-dup lanes read it from the
+    * derived [[MinhashTables.clusters]] table. */
   def minhashLshClusters(df: DataFrame, text: Column, id: Column,
                          shingleK: Int = 3, numHashes: Int = 64,
                          bands: Int = 16, threshold: Double = 0.5,
-                         splitThreshold: Int = 4096,
-                         maxIter: Int = 5): DataFrame =
-    clustersOf(minhashLshCore(df, text, id, shingleK, numHashes, bands,
-      threshold, splitThreshold), maxIter)
+                         splitThreshold: Int = 4096): DataFrame = {
+    val core = minhashLshCore(df, text, id, shingleK, numHashes, bands,
+      threshold, splitThreshold)
+    clustersOf(core.copy(verified = Ckpt.viaParquet(core.verified)))
+  }
 
   /** The clusters of a core: CC over its verified pairs, which are the
     * rep pairs on the collapsed side (never the expanded clique edges),
-    * with member labels attached there. */
-  private[operators] def clustersOf(core: LshCore, maxIter: Int): DataFrame = {
+    * with member labels attached there. `core.verified` should be a
+    * plain scan ([[DedupClusters.clusters]] reads it more than once). */
+  private[operators] def clustersOf(core: LshCore): DataFrame = {
     val clusters =
-      DedupClusters.clusters(core.verified, col("id_a"), col("id_b"), maxIter)
+      DedupClusters.clusters(core.verified, col("id_a"), col("id_b")).labels
     if (core.memb == null) clusters
     else {
       val repClusters =

@@ -24,24 +24,26 @@ object KCore {
 
   /** Nodes of the k-core of a SYMMETRIC (src, dst) edge list, with
     * each node's degree inside the core. Self-loops ignored. */
-  def core(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
+  def core(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // initial graph: plain persist with lineage KEPT — the upstream is
     // a parquet scan + distinct (cheap, deterministic), so an evicted
     // block recomputes instead of failing; only LOOP frames need their
-    // lineage cut (below). Unpersisted by the first loop round.
-    var e = edges.select(col("src"), col("dst"))
+    // lineage cut (below). Released when the loop ends.
+    val e0 = OpCaches.track(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    var e = e0
     var nEdges = e.count()
-    var iter = 0
     var converged = nEdges == 0L
     // bounded retention: each round's files supersede the
     // grandparent's (chain loop — only the newest two generations are
     // reachable; see Ckpt.Rotation)
     val rot = new Ckpt.Rotation()
-    while (iter < maxIter && !converged) {
+    // every round but the last removes at least one edge, so the loop
+    // ends within |edges| + 1 rounds
+    while (!converged) {
       // survivors of this round: degree >= k within the current graph
       val alive = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("id"))
@@ -50,12 +52,12 @@ object KCore {
         .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst")), Ckpt.partsFor(nEdges))
       val n2 = next.count()
-      e.unpersist(blocking = false)
       converged = n2 == nEdges // no edge lost → every degree >= k → fixpoint
       e = next
       nEdges = n2
-      iter += 1
     }
+    e0.unpersist(blocking = false)
+    OpCaches.untrack(e0)
     e.groupBy(col("src")).agg(count(lit(1)).as("core_degree"))
       .select(col("src").as("node"), col("core_degree"))
   }

@@ -27,14 +27,15 @@ import org.apache.spark.sql.functions._
   *    itself on the direct side, a `pairs` table re-expanded from the
   *    core on the collapsed side;
   *  - [[clusters]] = [[Dedup.minhashLshClusters]] at [[point]] — the
-  *    Hash-Min loop also runs once, on the rep graph when collapsed.
+  *    connected-components loop ([[DedupClusters.clusters]]) also runs
+  *    once, over the `verified` scan: on the rep graph when collapsed.
   * MinhashTablesSpec pins both row-identical to the inline operators, as
   * multisets, in both clique regimes.
   *
-  * Every persist a build makes (the collapse tables, the candidate list,
-  * the CC's symmetric edge list) is dead once the table is written: the
-  * builds run under an [[OpCaches.scoped]] handle released right after
-  * the write, or on the exception that aborted it. */
+  * Every persist a build makes (the collapse tables, the candidate list)
+  * is dead once the table is written: the builds run under an
+  * [[OpCaches.scoped]] handle released right after the write, or on the
+  * exception that aborted it. */
 object MinhashTables {
 
   /** A MinHash-LSH operating point: word `shingleK`-shingles,
@@ -67,7 +68,7 @@ object MinhashTables {
   def clusters(s: SparkSession, dir: String): DataFrame = {
     val fp = DerivedCache.fingerprint(Seq(input(dir)))
     scopedTable(s, dir, "clusters", fp)(
-      Dedup.clustersOf(core(s, dir, fp), maxIter = 5))
+      Dedup.clustersOf(core(s, dir, fp)))
   }
 
   private def input(dir: String): String = s"$dir/documents.parquet"

@@ -1,54 +1,53 @@
 package graft
 
-import graft.operators.DedupClusters
+import graft.operators.{DedupClusters, MinhashTables}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupClustersSpec extends AnyFunSuite with SparkSpec {
+
+  private def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Brute-force closure: union-find over `pairs`, every id that appears
+    * in a pair labelled with its component's minimum. */
+  private def closure(pairs: Seq[(Long, Long)]): Seq[Row] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => Row(x, find(x)))
+  }
 
   test("label propagation finds connected components") {
     import spark.implicits._
     // components: {1,2,3,4} (chain), {10,11}, singleton edge {20,20}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 20L))
       .toDF("id_a", "id_b")
-    val got = DedupClusters.clusters(pairs, $"id_a", $"id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = labelMap(DedupClusters.clusters(pairs, $"id_a", $"id_b").labels)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
-  test("convergence telemetry: a chain longer than maxIter reports unconverged") {
+  test("star rounds are O(log diameter) and match a brute-force closure") {
     import spark.implicits._
-    // path 0-1-2-...-12: Hash-Min moves the min one hop per iteration, so
-    // diameter 12 cannot converge in 3 iterations
-    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val short = DedupClusters.clustersWithStats(chain, $"id_a", $"id_b", maxIter = 3)
-    assert(!short.converged && short.iterations == 3)
-    // partial labels are still valid reachable ids (never invented)
-    short.labels.collect().foreach(r => assert(r.getLong(1) <= r.getLong(0)))
-    val full = DedupClusters.clustersWithStats(chain, $"id_a", $"id_b", maxIter = 20)
-    assert(full.converged && full.iterations < 20)
-    assert(full.labels.collect().forall(_.getLong(1) == 0L), "chain must collapse to 0")
-  }
-
-  test("large-star/small-star converges in O(log diameter) and matches Hash-Min") {
-    import spark.implicits._
-    // a 300-node path: Hash-Min would need ~300 rounds; star rounds are
-    // logarithmic — require convergence well under the diameter
+    // a 300-node path: label propagation would need ~300 rounds; star
+    // rounds are logarithmic — require the stop well under the diameter
     val chain = (0L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val star = DedupClusters.clustersLargeSmallStar(chain, $"id_a", $"id_b", maxIter = 15)
-    assert(star.converged, s"did not converge in 15 rounds (ran ${star.iterations})")
-    assert(star.iterations <= 12, s"not logarithmic: ${star.iterations} rounds")
+    val star = DedupClusters.clusters(chain, $"id_a", $"id_b")
+    assert(star.rounds <= 12, s"not logarithmic: ${star.rounds} rounds")
     assert(star.labels.collect().forall(_.getLong(1) == 0L), "chain must collapse to 0")
-    // random graph: must agree with the Hash-Min labels exactly
+    // random graph (both orientations, duplicates, self-loops): the
+    // labels equal the union-find closure as a multiset
     val rnd = new scala.util.Random(11)
     val edges = Seq.fill(400)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
-      .toDF("id_a", "id_b")
-    val hashMin = DedupClusters.clustersWithStats(edges, $"id_a", $"id_b", maxIter = 50)
-    assert(hashMin.converged)
-    val got = DedupClusters.clustersLargeSmallStar(edges, $"id_a", $"id_b")
-      .labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ref = hashMin.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == ref)
+    val got = DedupClusters.clusters(edges.toDF("id_a", "id_b"), $"id_a", $"id_b")
+    assert(bag(got.labels.collect().toSeq) == bag(closure(edges)))
   }
 
   test("clusters over real minhash pairs are internally consistent") {
@@ -56,8 +55,7 @@ class DedupClustersSpec extends AnyFunSuite with SparkSpec {
     val pairs = operators.Dedup.minhashLshPairs(
       Tables.documents(spark, sf), $"text", $"doc_id",
       shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-    val clustered = DedupClusters.clusters(pairs, $"id_a", $"id_b")
-    val label = clustered.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val label = labelMap(DedupClusters.clusters(pairs, $"id_a", $"id_b").labels)
     // every pair's endpoints must share a cluster, labels are cluster minima
     pairs.select($"id_a", $"id_b").collect().foreach { r =>
       assert(label(r.getLong(0)) == label(r.getLong(1)))
@@ -84,14 +82,38 @@ class DedupClustersSpec extends AnyFunSuite with SparkSpec {
     val corpus = (rows ++ Seq((9000L, "!!! ??? ..."),
       (9100L, "a single unique document with its own words entirely")))
       .toDF("doc_id", "text")
-    val viaPairs = DedupClusters.clusters(
+    val viaPairs = labelMap(DedupClusters.clusters(
         operators.Dedup.minhashLshPairs(corpus, $"text", $"doc_id",
           shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5),
-        $"id_a", $"id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaReps = operators.Dedup.minhashLshClusters(corpus, $"text", $"doc_id",
-        shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        $"id_a", $"id_b").labels)
+    val viaReps = labelMap(operators.Dedup.minhashLshClusters(corpus, $"text", $"doc_id",
+        shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5))
     assert(viaPairs.nonEmpty && viaReps == viaPairs)
+  }
+
+  test("a near-dup chain of eleven hops clusters to its closure (derived table and lane)") {
+    import spark.implicits._
+    // doc i = words [10i, 10i + 60) of one distinct-word stream: under
+    // word 2-shingles neighbours share 49 of 69 shingles (J = 0.71) and
+    // docs two apart 39 of 79 (J = 0.49), so only neighbours verify at
+    // J >= 0.5 and the pair graph is one path
+    val n = 12
+    val ids = (0 until n).map(i => 100L + i)
+    val docs = ids.zipWithIndex.map { case (id, i) =>
+      (id, (10 * i until 10 * i + 60).map(w => s"w$w").mkString(" "))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("dedup-chain-spec")
+    try {
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val pairs = MinhashTables.pairs(spark, dir.toString)
+        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSeq
+      val path = ids.zip(ids.tail)
+      assert(path.size > 5)
+      assert(bag(pairs) == bag(path), s"the LSH pair graph is not the path: $pairs")
+      val want = bag(closure(pairs))
+      assert(bag(MinhashTables.clusters(spark, dir.toString).collect().toSeq) == want)
+      val lane = SparkEntry.queries("q_dedup_clusters")(spark, dir.toString)
+      assert(bag(lane.collect().toSeq) == want)
+    } finally Fs.deleteRec(dir)
   }
 }

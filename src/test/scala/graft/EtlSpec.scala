@@ -56,6 +56,28 @@ class EtlSpec extends AnyFunSuite with SparkSpec {
     assert(d2.toSeq == Seq(99L), "touched partition replaced")
   }
 
+  test("PartitionedWriter: the overwrite mode is per write, the session conf is unchanged") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val loc = tmpDir("pw-conf")
+      PartitionedWriter.write(Seq((1L, "2024", "01", "01"), (2L, "2024", "01", "02"))
+        .toDF("id", "year", "month", "day"), loc)
+      assert(spark.conf.get(key) == "static")
+      // a re-run of one date replaces only that date's partition
+      PartitionedWriter.write(Seq((99L, "2024", "01", "02"))
+        .toDF("id", "year", "month", "day"), loc)
+      assert(spark.conf.get(key) == "static")
+      val back = spark.read.parquet(loc).select($"id", $"day".cast("int")).as[(Long, Int)]
+      assert(bag(back.collect().toSeq) == bag(Seq((1L, 1), (99L, 2))))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("partitioned layout enables partition pruning at read time") {
     import spark.implicits._
     val loc = tmpDir("prune")

@@ -10,14 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * persisted and would hide a persist that bypasses the registry. */
 class LaneLeakSpec extends AnyFunSuite with SparkSpec {
 
-  /** The lanes that reach the clique collapse, plus the retrieval trio. */
+  /** The lanes that reach the clique collapse, the retrieval trio, and
+    * the iterative graph lanes (components, BFS, k-core, label
+    * propagation). */
   private val lanes = Seq(
     "q_dedup_minhash", "q_split_leakage", "q_dedup_clusters",
     "q_dedup_keep_best", "q_dedup_incremental", "q_containment",
     "q_dedup_simhash", "q_image_dedup", "q_audio_dedup",
     "q_dedup_embedding", "q_semantic_dedup", "q_allpairs",
     "q_allpairs_compact", "q_minhash_recall",
-    "q_bm25_pruned", "q_wand", "q_bmw")
+    "q_bm25_pruned", "q_wand", "q_bmw",
+    "q_graph_components", "q_bfs_hops", "q_kcore", "q_communities")
 
   for (lane <- lanes) test(s"$lane: OpCaches.releaseAll frees every cache it persisted") {
     // start from an empty block manager, whatever ran before
