@@ -698,74 +698,78 @@ object SparkEntry {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  /** q_ann_ivf's oracle needs the TRAINED centroids as SQL literals (the
-    * hyperplane recipe) — but unlike the seeded planes the quantizer is
-    * data-dependent, so the literals can only exist after training on the
-    * verified dir. The query caches its deterministic model per sfDir
-    * here; Verify dumps oracleSql AFTER running every query, so the
-    * emitted literals always describe exactly the model the verified
-    * output used. (Training is deterministic — id-ordered bounded sample,
-    * fixed Lloyd rounds, lower-id tie-breaks — so re-running the query
-    * can never produce a different model for the same dir.) */
-  private val ivfModels =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.IvfAnn.Model]()
+  /** Trained models, one memo for every family, keyed by (model, dir).
+    * Data-dependent oracles (q_ann_ivf's centroids, q_quality_lr's
+    * weights, ...) need the TRAINED model as SQL literals, and a model
+    * only exists after training on the verified dir. Each lane caches its
+    * deterministic model here; Verify dumps oracleSql AFTER running
+    * every query, so the emitted literals always describe exactly the
+    * model the verified output used. (Training is deterministic — e.g.
+    * id-ordered bounded samples, fixed Lloyd rounds, lower-id
+    * tie-breaks — so re-running a query can never produce a different
+    * model for the same dir.) Training is charged to BuildMeter.
+    * Concurrency: double-checked under one per-key lock (the
+    * DerivedCache discipline), never a computeIfAbsent whose side
+    * effects could nest on the shared map ("Recursive update"). */
+  private val models =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
+  private val modelLocks =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Object]()
   /** The dir whose trained models the data-dependent oracles describe:
-    * set by every model getter, read once at oracleSql emission. ONE
+    * set by every model lookup, read once at oracleSql emission. ONE
     * slot for all model families (not one per family) so oracles can
     * never mix models trained on different dirs — emission looks every
-    * model up in its per-dir map under this single key, and a family
-    * never trained for THIS dir is simply omitted (driver falls back to
-    * the rows-only check) rather than borrowing another dir's model. */
+    * model up under this single dir, and a family never trained for THIS
+    * dir is simply omitted (the check falls back to rows only)
+    * rather than borrowing another dir's model. */
   @volatile private var lastDir: String = null
-  private def ivfModel(s: SparkSession, dir: String): operators.IvfAnn.Model = {
-    val m = ivfModels.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding", k = 16) })
-    lastDir = dir
-    m
+
+  /** One model family in [[models]]: `apply` trains once per dir. */
+  private final class ModelMemo[M <: AnyRef](name: String)
+                                            (train: (SparkSession, String) => M) {
+    def apply(s: SparkSession, dir: String): M = {
+      val key = (name, dir)
+      val m = Option(models.get(key)).getOrElse(
+        modelLocks.computeIfAbsent(key, _ => new Object).synchronized {
+          Option(models.get(key)).getOrElse {
+            val t = operators.BuildMeter.time(train(s, dir))
+            models.put(key, t)
+            t
+          }
+        })
+      lastDir = dir
+      m.asInstanceOf[M]
+    }
+
+    /** The model trained for `dir`, if this JVM trained one. */
+    def trained(dir: String): Option[M] =
+      Option(models.get((name, dir))).map(_.asInstanceOf[M])
   }
 
-  /** q_kmeans_topics' quantizer, cached per dir for the same reason as
-    * [[ivfModel]] (k = 8 topics vs IVF's 16 cells — separate models). */
-  private val topicModels =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.IvfAnn.Model]()
+  /** q_ann_ivf's 16-cell coarse quantizer (also q_ann_pq's). */
+  private val ivfModel = new ModelMemo("ivf")((s, d) =>
+    operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding", k = 16))
 
-  /** q_ann_pq's product-quantization codebooks, cached per dir like
-    * [[ivfModel]] (training is deterministic; the oracle re-emits the
-    * trained centroids as literals). The coarse quantizer is ivfModel —
-    * the same 16 cells q_ann_ivf searches. */
-  private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.PqAnn.Model]()
-  private def pqModel(s: SparkSession, dir: String): operators.PqAnn.Model = {
-    val m = pqModels.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.PqAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
-        m = 4, ksub = 16) })
-    lastDir = dir
-    m
-  }
-  private def topicModel(s: SparkSession, dir: String): operators.IvfAnn.Model = {
-    val m = topicModels.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding", k = 8) })
-    lastDir = dir
-    m
-  }
+  /** q_kmeans_topics' quantizer (k = 8 topics vs IVF's 16 cells). */
+  private val topicModel = new ModelMemo("topic")((s, d) =>
+    operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding", k = 8))
+
+  /** q_ann_pq's product-quantization codebooks; the coarse quantizer is
+    * [[ivfModel]] — the same 16 cells q_ann_ivf searches. */
+  private val pqModel = new ModelMemo("pq")((s, d) =>
+    operators.PqAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
+      m = 4, ksub = 16))
 
   /** q_bitext_blocked's shared quantizer — trained on the UNION of both
-    * mining sides (k = 8 blocks), cached per dir like [[ivfModel]];
-    * training is deterministic, so the oracle re-emits the trained
-    * centroids as literals and replays the cell assignment ladder. */
-  private val bitextModels =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.IvfAnn.Model]()
-  private def bitextModel(s: SparkSession, dir: String): operators.IvfAnn.Model = {
-    val m = bitextModels.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      import s.implicits._
-      operators.IvfAnn.train(
-        Tables.embeddings(s, d)
-          .filter($"label".isin(0, 1) && $"vec_id" < 5000),
-        "vec_id", "embedding", k = 8)
-    })
-    lastDir = dir
-    m
-  }
+    * mining sides (k = 8 blocks); the oracle replays the cell assignment
+    * ladder from its centroids. */
+  private val bitextModel = new ModelMemo("bitext")((s, d) => {
+    import s.implicits._
+    operators.IvfAnn.train(
+      Tables.embeddings(s, d)
+        .filter($"label".isin(0, 1) && $"vec_id" < 5000),
+      "vec_id", "embedding", k = 8)
+  })
 
   /** q_ann_tuned's models — the TUNED operating points the AnnTune sweep
     * selected (SCALE.md "ANN recall-vs-cost frontier"): a FINER 64-cell
@@ -773,72 +777,39 @@ object SparkEntry {
     * so more cells buy the same recall at a smaller scan — nCells should
     * track ~sqrt(corpus) in production) and a finer m=8 product
     * quantizer (8-dim subspaces halve the per-subspace quantization
-    * error that capped the m=4 ADC ranking). Cached per dir like
-    * [[ivfModel]]; training is deterministic, so the oracle re-emits the
-    * trained centroids as literals. */
-  private val ivf64Models =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.IvfAnn.Model]()
-  private def ivf64Model(s: SparkSession, dir: String): operators.IvfAnn.Model = {
-    val m = ivf64Models.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding", k = 64) })
-    lastDir = dir
-    m
-  }
-  private val pq8Models =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.PqAnn.Model]()
-  private def pq8Model(s: SparkSession, dir: String): operators.PqAnn.Model = {
-    val m = pq8Models.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.PqAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
-        m = 8, ksub = 16) })
-    lastDir = dir
-    m
-  }
+    * error that capped the m=4 ADC ranking). */
+  private val ivf64Model = new ModelMemo("ivf64")((s, d) =>
+    operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding", k = 64))
+  private val pq8Model = new ModelMemo("pq8")((s, d) =>
+    operators.PqAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
+      m = 8, ksub = 16))
   // the ivf_s (spilled) lane's quantizer — 128 cells; with spill=3
   // assignment and nProbe=10 the visited-pair budget lands just under
   // 25% (r14 frontier point, see SCALE.md "frontier at the 25% budget")
-  private val ivf128Models =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.IvfAnn.Model]()
-  private def ivf128Model(s: SparkSession, dir: String): operators.IvfAnn.Model = {
-    val m = ivf128Models.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
-        k = 128) })
-    lastDir = dir
-    m
-  }
+  private val ivf128Model = new ModelMemo("ivf128")((s, d) =>
+    operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
+      k = 128))
 
-  /** q_quality_lr's trained classifier, cached per dir like [[ivfModel]]
-    * (bounded-sample driver-side GD is bit-deterministic: fixed sample
-    * order, fixed iteration count — see QualityLr.train's scaladoc). */
-  private val qualityLrModels =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.QualityLr.Model]()
-  private def qualityLrModel(s: SparkSession, dir: String): operators.QualityLr.Model = {
-    val m = qualityLrModels.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      val toks = graft.functions.TextFns.tokens(col("text"))
-      val keep = graft.functions.TextFns.qualityKeep(
-        length(col("text")).cast(LongType), size(toks).cast(LongType),
-        graft.functions.TextFns.meanWordLen(toks))
-      operators.QualityLr.train(Tables.documents(s, d), col("text"),
-        col("doc_id"), when(keep, 1.0).otherwise(0.0))
-    })
-    lastDir = dir
-    m
-  }
+  /** q_quality_lr's trained classifier (bounded-sample in-process GD is
+    * bit-deterministic: fixed sample order, fixed iteration count — see
+    * QualityLr.train's scaladoc). */
+  private val qualityLrModel = new ModelMemo("qualityLr")((s, d) => {
+    val toks = graft.functions.TextFns.tokens(col("text"))
+    val keep = graft.functions.TextFns.qualityKeep(
+      length(col("text")).cast(LongType), size(toks).cast(LongType),
+      graft.functions.TextFns.meanWordLen(toks))
+    operators.QualityLr.train(Tables.documents(s, d), col("text"),
+      col("doc_id"), when(keep, 1.0).otherwise(0.0))
+  })
 
-  /** q_bpe_merges/q_bpe_encode's tokenizer vocab, cached per dir like
-    * [[ivfModel]] (training is deterministic: argmax tiebreak is
-    * (freq DESC, left, right) over binary string order; the oracle
-    * re-derives every round's argmax and uses the merges only to roll
-    * the rendering forward). */
-  private val bpeModels =
-    new java.util.concurrent.ConcurrentHashMap[String, operators.Bpe.Model]()
-  private def bpeModel(s: SparkSession, dir: String): operators.Bpe.Model = {
-    val m = bpeModels.computeIfAbsent(dir, d => operators.BuildMeter.time {
-      operators.Bpe.train(
-        operators.Bpe.wordCounts(Tables.documents(s, d),
-          org.apache.spark.sql.functions.col("text")), k = 10) })
-    lastDir = dir
-    m
-  }
+  /** q_bpe_merges/q_bpe_encode's tokenizer vocab (training is
+    * deterministic: argmax tiebreak is (freq DESC, left, right) over
+    * binary string order; the oracle re-derives every round's argmax and
+    * uses the merges only to roll the rendering forward). */
+  private val bpeModel = new ModelMemo("bpe")((s, d) =>
+    operators.Bpe.train(
+      operators.Bpe.wordCounts(Tables.documents(s, d),
+        org.apache.spark.sql.functions.col("text")), k = 10))
 
   /** Replays q_quality_lr's SCORING from the trained folded weights as
     * SQL literals (training stays driver-side and bounded — only the
@@ -1335,25 +1306,16 @@ object SparkEntry {
     }.mkString(" OR ")
   }
 
-  /** q_minhash_recall's doc-sample budget: pct = least(100, greatest(1,
-    * budget div n)) — ~2,500 docs at any corpus size (see the lane's
-    * scale-bound note). The pre-warm runs the same plan at budget/11. */
-  private val minhashAuditSampleBudget = 250000L
-
-  /** The q_minhash_recall plan body, parameterized by the deterministic
-    * doc-sample budget so the once-per-JVM pre-warm below can run the
-    * IDENTICAL plan shape on a ~1/11 slice. Its two persisted
-    * intermediates register with OpCaches, so the caller's release frees
-    * them. All plan logic is unchanged from r17 — only the 250000
-    * literal became a parameter (it reaches codegen solely through the
-    * 1-row pct aggregate, so every downstream generated class is
-    * byte-identical between the pre-warm slice and the real run). */
-  private def minhashRecallPlan(s: SparkSession, dir: String,
-      sampleBudget: Long): DataFrame = {
+  /** The q_minhash_recall plan body. Its two persisted intermediates
+    * register with OpCaches, so the caller's release frees them. The
+    * doc-sample budget is 250000: pct = least(100, greatest(1, 250000
+    * div n)) — ~2,500 docs at any corpus size (see the lane's
+    * scale-bound note). */
+  private def minhashRecallPlan(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val mrDocsAll = Tables.documents(s, dir)
     val mrPct = mrDocsAll.agg(
-      expr(s"least(100, greatest(1, $sampleBudget div count(1)))").as("doc_pct"))
+      expr("least(100, greatest(1, 250000 div count(1)))").as("doc_pct"))
     // the distinct (doc, shingle) table feeds THREE subtrees (the
     // signature aggregation, the shingle-df ordering, the truth sets)
     // — persist it so the explode+distinct shuffle runs once
@@ -1443,32 +1405,6 @@ object SparkEntry {
           .as("precision_ppm"))
       .orderBy($"bands")
   }
-
-  /** Once-per-JVM JIT pre-warm of the minhash audit's generated classes
-    * (r18; VERDICT r17 ask 1 — the catalog's stage-richest lane, 92
-    * generated classes, paid 115.3 s on the r17 driver gate with 2,278 s
-    * of summed INTERPRETED cpu in one stage before reading 6.4 s warm /
-    * 5.8 s re-run). Exactly the PageRank.prewarmIteration /
-    * Triangles.prewarmMerge mechanism, pointed at the lane that
-    * motivated it: the classes are plan-shape-derived, not data-derived
-    * (and AQE-numbering-stable since useIdInClassName=false), so one
-    * execution of the SAME plan with the doc-sample budget divided by 11
-    * (~230 docs at sf0.1 — the banded self-joins are O(slice²), trivial)
-    * compiles and HotSpot-promotes every class before the real audit
-    * touches the full ~2,500-doc sample. Charged to BuildMeter: it is
-    * once-per-JVM warm-up work, exactly like a DerivedCache build. It
-    * builds under its own OpCaches scope and frees every cache the slice
-    * persisted before the real run starts. */
-  private val minhashRecallPrewarmed =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def prewarmMinhashRecall(s: SparkSession, dir: String): Unit =
-    if (!minhashRecallPrewarmed.getAndSet(true)) operators.BuildMeter.time {
-      val (_, slice) = operators.OpCaches.scoped {
-        minhashRecallPlan(s, dir, minhashAuditSampleBudget / 11)
-          .write.format("noop").mode("overwrite").save()
-      }
-      slice.release()
-    }
 
   /** q_interleave's oracle: the same lcm/weight strides as VALUES
     * literals, the same two-window derivation — all-integer virtual
@@ -2732,11 +2668,7 @@ object SparkEntry {
       // exact doc subset with a WHERE clause; at the driver's
       // correctness SF (0.01, 500 docs) pct = 100 and the audit still
       // covers the whole corpus.
-      // r18: the plan body lives in minhashRecallPlan (unchanged
-      // semantics), behind the once-per-JVM JIT pre-warm — see
-      // prewarmMinhashRecall's note for the mechanism and numbers.
-      prewarmMinhashRecall(s, dir)
-      minhashRecallPlan(s, dir, minhashAuditSampleBudget)
+      minhashRecallPlan(s, dir)
     }),
 
     "q_dedup_simhash" -> ((s, dir) => {
@@ -2803,7 +2735,7 @@ object SparkEntry {
       // (edges ⋈ out-degrees, operators.CoPurchase.transitionFull) —
       // the degree derivation is index-build work, metered in
       // build_cold, and every iteration starts from a plain scan.
-      // Bit-identical ranks (PageRankSpec pins the two forms equal).
+      // PageRankSpec pins the ranks to a brute-force integer replay.
       val trans = operators.CoPurchase.transitionFull(s, dir)
       operators.PageRank.ranksFromTransitions(trans, iterations = 5)
         .orderBy($"rank_micro".desc, $"node")
@@ -3677,10 +3609,10 @@ object SparkEntry {
       // reuse is an optimization, not a contract; without the pin each
       // reference re-runs the full probe join over the corpus (2× the
       // dominant scan at any scale).
-      val candCost = cand.agg(count(lit(1)).as("n_scored"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val candSCost = candS.agg(count(lit(1)).as("n_scored"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val candCost = operators.OpCaches.track(cand.agg(count(lit(1)).as("n_scored"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val candSCost = operators.OpCaches.track(candS.agg(count(lit(1)).as("n_scored"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val costs = Seq(
         ncorp.crossJoin(broadcast(tot))
           .select(lit("brute").as("lane"),
@@ -4371,13 +4303,14 @@ object SparkEntry {
       // persist. Values unchanged (weights are query-independent; the
       // oracle keeps hash-checking).
       val ranked = operators.HybridSearch.rankedTablePinned(s, dir)
-      val qT = broadcast(dt.filter($"is_q")
-        .select($"doc_id".as("query_id"), $"term"))
-      // pinned: all three depth lanes join against the one full lane
-      // (the r19 small-frame rule: pin the tiny shared DERIVED frames,
-      // not the big index)
-      val full = operators.HybridSearch
-        .bm25RetrieveFromRankedPinned(ranked, qT, k = 10)
+      val qT = operators.HybridSearch.queryTerms(dt)
+      // pinned: all three depth lanes join against the one full lane —
+      // k·|queries| rows, but re-deriving it per reference re-runs the
+      // full-index score join (the r19 small-frame rule: pin the tiny
+      // shared DERIVED frames, not the big index)
+      val full = operators.OpCaches.track(operators.HybridSearch
+          .bm25RetrieveFromRanked(ranked, qT, k = 10)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         .select($"query_id", $"doc_id", $"lex_rank".as("full_rank"))
       val qdf = dt.filter($"is_q").select($"doc_id".as("query_id"), $"term")
         .join(dt.groupBy($"term").agg(count(lit(1)).as("df")), "term")
@@ -4414,8 +4347,8 @@ object SparkEntry {
       // rescore only docs seen in an essential list — exact top-10 BY
       // CONSTRUCTION, with the exactness COUNTED against the unpruned
       // lane (n_topk_match) and the touched posting volume reported
-      // per query. See HybridSearch.maxScoreAudit's scaladoc for the
-      // bound's proof shape.
+      // per query. See HybridSearch's MaxScore scaladoc (above
+      // maxScoreAuditFromRanked) for the bound's proof shape.
       val dt = operators.DocTerms.table(s, dir).withColumn("is_q", $"doc_id" < 8)
       // r19: the index side serves from the materialized per-dir
       // champions table (shared with q_bm25_pruned/q_bmw) — the weight
@@ -4433,7 +4366,7 @@ object SparkEntry {
       // the bounded rescore shrinks further. Exact top-10 by
       // construction, equality counted per query against the unpruned
       // lane, block-pruning ratio reported (see
-      // HybridSearch.blockMaxAudit's bound proof).
+      // HybridSearch.blockMaxAuditFromRanked's bound proof).
       val dt = operators.DocTerms.table(s, dir).withColumn("is_q", $"doc_id" < 8)
       // r19: served from the shared materialized champions table, like
       // q_wand above.
@@ -7036,10 +6969,10 @@ object SparkEntry {
       // each report() re-runs the orders scan + daily rollup + global
       // sort (3× the dominant cost at scale), reachable only through
       // AQE exchange reuse, which is an optimization, not a contract.
-      val collected = seq0
+      val collected = operators.OpCaches.track(seq0
         .agg(sort_array(collect_list(struct($"rn", $"idx", $"x"))).as("h"),
           count(lit(1)).as("n_days"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val accT = DecimalType(34, 6)
       val termT = DecimalType(22, 6)
       val zero = lit(0).cast(accT)
@@ -12355,42 +12288,33 @@ object SparkEntry {
         |LIMIT 50""".stripMargin,
   ) ++
     // data-dependent oracles: only emittable once the query has trained
-    // its quantizer for the dir being verified (see ivfModel/topicModel).
-    // All families resolve through the SINGLE lastDir key so one dir's
-    // models can never mix with another's; a family untrained for that
-    // dir is omitted → the driver records the weaker rows-only check.
-    Option(lastDir).map(d =>
-      (Option(ivfModels.get(d)), Option(topicModels.get(d)),
-        Option(pqModels.get(d)), Option(bpeModels.get(d)))) .toSeq.flatMap {
-      case (ivf, topic, pq, bpe) =>
-        ivf.map(m => "q_ann_ivf" -> ivfOracle(m)) ++
-        ivf.map(m => "q_semantic_dedup" -> semanticDedupOracle(m)) ++
-        topic.map(m => "q_kmeans_topics" -> kmeansOracle(m)) ++
-        topic.map(m => "q_cluster_purity" -> clusterPurityOracle(m)) ++
-        (for (c <- ivf; p <- pq) yield "q_ann_pq" -> pqOracle(c, p)) ++
-        (for (c <- ivf; p <- pq) yield "q_ann_recall" -> annRecallOracle(c, p)) ++
-        (for (c <- ivf; p <- pq) yield
-          "q_ann_rank_metrics" -> annRankMetricsOracle(c, p)) ++
-        bpe.map(m => "q_bpe_merges" -> bpeMergesOracle(m)) ++
-        bpe.map(m => "q_bpe_encode" -> bpeEncodeOracle(m))
-    } ++
-    Option(lastDir).map(d =>
-      (Option(ivf64Models.get(d)), Option(ivf128Models.get(d)),
-        Option(pq8Models.get(d)))).toSeq.flatMap {
-      case (ivf64, ivf128, pq8) =>
-        (for (c <- ivf64; s2 <- ivf128; p <- pq8) yield
-          "q_ann_tuned" -> annTunedOracle(c, s2, p)).toSeq
-    } ++
-    Option(lastDir).flatMap(d => Option(bitextModels.get(d)))
-      .map(m => "q_bitext_blocked" -> bitextBlockedOracle(m)).toSeq ++
-    Option(lastDir).flatMap(d => Option(qualityLrModels.get(d)))
-      .map(m => "q_quality_lr" -> qualityLrOracle(m)).toSeq ++
-    Option(lastDir).flatMap(d => Option(qualityLrModels.get(d)))
-      .map(m => "q_lr_calibration" -> lrCalibrationOracle(m)).toSeq ++
-    Option(lastDir).flatMap(d => Option(qualityLrModels.get(d)))
-      .map(m => "q_lr_auc" -> lrAucOracle(m)).toSeq ++
-    Option(lastDir).flatMap(d => Option(qualityLrModels.get(d)))
-      .map(m => "q_pr_curve" -> prCurveOracle(m)).toSeq
+    // its model for the dir being verified (see ModelMemo). All families
+    // resolve through the SINGLE lastDir key so one dir's models can
+    // never mix with another's; a family untrained for that dir is
+    // omitted → the check records the weaker rows-only result.
+    Option(lastDir).toSeq.flatMap { d =>
+      val (ivf, topic, pq, bpe) = (ivfModel.trained(d), topicModel.trained(d),
+        pqModel.trained(d), bpeModel.trained(d))
+      val lr = qualityLrModel.trained(d)
+      ivf.map(m => "q_ann_ivf" -> ivfOracle(m)) ++
+      ivf.map(m => "q_semantic_dedup" -> semanticDedupOracle(m)) ++
+      topic.map(m => "q_kmeans_topics" -> kmeansOracle(m)) ++
+      topic.map(m => "q_cluster_purity" -> clusterPurityOracle(m)) ++
+      (for (c <- ivf; p <- pq) yield "q_ann_pq" -> pqOracle(c, p)) ++
+      (for (c <- ivf; p <- pq) yield "q_ann_recall" -> annRecallOracle(c, p)) ++
+      (for (c <- ivf; p <- pq) yield
+        "q_ann_rank_metrics" -> annRankMetricsOracle(c, p)) ++
+      bpe.map(m => "q_bpe_merges" -> bpeMergesOracle(m)) ++
+      bpe.map(m => "q_bpe_encode" -> bpeEncodeOracle(m)) ++
+      (for (c <- ivf64Model.trained(d); s2 <- ivf128Model.trained(d);
+            p <- pq8Model.trained(d)) yield
+        "q_ann_tuned" -> annTunedOracle(c, s2, p)) ++
+      bitextModel.trained(d).map(m => "q_bitext_blocked" -> bitextBlockedOracle(m)) ++
+      lr.map(m => "q_quality_lr" -> qualityLrOracle(m)) ++
+      lr.map(m => "q_lr_calibration" -> lrCalibrationOracle(m)) ++
+      lr.map(m => "q_lr_auc" -> lrAucOracle(m)) ++
+      lr.map(m => "q_pr_curve" -> prCurveOracle(m))
+    }
 
   /** Shared CTE prefix for the BPE oracles: tokenize ([[graft.functions
     * .TextFns.tokens]] domain), distinct-word counts, and the initial

@@ -40,23 +40,34 @@ object Bm25 {
     * small table, nothing re-tokenizes. */
   def topTermsFromTf(tf: DataFrame, k: Int = 3,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // corpus stats derived from the doc-term table rather than a second
-    // full scan+tokenize of the raw text: N and avgdl over docs WITH
-    // tokens (identical unless a doc is empty — and empty docs have no
-    // terms to score anyway)
-    val corpus = tf.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val scored = tf.join(dfreq, "term").crossJoin(broadcast(corpus))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("bm25", round(
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))), 6))
+    val scored = postings(tf).withColumn("bm25", weight(k1, b))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("bm25").desc, col("term"))
     scored.withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("term"), col("tf"), col("bm25"), col("rank"))
+  }
+
+  /** The (doc_id, term, tf, dl) rows with the per-term df and the
+    * broadcast corpus stats (n_docs, avgdl) beside them — the columns
+    * [[weight]] reads. Corpus stats are derived from the doc-term table
+    * rather than a second full scan+tokenize of the raw text: N and avgdl
+    * over docs WITH tokens (identical unless a doc is empty — and empty
+    * docs have no terms to score anyway). */
+  private[operators] def postings(tf: DataFrame): DataFrame = {
+    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val corpus = tf.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"),
+        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+    tf.join(dfreq, "term").crossJoin(broadcast(corpus))
+  }
+
+  /** The BM25 weight of one [[postings]] row, rounded to 6 decimals — the
+    * one definition of the formula: [[topTermsFromTf]] ranks on it as a
+    * double, and the retrieval lanes ([[HybridSearch]]) sum it as
+    * DECIMAL(18,6). */
+  private[operators] def weight(k1: Double, b: Double): Column = {
+    val idf = log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
+    round(idf * (col("tf") * (k1 + 1.0)) /
+      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))), 6)
   }
 }

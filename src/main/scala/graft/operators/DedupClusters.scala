@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   * projection over the edge list — shuffles on the node key only, and
   * the edge set never grows beyond the input. A path of length L takes
   * O(log L) rounds (label propagation moves the minimum one hop per
-  * round, so it takes L).
+  * round, so it takes L). Where a frame is read in two roles (both edge
+  * directions, both endpoints), one `inline` or `explode` over a
+  * two-element array emits both, so each frame is scanned once.
   *
   * Stop test: every round's edges point from a larger id to a smaller
   * one, and star rounds preserve connectivity. So once every pointer has
@@ -47,7 +49,8 @@ object DedupClusters {
     // edges out of it point larger -> smaller; duplicates are absorbed
     // by smallStar's window-min and final distinct
     def largeStar(e: DataFrame): DataFrame = {
-      val both = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+      val both = e.select(inline(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))))
       both.withColumn("m", least(min(col("v")).over(w), col("u")))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
@@ -56,15 +59,16 @@ object DedupClusters {
     // smaller than u, so the window min is min(N(u) ∪ {u})
     def smallStar(e: DataFrame): DataFrame = {
       val withMin = e.withColumn("m", min(col("v")).over(w))
-      withMin.select(col("v").as("u"), col("m").as("v"))
-        .unionAll(withMin.select(col("u"), col("m").as("v")))
+      withMin.select(inline(array(struct(col("v").as("u"), col("m").as("v")),
+          struct(col("u"), col("m").as("v")))))
         .filter(col("u") =!= col("v"))
         .distinct()
     }
     // (edge count, whether the distinct edges u -> v form a star forest)
     def starForest(e: DataFrame): (Long, Boolean) = {
-      val byNode = e.select(col("u").as("x"), lit(1L).as("out"), lit(0).as("in"))
-        .unionAll(e.select(col("v").as("x"), lit(0L).as("out"), lit(1).as("in")))
+      val byNode = e.select(inline(array(
+          struct(col("u").as("x"), lit(1L).as("out"), lit(0).as("in")),
+          struct(col("v").as("x"), lit(0L).as("out"), lit(1).as("in")))))
         .groupBy(col("x"))
         .agg(sum(col("out")).as("out"), max(col("in")).as("in"))
       val r = byNode.agg(
@@ -91,8 +95,8 @@ object DedupClusters {
     // a leaf's label is its root; a root, and an id whose only edges
     // were self-loops, labels itself
     val labels = edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-      .unionAll(ids.select(col("u").as("doc_id"), col("u").as("cluster_id")))
-      .unionAll(ids.select(col("v").as("doc_id"), col("v").as("cluster_id")))
+      .unionAll(ids.select(explode(array(col("u"), col("v"))).as("doc_id"))
+        .select(col("doc_id"), col("doc_id").as("cluster_id")))
       .groupBy(col("doc_id"))
       .agg(min(col("cluster_id")).as("cluster_id"))
     ClusteringResult(labels, rounds)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.TextFns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,47 +31,22 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   */
 object HybridSearch {
 
-  /** BM25 retrieval: score every corpus doc against each query doc
-    * (score = Σ over the query doc's DISTINCT terms of the corpus
-    * doc's BM25 weight for that term), rank per query. Corpus stats
-    * (N, avgdl, df) are computed over the WHOLE corpus, query docs
-    * included, exactly as a real index would have them. */
-  def bm25Retrieve(docs: DataFrame, text: Column, id: Column,
-                   isQuery: Column, k: Int,
-                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val toks = docs.select(id.as("doc_id"), isQuery.as("is_q"),
-      TextFns.tokens(text).as("toks"))
-    val terms = toks.select(col("doc_id"), col("is_q"),
-      size(col("toks")).cast(LongType).as("dl"), explode(col("toks")).as("term"))
-    val tf = terms.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
-        first(col("is_q")).as("is_q"))
-    bm25RetrieveFromTf(tf, k, k1, b)
-  }
-
-  /** [[bm25Retrieve]] from an already-derived (doc_id, term, tf, dl,
-    * is_q) table — the [[graft.operators.DocTerms]] consumer path (the
-    * probe predicate is on doc_id, so `is_q` is derivable from the
-    * materialized table without the raw text). */
-  def bm25RetrieveFromTf(tf: DataFrame, k: Int,
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val corpus = tf.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    // the query side of the term join is the fixed probe set — broadcast
-    val qTerms = broadcast(tf.filter(col("is_q"))
-      .select(col("doc_id").as("query_id"), col("term")))
-    val perTerm = tf.join(dfreq, "term").crossJoin(broadcast(corpus))
-      .join(qTerms, "term")
+  /** The per-query BM25 top-k — the one scorer every retrieval lane
+    * runs: score(q, d) = Σ over the query doc's DISTINCT terms of the
+    * corpus doc's weight for that term, ranked (score desc, doc_id), the
+    * query doc itself excluded. `postings` holds (term, doc_id) plus the
+    * columns `weight` reads: the [[rankedTable]] passes its stored `w`,
+    * q_hybrid_search the inline [[Bm25.postings]] columns (weights
+    * computed after the probe join, on the matched postings only).
+    * `depth` = Some(m) scores over each term's top-m postings only (the
+    * champion lists, `rn` ≤ m). Returns (query_id, doc_id, lex_rank). */
+  private def topK(postings: DataFrame, weight: Column, qTerms: DataFrame,
+                   k: Int, depth: Option[Int]): DataFrame = {
+    val kept = depth.fold(postings)(m => postings.filter(col("rn") <= m))
+    val scored = kept.join(qTerms, "term")
       .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w", round(
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))),
-        6).cast(DecimalType(18, 6)))
-    val scored = perTerm.groupBy(col("query_id"), col("doc_id"))
+      .withColumn("w", weight)
+      .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("w")).as("score"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -81,11 +55,32 @@ object HybridSearch {
       .select(col("query_id"), col("doc_id"), col("lex_rank"))
   }
 
+  /** The [[Bm25.weight]] as the retrieval lanes sum it: DECIMAL(18,6),
+    * so per-(query, doc) totals are order-independent. */
+  private def decimalWeight: Column =
+    Bm25.weight(k1 = 1.2, b = 0.75).cast(DecimalType(18, 6))
+
+  /** The broadcast (query_id, term) probe set of a doc-term table
+    * carrying `is_q` — the fixed-size query side of every term join. */
+  def queryTerms(tf: DataFrame): DataFrame =
+    broadcast(tf.filter(col("is_q"))
+      .select(col("doc_id").as("query_id"), col("term")))
+
+  /** BM25 retrieval from a (doc_id, term, tf, dl, is_q) table — the
+    * [[graft.operators.DocTerms]] consumer path (the probe predicate is
+    * on doc_id, so `is_q` is derivable from the materialized table
+    * without the raw text). Corpus stats (N, avgdl, df) are computed
+    * over the WHOLE corpus, query docs included, exactly as a real index
+    * would have them. Weights are computed inline: q_hybrid_search runs
+    * this and does not depend on the champions build. */
+  def bm25RetrieveFromTf(tf: DataFrame, k: Int): DataFrame =
+    topK(Bm25.postings(tf), decimalWeight, queryTerms(tf), k, None)
+
   /** The MATERIALIZED impact-ranked postings table for `dir` — the
     * write-once serving index of the 100 TB lexical story (this file's
     * header scaladoc), now an actual [[DerivedCache]] table instead of
     * three per-lane rebuilds (r19): q_bm25_pruned, q_wand and q_bmw
-    * each derived + persisted an identical championsRanked frame (two
+    * each derived + persisted an identical champion frame (two
     * shuffles over the full doc-term table and a per-term top-k window,
     * ~40–80 generated classes per lane), tripling the corpus weight
     * pass per bench/verify JVM and feeding the retrieval family's JIT
@@ -97,7 +92,7 @@ object HybridSearch {
     * lesson). Columns: (term, doc_id, w DECIMAL(18,6), rn) — decimals
     * round-trip parquet exactly, and rn's (w desc, doc_id) order is
     * deterministic, so the table is byte-stable across rebuilds;
-    * HybridSearchSpec pins it row-identical to the inline derivation.
+    * HybridSearchSpec pins it row-identical to a brute-force BM25.
     * documents.parquet is fingerprinted once and the same fingerprint
     * keys this table and the DocTerms table it reads (the CoPurchase
     * chain discipline), so a concurrent rewrite cannot key the champions
@@ -106,7 +101,12 @@ object HybridSearch {
     val input = s"$dir/documents.parquet"
     val fp = DerivedCache.fingerprint(Seq(input))
     DerivedCache.tableAt(s, s"$dir#champions", Seq(input), fp) {
-      championsRanked(DocTerms.tableAt(s, dir, fp), k1 = 1.2, b = 0.75)
+      val weights = Bm25.postings(DocTerms.tableAt(s, dir, fp))
+        .withColumn("w", decimalWeight)
+        .select(col("term"), col("doc_id"), col("w"))
+      val champW = Window.partitionBy(col("term"))
+        .orderBy(col("w").desc, col("doc_id"))
+      weights.withColumn("rn", row_number().over(champW))
     }
   }
 
@@ -115,95 +115,31 @@ object HybridSearch {
   def rankedTablePinned(s: SparkSession, dir: String): DataFrame =
     pinScan(rankedTable(s, dir))
 
-  /** One PERSISTED impact-ranked postings table + broadcast query-term
-    * probe set for a multi-depth champion audit (r17). Before this,
-    * q_bm25_pruned's seven sub-lanes (full + three depths + three
-    * certificates) each re-derived the corpus weight pass and only
-    * AQE exchange reuse deduplicated them — and stage reuse is a RACE:
-    * identical exchanges materializing concurrently can both miss the
-    * stage cache, re-executing the whole champion pass inline
-    * (measured at sf1: 6.1 s with every reuse hit, 79–99 s with
-    * misses, same code, same data — the run-to-run bimodality the
-    * retrieval lanes have shown since r15). A persisted table cannot
-    * lose that race. Tracked via OpCaches for the caller's teardown. */
-  def impactAuditParts(tf: DataFrame, k1: Double = 1.2, b: Double = 0.75)
-      : (DataFrame, DataFrame) = {
-    val ranked = OpCaches.track(championsRanked(tf, k1, b)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val qTerms = broadcast(tf.filter(col("is_q"))
-      .select(col("doc_id").as("query_id"), col("term")))
-    (ranked, qTerms)
-  }
-
-  /** Full (unpruned) BM25 top-k from the shared ranked postings —
-    * identical weight algebra and output to [[bm25RetrieveFromTf]]
-    * (weights are query-independent; HybridSearchSpec pins equality),
-    * but served from the one persisted derivation. */
+  /** Full (unpruned) BM25 top-k from the impact-ranked postings
+    * ([[rankedTable]]): the [[topK]] scorer over the stored weights. */
   def bm25RetrieveFromRanked(ranked: DataFrame, qTerms: DataFrame,
-                             k: Int): DataFrame = {
-    val scored = ranked.select(col("term"), col("doc_id"), col("w"))
-      .join(qTerms, "term")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("w")).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("lex_rank", row_number().over(w).cast(LongType))
-      .filter(col("lex_rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("lex_rank"))
-  }
-
-  /** [[bm25RetrieveFromRanked]] PINNED (persisted + OpCaches-tracked):
-    * for callers that join several pruned lanes against the one full
-    * lane — k·|queries| rows, but re-deriving it per reference re-runs
-    * the full-index score join (the r19 small-frame rule: pin the tiny
-    * shared derived frames, not the big index). */
-  def bm25RetrieveFromRankedPinned(ranked: DataFrame, qTerms: DataFrame,
-                                   k: Int): DataFrame =
-    OpCaches.track(bm25RetrieveFromRanked(ranked, qTerms, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** [[bm25RetrieveImpactFromTf]] from the shared ranked postings. */
-  def bm25RetrieveImpactFromRanked(ranked: DataFrame, qTerms: DataFrame,
-                                   k: Int, m: Int): DataFrame = {
-    val champions = ranked.filter(col("rn") <= m)
-      .select(col("term"), col("doc_id"), col("w"))
-    val scored = champions.join(qTerms, "term")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("w")).as("score"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("lex_rank", row_number().over(w).cast(LongType))
-      .filter(col("lex_rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("lex_rank"))
-  }
+                             k: Int): DataFrame =
+    topK(ranked, col("w"), qTerms, k, None)
 
   /** Impact-ordered pruned BM25 retrieval — the 100 TB lexical-lane
-    * shape named in this file's scaladoc, now implemented: per term keep
-    * only the top-`m` postings by BM25 weight (a CHAMPION LIST — the
-    * static-pruning half of the WAND/MaxScore family: Broder et al.
-    * CIKM'03 uses the same upper-bound idea dynamically), so scoring a
-    * query touches at most |query terms|·m postings instead of the full
-    * df — on a web corpus the difference between a stop word's
-    * billion-posting list and 64 rows. The champion cut is
-    * row_number ≤ m per term, which graft's optimizer rewrites to the
-    * bounded TopKPerGroup heaps — building the pruned index never
-    * funnels a hot term through one task's sort.
+    * shape named in this file's scaladoc: per term keep only the top-`m`
+    * postings by BM25 weight (a CHAMPION LIST — the static-pruning half
+    * of the WAND/MaxScore family: Broder et al. CIKM'03 uses the same
+    * upper-bound idea dynamically), so scoring a query touches at most
+    * |query terms|·m postings instead of the full df — on a web corpus
+    * the difference between a stop word's billion-posting list and 64
+    * rows. The champion cut is the table's `rn` ≤ m.
     *
     * Pruning is QUERY-INDEPENDENT (weights depend only on the term's df
     * and the doc's tf/dl — the index is built before queries exist);
     * docs pushed off a champion list simply can't score on that term,
     * which is the approximation q_bm25_pruned audits against the full
-    * lane. Scoring algebra (round-6 decimal weights, decimal sums,
-    * (score desc, doc_id) ranks) is byte-identical to
-    * [[bm25RetrieveFromTf]]. */
-  def bm25RetrieveImpactFromTf(tf: DataFrame, k: Int, m: Int,
-                               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qTerms = broadcast(tf.filter(col("is_q"))
-      .select(col("doc_id").as("query_id"), col("term")))
-    bm25RetrieveImpactFromRanked(championsRanked(tf, k1, b), qTerms, k, m)
-  }
+    * lane. Scoring is the one [[topK]] scorer, so the algebra (round-6
+    * decimal weights, decimal sums, (score desc, doc_id) ranks) is
+    * byte-identical to [[bm25RetrieveFromRanked]]. */
+  def bm25RetrieveImpactFromRanked(ranked: DataFrame, qTerms: DataFrame,
+                                   k: Int, m: Int): DataFrame =
+    topK(ranked, col("w"), qTerms, k, Some(m))
 
   /** MaxScore-style EXACTNESS CERTIFICATE for the champion-pruned
     * retrieval: per query, decide from the pruned index ALONE whether
@@ -222,14 +158,6 @@ object HybridSearch {
     * bit-identically in SQL.
     *
     * Emits one row per query: (query_id, n_candidates, certified). */
-  def impactCertificates(tf: DataFrame, k: Int, m: Int,
-                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val qTerms = broadcast(tf.filter(col("is_q"))
-      .select(col("doc_id").as("query_id"), col("term")))
-    impactCertificatesFromRanked(championsRanked(tf, k1, b), qTerms, k, m)
-  }
-
-  /** [[impactCertificates]] from the shared ranked postings. */
   def impactCertificatesFromRanked(ranked: DataFrame, qTerms: DataFrame,
                                    k: Int, m: Int): DataFrame = {
     val champions = ranked.filter(col("rn") <= m)
@@ -269,9 +197,9 @@ object HybridSearch {
   }
 
   /** MaxScore DYNAMIC pruning (Turtle & Flood IPM'95) — the query-time
-    * half of the WAND/MaxScore family that [[bm25RetrieveImpactFromTf]]'s
-    * static champion lists and [[impactCertificates]]'s bound algebra
-    * were built toward. Batch-declarative formulation (no sequential
+    * half of the WAND/MaxScore family that
+    * [[bm25RetrieveImpactFromRanked]]'s static champion lists and
+    * [[impactCertificatesFromRanked]]'s bound algebra were built toward. Batch-declarative formulation (no sequential
     * heap, so the whole derivation replays in SQL):
     *
     *  1. SEED: score each query over the depth-`mSeed` champion lists
@@ -304,8 +232,9 @@ object HybridSearch {
     * materialized impact-ordered index at 100 TB.
     *
     * This scaladoc describes the whole family: the shared prefix below
-    * (steps 1–3) feeds [[maxScoreAudit]] (step 4 directly) and
-    * [[blockMaxAudit]] (a block-max refinement between 3 and 4).
+    * (steps 1–3) feeds [[maxScoreAuditFromRanked]] (step 4 directly) and
+    * [[blockMaxAuditFromRanked]] (a block-max refinement between 3 and
+    * 4). Both read the materialized [[rankedTable]].
     *
     * The shared MaxScore prefix (seed → τ → essential split →
     * candidate set) — ONE definition, so the two lanes' candidate
@@ -314,19 +243,6 @@ object HybridSearch {
                                    dfreq: DataFrame, qTerms: DataFrame,
                                    tau: DataFrame, lbl: DataFrame,
                                    cands: DataFrame)
-
-  private def maxScoreParts(tf: DataFrame, k: Int, mSeed: Int,
-                            k1: Double, b: Double): MsParts = {
-    // the impact-ranked postings feed FIVE subtrees (ub, seed,
-    // candidate gen, rescore, and the unpruned audit lane) — persist
-    // once, tracked for the caller's releaseAll/bench teardown.
-    // (The serving lanes pass the materialized [[rankedTable]] through
-    // [[maxScorePartsFrom]] instead; this inline+persist form remains
-    // for ad-hoc tf inputs — specs, synthetic corpora.)
-    val ranked = OpCaches.track(championsRanked(tf, k1, b)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    maxScorePartsFrom(ranked, tf, k, mSeed)
-  }
 
   private def maxScorePartsFrom(ranked: DataFrame, tf: DataFrame,
                                 k: Int, mSeed: Int): MsParts = {
@@ -344,8 +260,7 @@ object HybridSearch {
     val ub = ranked.filter(col("rn") === 1)
       .select(col("term"), col("w").as("ub"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val qTerms = broadcast(tf.filter(col("is_q"))
-      .select(col("doc_id").as("query_id"), col("term")))
+    val qTerms = queryTerms(tf)
     // 1. seed pass over the static champion lists
     val seed = ranked.filter(col("rn") <= mSeed).join(qTerms, "term")
       .filter(col("doc_id") =!= col("query_id"))
@@ -375,14 +290,9 @@ object HybridSearch {
     MsParts(ranked, weights, dfreq, qTerms, tau, lbl, cands)
   }
 
-  def maxScoreAudit(tf: DataFrame, k: Int, mSeed: Int,
-                    k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    maxScoreAuditBody(maxScoreParts(tf, k, mSeed, k1, b), k, mSeed)
-
-  /** [[maxScoreAudit]] served from a prebuilt impact-ranked postings
-    * table (the materialized [[rankedTable]]) — identical algebra and
-    * output, no inline weight pass (HybridSearchSpec pins equality with
-    * the tf form). `tf` still supplies the broadcast probe set and per-term
+  /** The MaxScore audit (steps 1–4 above) served from the impact-ranked
+    * postings table (the materialized [[rankedTable]]) — no inline
+    * weight pass. `tf` supplies the broadcast probe set and per-term
     * df. The scan is pinned once per execution ([[pinScan]]): the
     * parts feed 4–5 subtrees, and at sf10 five disk scans of the
     * postings table cost more than one scan + cached reads (measured:
@@ -404,6 +314,34 @@ object HybridSearch {
     OpCaches.track(ranked
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
+  /** n_topk_match per query: the exact rescore's top-k slots whose doc
+    * and rank agree with the unpruned scorer's `full` (query_id, doc_id,
+    * lex_rank) — the exactness of a pruned lane, counted rather than
+    * assumed. `rescore` holds one (query_id, doc_id, w) row per scored
+    * posting. */
+  private[graft] def topkMatch(rescore: DataFrame, full: DataFrame,
+                               k: Int): DataFrame = {
+    val rankW = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("doc_id"))
+    val topk = rescore.groupBy(col("query_id"), col("doc_id"))
+      .agg(sum(col("w")).as("score"))
+      .withColumn("wrank", row_number().over(rankW))
+      .filter(col("wrank") <= k)
+    // RENAME-project the full lane's join keys: both sides descend from
+    // the same pinned `ranked`, and a df("col") === df2("col") condition
+    // on shared lineage resolves to the SAME attribute — Spark warns
+    // "trivially true equals predicate" and the count would silently
+    // become vacuous (every slot "matches"). The aliases mint fresh
+    // attributes, so the join genuinely compares rows; WandSpec pins
+    // non-vacuity with a shifted-rank doctored lane that must match 0.
+    val f = full.select(col("query_id").as("f_qid"), col("doc_id").as("f_did"),
+      col("lex_rank").as("f_rank"))
+    topk.join(f,
+        col("query_id") === col("f_qid") && col("doc_id") === col("f_did") &&
+          col("wrank") === col("f_rank"), "left_semi")
+      .groupBy(col("query_id")).agg(count(lit(1)).as("n_topk_match"))
+  }
+
   private def maxScoreAuditBody(p: MsParts, k: Int, mSeed: Int): DataFrame = {
     val weights = p.weights; val dfreq = p.dfreq; val qTerms = p.qTerms
     val tau = p.tau; val lbl = p.lbl; val cands = p.cands
@@ -415,39 +353,9 @@ object HybridSearch {
     val rescore = OpCaches.track(cands.join(qTerms, Seq("query_id"))
       .join(weights, Seq("term", "doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val wscore = rescore.groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("w")).as("score"))
-    val rankW = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    val topk = wscore.withColumn("wrank", row_number().over(rankW))
-      .filter(col("wrank") <= k)
-    // audit: computed exactness vs the unpruned lane + touched
-    // postings. The unpruned lane scores from the SAME ranked-postings
-    // persist (identical weight algebra to bm25RetrieveFromTf — one
-    // derivation, so the audit and the lane can't drift and the corpus
-    // weight pass runs once, not twice)
-    val fullW = Window.partitionBy(col("query_id"))
-      .orderBy(col("fscore").desc, col("doc_id"))
-    // RENAME-project the full lane's join keys: both sides now descend
-    // from the same persisted `ranked`, and a df("col") === df2("col")
-    // condition on shared lineage resolves to the SAME attribute —
-    // Spark warns "trivially true equals predicate" and the exactness
-    // count would silently become vacuous (every slot "matches"). The
-    // aliases mint fresh attributes, so the join genuinely compares
-    // rows; WandSpec pins non-vacuity with a shifted-rank doctored
-    // lane that must match 0.
-    val full = weights.join(qTerms, "term")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("w")).as("fscore"))
-      .withColumn("lex_rank", row_number().over(fullW))
-      .filter(col("lex_rank") <= k)
-      .select(col("query_id").as("f_qid"), col("doc_id").as("f_did"),
-        col("lex_rank").as("f_rank"))
-    val nExact = topk.join(full,
-        col("query_id") === col("f_qid") && col("doc_id") === col("f_did") &&
-          col("wrank") === col("f_rank"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_topk_match"))
+    // audit: exactness against the unpruned scorer over the same pinned
+    // postings (one weight pass for both), plus the postings touched
+    val nExact = topkMatch(rescore, bm25RetrieveFromRanked(p.ranked, qTerms, k), k)
     val qdf = qTerms.join(dfreq, "term")
     val volumes = qdf.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_terms"),
@@ -492,19 +400,12 @@ object HybridSearch {
     * that is the difference between rescoring everything the essential
     * lists touch and rescoring the few docs whose NEIGHBORHOODS score.
     *
-    * Same audit discipline as [[maxScoreAudit]]: exact top-k by
-    * construction, equality COUNTED against the unpruned lane, the
+    * Same audit discipline as [[maxScoreAuditFromRanked]]: exact top-k
+    * by construction, equality COUNTED against the unpruned lane, the
     * block-pruning ratio reported per query. All bounds are sums of
-    * round-6 decimals — the whole derivation replays in SQL. */
-  def blockMaxAudit(tf: DataFrame, k: Int, mSeed: Int, blockSize: Int,
-                    k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    blockMaxAuditBody(maxScoreParts(tf, k, mSeed, k1, b), k, blockSize)
-
-  /** [[blockMaxAudit]] served from a prebuilt impact-ranked postings
-    * table (the materialized [[rankedTable]]) — identical algebra and
-    * output, no inline weight pass; the scan is pinned once per
-    * execution (see [[maxScoreAuditFromRanked]]). HybridSearchSpec
-    * pins equality with the tf form. */
+    * round-6 decimals — the whole derivation replays in SQL. Served from
+    * the materialized [[rankedTable]], its scan pinned once per
+    * execution (see [[maxScoreAuditFromRanked]]). */
   def blockMaxAuditFromRanked(ranked: DataFrame, tf: DataFrame, k: Int,
                               mSeed: Int, blockSize: Int): DataFrame = {
     val r = pinScan(ranked)
@@ -536,28 +437,7 @@ object HybridSearch {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val rescore = keep.join(qTerms, Seq("query_id"))
       .join(weights, Seq("term", "doc_id"))
-    val wscore = rescore.groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("w")).as("score"))
-    val rankW = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    val topk = wscore.withColumn("wrank", row_number().over(rankW))
-      .filter(col("wrank") <= k)
-    // unpruned lane + rename-projected keys (the maxScoreAudit
-    // shared-lineage lesson; WandSpec pins the pattern non-vacuous)
-    val fullW = Window.partitionBy(col("query_id"))
-      .orderBy(col("fscore").desc, col("doc_id"))
-    val full = weights.join(qTerms, "term")
-      .filter(col("doc_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("w")).as("fscore"))
-      .withColumn("lex_rank", row_number().over(fullW))
-      .filter(col("lex_rank") <= k)
-      .select(col("query_id").as("f_qid"), col("doc_id").as("f_did"),
-        col("lex_rank").as("f_rank"))
-    val nExact = topk.join(full,
-        col("query_id") === col("f_qid") && col("doc_id") === col("f_did") &&
-          col("wrank") === col("f_rank"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_topk_match"))
+    val nExact = topkMatch(rescore, bm25RetrieveFromRanked(p.ranked, qTerms, k), k)
     val nCands = cands.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_candidates"))
     val nKeep = keep.groupBy(col("query_id"))
@@ -575,28 +455,6 @@ object HybridSearch {
         coalesce(col("tau").cast("double"), lit(0.0)).as("tau"),
         coalesce(col("n_topk_match"), lit(0L)).as("n_topk_match"))
       .orderBy(col("query_id"))
-  }
-
-  /** Shared internals of the impact-pruned lanes: per-(term, doc) BM25
-    * weights with each posting's rank inside its term's impact order —
-    * one definition, so the operator and its certificate can't drift. */
-  private def championsRanked(tf: DataFrame, k1: Double,
-                              b: Double): DataFrame = {
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val corpus = tf.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-    val weights = tf.join(dfreq, "term").crossJoin(broadcast(corpus))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w", round(
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))),
-        6).cast(DecimalType(18, 6)))
-      .select(col("term"), col("doc_id"), col("w"))
-    val champW = Window.partitionBy(col("term"))
-      .orderBy(col("w").desc, col("doc_id"))
-    weights.withColumn("rn", row_number().over(champW))
   }
 
   /** RRF-fuse two ranked lanes (query_id, doc_id, <rank col>): a doc

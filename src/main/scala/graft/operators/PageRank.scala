@@ -16,10 +16,12 @@ import org.apache.spark.sql.functions._
   *    50M edges; the cap is the same bounded-hot-group rule the
   *    blocking/banding operators carry (counted with one aggregate,
   *    replayed by the oracle).
-  *  - each iteration is one join (ranks → edge sources) + one
+  *  - the loop reads (src, dst, outdeg) transition rows
+  *    ([[transitionsOf]], materialized by CoPurchase.transitionFull);
+  *    each iteration is one join (ranks → edge sources) + one
   *    aggregation (sum of contributions per destination): shuffle cost
-  *    is edge-linear, and at index scale the adjacency would be
-  *    pre-partitioned by src so the join is co-located.
+  *    is edge-linear, and the transitions are pinned partitioned by src
+  *    so the join is co-located.
   *
   * Determinism: ranks live in integer MICRO-UNITS (total mass 10^12),
   * contributions use floor division by out-degree, and the damping step
@@ -62,9 +64,7 @@ object PageRank {
     * table (CoPurchase.transitionFull; r17, VERDICT r16 ask 6): the
     * pagerank and ppr lanes re-derived the degree table and re-joined
     * it inside every query execution (23.6 s / 17.9 s cold at sf1),
-    * which is index-build work, not query work. outdeg here is the
-    * same groupBy-count [[ranks]] computed inline, so the arithmetic
-    * downstream is bit-identical. */
+    * which is index-build work, not query work. */
   def transitionsOf(edges: DataFrame): DataFrame = {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     edges.join(deg, "src").select(col("src"), col("dst"), col("outdeg"))
@@ -96,7 +96,8 @@ object PageRank {
     * (settled runs): 142.3 s → 41.3 s, SCALE.md "sf10 confirmation
     * sweep on final r18 code".
     * Values unchanged — partitioning never affects the exact integer
-    * arithmetic (PageRankSpec pins the forms equal). */
+    * arithmetic (PageRankSpec pins the ranks to a brute-force integer
+    * replay, and equal under repartitioned inputs). */
   private def pinnedBySrc(trans: DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     OpCaches.track(
@@ -104,10 +105,12 @@ object PageRank {
         .persist(StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** One damped power iteration over transition rows — the shared loop
-    * body of [[ranksFromTransitions]] and
-    * [[personalizedFromTransitions]] (and, through them, arithmetic-
-    * identical to the inline [[ranks]]/[[personalized]] loops). */
+  /** The damped power iteration over transition rows — the one loop,
+    * shared by [[ranksFromTransitions]] and
+    * [[personalizedFromTransitions]]. `div` (not `/`): Spark's `/` on
+    * longs is DOUBLE true division, and a float quotient truncated back
+    * to long can differ from exact integer division by 1 — enough to
+    * break bit-parity with the oracle's `//`. */
   private def iterate(trans: DataFrame, r0: DataFrame, iterations: Int)
                      (damp: Column => Column): DataFrame = {
     var r = r0
@@ -124,43 +127,13 @@ object PageRank {
     r
   }
 
-  /** Once-per-JVM JIT pre-warm of the iteration's generated classes
-    * (r17; VERDICT r16 ask 5). MEASURED mechanism: the first execution
-    * of the rank loop at 10× data pays ~150 s of HotSpot compiler time
-    * while its whole-stage-codegen classes run interpreted over
-    * full-size rows (fresh-JVM probe: 66.7 s run1 / 7.5 s run2, the
-    * jit_ms column naming the gap), and the classes are plan-shape-
-    * derived, not data-derived — so one cheap iteration over a 1-in-11
-    * slice compiles and HotSpot-promotes the SAME classes (codegen
-    * class names are AQE-numbering-stable since
-    * spark.sql.codegen.useIdInClassName=false) before the real loop
-    * touches full-size data. Charged to BuildMeter: it is once-per-JVM
-    * warm-up work, exactly like a DerivedCache build. */
-  private val iterPrewarmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def prewarmIteration(trans: DataFrame): Unit =
-    if (!iterPrewarmed.getAndSet(true)) BuildMeter.time {
-      // the slice rides pinnedBySrc too (r18): the real loop now joins
-      // against an InMemoryTableScan, and a pre-warm over a parquet
-      // scan would compile the WRONG generated classes for the hot
-      // join stages
-      val slice = pinnedBySrc(trans.filter(col("src") % 11 === 0))
-      val deg = slice.select(col("src"), col("outdeg")).distinct()
-      val r0 = deg.select(col("src").as("node"),
-        lit(TotalMass / 1000L).as("rank_micro"))
-      iterate(slice, r0, 1)(_ => lit(0L))
-        .write.format("noop").mode("overwrite").save()
-      slice.unpersist(blocking = false)
-      OpCaches.untrack(slice)
-    }
-
-  /** [[ranks]] over PRE-BUILT (src, dst, outdeg) transition rows — the
-    * serving shape when the transition table lives materialized
-    * (CoPurchase.transitionFull): every iteration starts from a plain
+  /** Fixed-iteration integer PageRank over (src, dst, outdeg)
+    * transition rows ([[transitionsOf]]; the lanes read the materialized
+    * CoPurchase.transitionFull): every iteration starts from a plain
     * scan (join ranks, aggregate), no degree derivation inside the
-    * query. Same integer micro-units and floor divisions as [[ranks]],
-    * so the ranks are bit-identical (PageRankSpec pins it). */
+    * query. Returns (node, rank_micro); PageRankSpec pins it to a
+    * brute-force integer replay. */
   def ranksFromTransitions(trans: DataFrame, iterations: Int): DataFrame = {
-    prewarmIteration(trans)
     val transP = pinnedBySrc(trans)
     val deg = degFromTransitions(transP)
     val n = deg.count() // every node has out-edges (symmetric graph)
@@ -170,11 +143,15 @@ object PageRank {
     iterate(transP, r0, iterations)(_ => base)
   }
 
-  /** [[personalized]] over PRE-BUILT transition rows — bit-identical
-    * ranks (PageRankSpec pins it). */
+  /** Personalized PageRank: teleport mass returns only to the SEED set
+    * (nodes ≡ 0 mod `seedMod` — a predicate the SQL oracle replays
+    * verbatim), so rank concentrates around the seeds — the
+    * similar-items / related-users form recommenders actually run
+    * (random walk with restart). Same integer micro-unit arithmetic and
+    * loop as [[ranksFromTransitions]]; non-seed nodes start at 0 and
+    * receive only propagated mass. Returns (node, rank_micro). */
   def personalizedFromTransitions(trans: DataFrame, seedMod: Long,
                                   iterations: Int): DataFrame = {
-    prewarmIteration(trans)
     val transP = pinnedBySrc(trans)
     val deg = degFromTransitions(transP)
     val nSeeds = deg.filter(col("src") % seedMod === 0).count()
@@ -186,77 +163,5 @@ object PageRank {
     val r0 = deg.select(col("src").as("node"),
       seedCase(col("src"), init).as("rank_micro"))
     iterate(transP, r0, iterations)(node => seedCase(node, base))
-  }
-
-  /** Personalized PageRank: teleport mass returns only to the SEED set
-    * (nodes ≡ 0 mod `seedMod` — a predicate the SQL oracle replays
-    * verbatim), so rank concentrates around the seeds — the
-    * similar-items / related-users form recommenders actually run
-    * (random walk with restart). Same integer micro-unit arithmetic and
-    * edge-linear iteration shape as [[ranks]]; non-seed nodes start at
-    * 0 and receive only propagated mass. Returns (node, rank_micro). */
-  def personalized(edges: DataFrame, seedMod: Long, iterations: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e = OpCaches.track(edges.persist(StorageLevel.MEMORY_AND_DISK))
-    val deg = OpCaches.track(
-      e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val nSeeds = deg.filter(col("src") % seedMod === 0).count()
-    require(nSeeds > 0, s"no seeds: no node is 0 mod $seedMod")
-    val init = lit(TotalMass / nSeeds)
-    val base = lit(15L * (TotalMass / nSeeds) / 100L)
-    def seedCase(node: Column, v: Column): Column =
-      when(node % seedMod === 0, v).otherwise(lit(0L))
-    val ed = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-    var r = deg.select(col("src").as("node"),
-      seedCase(col("src"), init).as("rank_micro"))
-    for (_ <- 1 to iterations) {
-      val contrib = ed
-        .join(r.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("rank_micro div outdeg").as("c"))
-      r = contrib.groupBy(col("node"))
-        .agg(sum(col("c")).as("s"))
-        .select(col("node"),
-          (seedCase(col("node"), base) + expr("(85 * s) div 100"))
-            .as("rank_micro"))
-    }
-    r
-  }
-
-  /** Fixed-iteration integer PageRank; returns (node, rank_micro). */
-  def ranks(edges: DataFrame, iterations: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val e = OpCaches.track(edges.persist(StorageLevel.MEMORY_AND_DISK))
-    val deg = OpCaches.track(
-      e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val n = deg.count() // every node has out-edges (symmetric graph)
-    val init = lit(TotalMass / n)
-    val base = lit(15L * (TotalMass / n) / 100L)
-    // the edge⋈degree join is loop-invariant but deliberately NOT
-    // persisted: the identical subtree appears once per iteration and
-    // Spark's ReuseExchange already dedups it inside the single job,
-    // while an explicit persist pays materialization + cache pressure
-    // on an edge-sized table (measured 25% slower at 10× bench scale)
-    val ed = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-    var r = deg.select(col("src").as("node"), init.as("rank_micro"))
-    for (_ <- 1 to iterations) {
-      // `div` (not `/`): Spark's `/` on longs is DOUBLE true division,
-      // and a float quotient truncated back to long can differ from
-      // exact integer division by 1 — enough to break bit-parity with
-      // the oracle's `//`. `div` stays in exact long arithmetic.
-      val contrib = ed
-        .join(r.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("rank_micro div outdeg").as("c"))
-      r = contrib.groupBy(col("node"))
-        .agg(sum(col("c")).as("s"))
-        .select(col("node"),
-          (base + expr("(85 * s) div 100")).as("rank_micro"))
-    }
-    r
   }
 }

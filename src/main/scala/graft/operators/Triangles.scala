@@ -211,29 +211,11 @@ object Triangles {
     * plan engages automatically, same result. */
   val broadcastableAdjElems: Long = 50000000L
 
-  /** Once-per-JVM JIT pre-warm of the merge plan's generated classes
-    * (r17; same mechanism as PageRank.prewarmIteration, measured the
-    * same way: the lane's first sf1 execution ran its 411 M-comparison
-    * intersect stage interpreted — 129 s run1 / 7.5 s run2 in a fresh
-    * JVM, ~144 s of HotSpot compiler time in the jit_ms column). One
-    * merge pass over a 1-in-11 node slice compiles the same classes
-    * (class names are AQE-numbering-stable) against a few thousand
-    * rows. Charged to BuildMeter like the index builds. */
-  private val mergePrewarmed = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def prewarmMerge(oriented: DataFrame, adj: DataFrame,
-                           broadcastAdj: Boolean): Unit =
-    if (!mergePrewarmed.getAndSet(true)) graft.operators.BuildMeter.time {
-      perNodeMergeOn(oriented.filter(col("u") % 11 === 0),
-          adj.filter(col("u") % 11 === 0), broadcastAdj)
-        .write.format("noop").mode("overwrite").save()
-    }
-
   /** [[perNodeMergeOn]] with the broadcast decision taken from the
     * oriented edge count (= total adjacency elements): one
     * metadata-only count on the materialized parquet. */
   def perNodeMergeAuto(oriented: DataFrame, adj: DataFrame): DataFrame = {
     val broadcastAdj = oriented.count() <= broadcastableAdjElems
-    prewarmMerge(oriented, adj, broadcastAdj)
     perNodeMergeOn(oriented, adj, broadcastAdj)
   }
 

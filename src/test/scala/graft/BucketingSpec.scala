@@ -56,25 +56,29 @@ class BucketingSpec extends AnyFunSuite with SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val bucketed = operators.PageRank.ranks(
-        spark.table("edges_bucketed"), iterations = 1)
-      bucketed.collect()
-      val pB = bucketed.queryExecution.executedPlan.toString
-      val exB = pB.linesIterator.count(_.contains("Exchange hashpartitioning"))
-      val plain = operators.PageRank.ranks(
-        edges.localCheckpoint(true), iterations = 1)
-      plain.collect()
-      val pP = plain.queryExecution.executedPlan.toString
-      val exP = pP.linesIterator.count(_.contains("Exchange hashpartitioning"))
-      // one round over the bucketed adjacency needs at most the rank-side
-      // and aggregation exchanges (2); the degree agg and the edge⋈degree
-      // join ride the bucket layout. The unbucketed adjacency pays MORE.
-      assert(exB <= 2, s"bucketed round shuffles the edge side ($exB):\n$pB")
+      // the transition build (degree aggregate + edge⋈degree join) that
+      // feeds the PageRank iteration rides the bucket layout: no
+      // exchange over the bucketed adjacency, while the unbucketed one
+      // shuffles for both
+      def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
+        df.collect()
+        df.queryExecution.executedPlan.toString.linesIterator
+          .count(_.contains("Exchange hashpartitioning"))
+      }
+      val bucketed = operators.PageRank.transitionsOf(spark.table("edges_bucketed"))
+      val plain = operators.PageRank.transitionsOf(edges.localCheckpoint(true))
+      val exB = exchanges(bucketed)
+      val exP = exchanges(plain)
+      assert(exB == 0, s"bucketed transition build shuffles the edge side ($exB):\n" +
+        bucketed.queryExecution.executedPlan)
       assert(exP > exB,
         s"unbucketed plan should pay extra exchanges (plain=$exP bucketed=$exB)")
       // layout must never change values (integer arithmetic)
-      assert(bucketed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        plain.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      def rankBag(trans: org.apache.spark.sql.DataFrame) = bag(
+        operators.PageRank.ranksFromTransitions(trans, iterations = 1).collect()
+          .map(r => (r.getLong(0), r.getLong(1))))
+      assert(rankBag(bucketed) == rankBag(plain))
+      operators.OpCaches.releaseAll()
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The materialized doc-term table must be row-identical to the inline
   * derivation (parquet round-trips long/string exactly), and the FromTf
-  * consumer paths must equal their inline forms. */
+  * consumer paths must equal their raw-text forms. */
 class DocTermsSpec extends AnyFunSuite with SparkSpec {
 
   private def key(df: org.apache.spark.sql.DataFrame) =
@@ -51,13 +51,17 @@ class DocTermsSpec extends AnyFunSuite with SparkSpec {
 
   test("BM25 retrieval from the derived table equals the raw-text lane") {
     import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val a = operators.HybridSearch.bm25Retrieve(
-        docs, $"text", $"doc_id", $"doc_id" < 8, k = 10)
-      .collect().map(_.toSeq).toSet
-    val b = operators.HybridSearch.bm25RetrieveFromTf(
+    // the raw-text side is a plain-Scala tokenize + brute-force BM25
+    // (Bm25Reference), independent of the doc-term build
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+      .as[(Long, String)].collect().toSeq
+    val ps = Bm25Reference.postingsOfText(docs)
+    val queries = ps.map(_.doc).distinct.filter(_ < 8).sorted
+    val expected = bag(Bm25Reference.topK(Bm25Reference.weights(ps), queries, 10,
+      _ => true).map(t => Seq(t._1, t._2, t._3)))
+    val got = bag(operators.HybridSearch.bm25RetrieveFromTf(
         DocTerms.table(spark, sf).withColumn("is_q", $"doc_id" < 8), k = 10)
-      .collect().map(_.toSeq).toSet
-    assert(a == b)
+      .collect().toSeq.map(_.toSeq))
+    assert(expected.nonEmpty && got == expected)
   }
 }

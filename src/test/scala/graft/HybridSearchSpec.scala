@@ -1,15 +1,25 @@
 package graft
 
-import graft.operators.{HybridSearch, Similarity}
+import graft.operators.{DocTerms, HybridSearch, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class HybridSearchSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val lex = {
-    import spark.implicits._
-    HybridSearch.bm25Retrieve(
-      Tables.documents(spark, sf), $"text", $"doc_id", $"doc_id" < 8, k = 10)
+  /** The doc-term table of `dir` with the probe docs (doc_id < nQ). */
+  private def probed(dir: String, nQ: Int): DataFrame =
+    DocTerms.table(spark, dir).withColumn("is_q", col("doc_id") < nQ)
+
+  private lazy val lex = HybridSearch.bm25RetrieveFromTf(probed(sf, 8), k = 10)
+
+  private def rows(df: DataFrame): Map[Seq[Any], Int] =
+    bag(df.collect().toSeq.map(_.toSeq))
+
+  /** The brute-force weights of `sf` and its probe doc ids. */
+  private lazy val reference = {
+    val ps = Bm25Reference.postingsOf(DocTerms.table(spark, sf))
+    (Bm25Reference.weights(ps), ps.map(_.doc).distinct.filter(_ < 8).sorted)
   }
 
   private lazy val vec = {
@@ -92,99 +102,97 @@ class HybridSearchSpec extends AnyFunSuite with SparkSpec {
   test("impact certificate: a rare dominant term certifies a CUT index non-vacuously") {
     import spark.implicits._
     // query 0 carries 'zzz' (rare, high idf) and 'common' (everywhere);
-    // docs 1-3 hold zzz at descending tf, docs 4-20 only 'common'. At
+    // docs 1-3 hold zzz at descending tf, docs 4-20 only 'common' (every
+    // doc but the query is padded to 5 tokens with its own filler). At
     // m=5 the common list is CUT (df=18 > 5) yet the zzz top-2 towers
     // over every bound, so the certificate must fire non-vacuously.
-    val tf = (Seq(
-      (0L, "zzz", 1L, 2L, true), (0L, "common", 1L, 2L, true),
-      (1L, "zzz", 5L, 5L, false), (2L, "zzz", 3L, 5L, false),
-      (3L, "zzz", 1L, 5L, false)) ++
-      (4L to 20L).map(i => (i, "common", 1L, 5L, false)))
-      .toDF("doc_id", "term", "tf", "dl", "is_q")
-    val cert = HybridSearch.impactCertificates(tf, k = 2, m = 5)
+    def pad(i: Long, n: Int) = (1 to n).map(j => s"pad${i}x$j")
+    val docs = (Seq(
+      (0L, "zzz common"),
+      (1L, Seq.fill(5)("zzz").mkString(" ")),
+      (2L, (Seq.fill(3)("zzz") ++ pad(2, 2)).mkString(" ")),
+      (3L, ("zzz" +: pad(3, 4)).mkString(" "))) ++
+      (4L to 20L).map(i => (i, ("common" +: pad(i, 4)).mkString(" "))))
+      .toDF("doc_id", "text").withColumn("lang", lit("en"))
+    val dir = java.nio.file.Files.createTempDirectory("impact-cert").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    val ranked = HybridSearch.rankedTable(spark, dir)
+    val qT = HybridSearch.queryTerms(probed(dir, 1))
+    val cert = HybridSearch.impactCertificatesFromRanked(ranked, qT, k = 2, m = 5)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(cert(0L), s"dominant-term top-2 not certified: $cert")
     // vacuity check: the common list IS cut at m=5, so ub_total > 0 —
     // certification came from the bound argument, not a complete index
-    val full = HybridSearch.bm25RetrieveFromTf(tf, k = 2)
+    val full = HybridSearch.bm25RetrieveFromRanked(ranked, qT, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pruned = HybridSearch.bm25RetrieveImpactFromTf(tf, k = 2, m = 5)
+    val pruned = HybridSearch.bm25RetrieveImpactFromRanked(ranked, qT, k = 2, m = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pruned == full, "certified top-k set differs from the full index")
+    assert(full == Set((0L, 1L), (0L, 2L)), s"unexpected top-2: $full")
   }
 
-  test("shared-ranked (persisted) forms are row-identical to the per-call forms") {
-    import spark.implicits._
-    // r17: q_bm25_pruned serves all sub-lanes from ONE persisted
-    // champion derivation (impactAuditParts) — every FromRanked form
-    // must reproduce its per-call counterpart exactly
-    val dt = graft.operators.DocTerms.table(spark, sf)
-      .withColumn("is_q", $"doc_id" < 8)
-    val (ranked, qT) = HybridSearch.impactAuditParts(dt)
-    // multisets (row -> count): a duplicated or dropped row must fail
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+  test("every BM25 scorer entry equals a brute-force top-k") {
+    // the inline-weight lane (q_hybrid_search), the full scorer over the
+    // materialized champions table, and its champion depths — one
+    // scorer, pinned to a plain-Scala reference rather than to itself
+    val (w, queries) = reference
+    val ranks = Bm25Reference.impactRanks(w)
+    def expect(keep: ((String, Long)) => Boolean) =
+      bag(Bm25Reference.topK(w, queries, 10, keep).map(t => Seq(t._1, t._2, t._3)))
+    val ranked = HybridSearch.rankedTable(spark, sf)
+    val qT = HybridSearch.queryTerms(probed(sf, 8))
+    assert(expect(_ => true).nonEmpty)
+    assert(rows(lex) == expect(_ => true), "inline weights")
     assert(rows(HybridSearch.bm25RetrieveFromRanked(ranked, qT, k = 10)) ==
-      rows(HybridSearch.bm25RetrieveFromTf(dt, k = 10)))
-    Seq(32, 600).foreach { m =>
+      expect(_ => true), "ranked table")
+    Seq(2, 32, 600).foreach { m =>
       assert(rows(HybridSearch.bm25RetrieveImpactFromRanked(ranked, qT, 10, m)) ==
-        rows(HybridSearch.bm25RetrieveImpactFromTf(dt, 10, m)), s"impact m=$m")
-      assert(rows(HybridSearch.impactCertificatesFromRanked(ranked, qT, 10, m)) ==
-        rows(HybridSearch.impactCertificates(dt, 10, m)), s"cert m=$m")
+        expect(key => ranks(key) <= m), s"champion depth m=$m")
     }
-    graft.operators.OpCaches.releaseAll()
   }
 
   test("materialized champions table serves every retrieval lane row-identically") {
-    import spark.implicits._
-    // r19: q_bm25_pruned/q_wand/q_bmw serve their index side from ONE
-    // DerivedCache parquet table (HybridSearch.rankedTable). Pin (a)
-    // the table itself row-identical to the inline champion derivation
-    // (decimal weights and ranks survive the parquet round-trip), and
-    // (b) each audit's FromRanked form over the materialized table
-    // identical to its inline-tf counterpart.
-    val dt = graft.operators.DocTerms.table(spark, sf)
-      .withColumn("is_q", $"doc_id" < 8)
+    // the champions table (q_bm25_pruned/q_wand/q_bmw's one index
+    // build) equals the brute-force weights and impact ranks — decimal
+    // weights and ranks survive the parquet round-trip — and both
+    // dynamic-pruning audits served from it reach the full top-k in
+    // every slot
+    val (w, queries) = reference
+    val ranks = Bm25Reference.impactRanks(w)
     val mat = HybridSearch.rankedTable(spark, sf)
-    val (inlineRanked, qT) = HybridSearch.impactAuditParts(dt)
-    // multisets (row -> count): a duplicated or dropped row must fail
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
-    assert(rows(mat) == rows(inlineRanked), "materialized != inline champions")
-    assert(rows(HybridSearch.bm25RetrieveFromRanked(mat, qT, k = 10)) ==
-      rows(HybridSearch.bm25RetrieveFromRanked(inlineRanked, qT, k = 10)))
-    assert(rows(HybridSearch.maxScoreAuditFromRanked(mat, dt, k = 10, mSeed = 64)) ==
-      rows(HybridSearch.maxScoreAudit(dt, k = 10, mSeed = 64)), "maxScore")
-    assert(rows(HybridSearch.blockMaxAuditFromRanked(mat, dt, k = 10,
-        mSeed = 64, blockSize = 64)) ==
-      rows(HybridSearch.blockMaxAudit(dt, k = 10, mSeed = 64,
-        blockSize = 64)), "blockMax")
+    assert(rows(mat) == bag(w.toSeq.map { case ((t, d), v) =>
+      Seq(t, d, v.bigDecimal, ranks((t, d)).toInt) }))
+    val fullSize = Bm25Reference.topK(w, queries, 10, _ => true)
+      .groupBy(_._1).map { case (q, xs) => q -> xs.size.toLong }
+    val dt = probed(sf, 8)
+    def exact(audit: DataFrame) = audit.collect()
+      .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("n_topk_match")).toMap
+    assert(exact(HybridSearch.maxScoreAuditFromRanked(mat, dt, k = 10, mSeed = 64)) ==
+      fullSize, "maxScore")
+    assert(exact(HybridSearch.blockMaxAuditFromRanked(mat, dt, k = 10,
+      mSeed = 64, blockSize = 64)) == fullSize, "blockMax")
     graft.operators.OpCaches.releaseAll()
   }
 
   test("impact certificate: complete champion lists certify every query vacuously") {
-    import spark.implicits._
-    val dt = graft.operators.DocTerms.table(spark, sf)
-      .withColumn("is_q", $"doc_id" < 8)
     // m >= corpus size: every list is complete, ub_total = 0 everywhere
-    val cert = HybridSearch.impactCertificates(dt, k = 10, m = 100000)
+    val cert = HybridSearch.impactCertificatesFromRanked(
+        HybridSearch.rankedTable(spark, sf), HybridSearch.queryTerms(probed(sf, 8)),
+        k = 10, m = 100000)
       .collect()
     assert(cert.nonEmpty && cert.forall(_.getBoolean(2)),
       s"vacuous pruning not certified: ${cert.filterNot(_.getBoolean(2)).take(3).toSeq}")
   }
 
   test("impact certificate is SOUND on real data: certified => pruned set equals full set") {
-    import spark.implicits._
-    val dt = graft.operators.DocTerms.table(spark, sf)
-      .withColumn("is_q", $"doc_id" < 8)
-    val full = HybridSearch.bm25RetrieveFromTf(dt, k = 10)
-      .collect().groupBy(_.getLong(0))
+    val ranked = HybridSearch.rankedTable(spark, sf)
+    val qT = HybridSearch.queryTerms(probed(sf, 8))
+    def sets(df: DataFrame) = df.collect().groupBy(_.getLong(0))
       .view.mapValues(_.map(_.getLong(1)).toSet).toMap
+    val full = sets(HybridSearch.bm25RetrieveFromRanked(ranked, qT, k = 10))
     Seq(32, 128, 600).foreach { m =>
-      val pruned = HybridSearch.bm25RetrieveImpactFromTf(dt, k = 10, m = m)
-        .collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(_.getLong(1)).toSet).toMap
-      HybridSearch.impactCertificates(dt, k = 10, m = m).collect()
+      val pruned = sets(HybridSearch.bm25RetrieveImpactFromRanked(ranked, qT, 10, m))
+      HybridSearch.impactCertificatesFromRanked(ranked, qT, k = 10, m = m).collect()
         .filter(_.getBoolean(2)).foreach { r =>
           val q = r.getLong(0)
           assert(pruned.get(q) == full.get(q),

@@ -3,24 +3,28 @@ package graft
 import graft.operators.OpCaches
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every cache a near-dup or retrieval lane persists is registered with
-  * OpCaches: after the lane runs, `OpCaches.releaseAll()` ALONE leaves
-  * the registry and the block manager empty. No `clearCache` and no
+/** Every cache a near-dup, retrieval, graph or pinned-aggregate lane
+  * persists is registered with OpCaches: after the lane runs,
+  * `OpCaches.releaseAll()` ALONE leaves the registry and the block
+  * manager empty. No `clearCache` and no
   * `getPersistentRDDs` sweep afterwards — those free whatever anyone
   * persisted and would hide a persist that bypasses the registry. */
 class LaneLeakSpec extends AnyFunSuite with SparkSpec {
 
-  /** The lanes that reach the clique collapse, the retrieval trio, and
-    * the iterative graph lanes (components, BFS, k-core, label
-    * propagation). */
+  /** The lanes that reach the clique collapse, the BM25 retrieval
+    * family, the iterative graph lanes (components, BFS, k-core, label
+    * propagation, PageRank) and the two lanes that pin a shared
+    * aggregate (q_ann_tuned's candidate counts, q_forecast_backtest's
+    * sorted history). */
   private val lanes = Seq(
     "q_dedup_minhash", "q_split_leakage", "q_dedup_clusters",
     "q_dedup_keep_best", "q_dedup_incremental", "q_containment",
     "q_dedup_simhash", "q_image_dedup", "q_audio_dedup",
     "q_dedup_embedding", "q_semantic_dedup", "q_allpairs",
     "q_allpairs_compact", "q_minhash_recall",
-    "q_bm25_pruned", "q_wand", "q_bmw",
-    "q_graph_components", "q_bfs_hops", "q_kcore", "q_communities")
+    "q_bm25", "q_bm25_pruned", "q_wand", "q_bmw", "q_hybrid_search",
+    "q_graph_components", "q_bfs_hops", "q_kcore", "q_communities",
+    "q_pagerank", "q_ppr", "q_ann_tuned", "q_forecast_backtest")
 
   for (lane <- lanes) test(s"$lane: OpCaches.releaseAll frees every cache it persisted") {
     // start from an empty block manager, whatever ran before

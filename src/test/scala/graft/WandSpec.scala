@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** MaxScore dynamic pruning (HybridSearch.maxScoreAudit): the batch
+/** MaxScore dynamic pruning (HybridSearch.maxScoreAuditFromRanked): the batch
   * formulation must return the EXACT full-index top-k (the τ lower
   * bound + essential-split invariant), while genuinely pruning on a
   * skewed corpus. The driver's q_wand hash-checks the full derivation
@@ -24,13 +24,23 @@ class WandSpec extends AnyFunSuite with SparkSpec {
     docs.toDF("doc_id", "lang", "text")
   }
 
-  private def tfOf(df: org.apache.spark.sql.DataFrame) =
-    operators.DocTerms.of(df).withColumn("is_q", $"doc_id" < 4)
+  /** `docs` written as a data dir: its materialized champions table
+    * (the lanes' index) and its doc-term table with probes doc_id < 4. */
+  private def indexOf(docs: org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("wand-spec").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    (operators.HybridSearch.rankedTable(spark, dir),
+      operators.DocTerms.table(spark, dir).withColumn("is_q", $"doc_id" < 4))
+  }
+
+  private def maxScore(docs: org.apache.spark.sql.DataFrame) = {
+    val (ranked, tf) = indexOf(docs)
+    operators.HybridSearch.maxScoreAuditFromRanked(ranked, tf, k = 10, mSeed = 16)
+      .collect()
+  }
 
   test("pruned top-k equals the unpruned lane, slot for slot") {
-    val tf = tfOf(corpus(300))
-    val audit = operators.HybridSearch.maxScoreAudit(tf, k = 10, mSeed = 16)
-      .collect()
+    val audit = maxScore(corpus(300))
     assert(audit.length === 4)
     audit.foreach { r =>
       assert(r.getAs[Long]("n_topk_match") === 10L,
@@ -39,9 +49,7 @@ class WandSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the essential split prunes: fewer candidates than corpus, fewer postings than full") {
-    val tf = tfOf(corpus(300))
-    val audit = operators.HybridSearch.maxScoreAudit(tf, k = 10, mSeed = 16)
-      .collect()
+    val audit = maxScore(corpus(300))
     // τ must exist (>= 10 seed candidates) and at least one query must
     // classify some term non-essential on this skewed geometry
     assert(audit.forall(_.getAs[Double]("tau") > 0.0))
@@ -71,9 +79,10 @@ class WandSpec extends AnyFunSuite with SparkSpec {
       (200L to 299L).map(i => (i, "en",
         (0 until 8).map(j => s"junk${(i + j) % 40}").mkString(" ")))
     ).toDF("doc_id", "lang", "text")
-    val tf = tfOf(docs)
+    val (ranked, tf) = indexOf(docs)
     val audit = operators.HybridSearch
-      .blockMaxAudit(tf, k = 10, mSeed = 16, blockSize = 16).collect()
+      .blockMaxAuditFromRanked(ranked, tf, k = 10, mSeed = 16, blockSize = 16)
+      .collect()
     assert(audit.length === 4)
     audit.foreach { r =>
       // dropping strictly-below-τ block-bounds is SAFE: the top-k must
@@ -90,34 +99,32 @@ class WandSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("the exactness join is not vacuous: a shifted-rank lane matches 0 slots") {
-    // Reproduces the shared-lineage hazard the audit's rename-projection
-    // guards against: both join sides descend from ONE cached frame, so
-    // a df("c") === df2("c") condition resolves to the same attribute
-    // and becomes trivially true (Spark warns; every slot "matches").
-    // With the rename-projection the join must genuinely compare rows —
-    // a doctored lane whose ranks are shifted by one matches NOTHING.
+    // Reproduces the shared-lineage hazard HybridSearch.topkMatch's
+    // rename-projection guards against: both sides descend from ONE
+    // frame, so a df("c") === df2("c") condition would resolve to the
+    // same attribute and become trivially true (Spark warns; every slot
+    // "matches"). The count must genuinely compare rows — a doctored
+    // full lane whose ranks are shifted by one matches NOTHING.
     val base = (1L to 20L).toDF("doc_id")
       .withColumn("query_id", $"doc_id" % 4)
-      .withColumn("rank", $"doc_id" % 5 + 1)
-    val t = base.select($"query_id", $"doc_id", $"rank".as("wrank"))
-    val doctored = base.select($"query_id".as("f_qid"), $"doc_id".as("f_did"),
-      ($"rank" + 1).as("f_rank"))
-    val matched = t.join(doctored,
-      $"query_id" === $"f_qid" && $"doc_id" === $"f_did" &&
-        $"wrank" === $"f_rank", "left_semi")
-    assert(matched.count() === 0L,
+    // one posting per (query, doc), weight falling with doc_id: the
+    // rescore ranks each query's docs in doc_id order
+    val rescore = base.select($"query_id", $"doc_id",
+      (lit(100L) - $"doc_id").cast("decimal(18,6)").as("w"))
+    val byDoc = org.apache.spark.sql.expressions.Window
+      .partitionBy($"query_id").orderBy($"doc_id")
+    val full = base.select($"query_id", $"doc_id",
+      row_number().over(byDoc).cast("long").as("lex_rank"))
+    def matched(f: org.apache.spark.sql.DataFrame): Long =
+      operators.HybridSearch.topkMatch(rescore, f, k = 10)
+        .agg(coalesce(sum($"n_topk_match"), lit(0L))).head().getLong(0)
+    assert(matched(full.withColumn("lex_rank", $"lex_rank" + 1)) === 0L,
       "shifted ranks must not match — the join compares rows, not lineage")
-    val same = base.select($"query_id".as("f_qid"), $"doc_id".as("f_did"),
-      $"rank".as("f_rank"))
-    assert(t.join(same,
-      $"query_id" === $"f_qid" && $"doc_id" === $"f_did" &&
-        $"wrank" === $"f_rank", "left_semi").count() === 20L)
+    assert(matched(full) === 20L)
   }
 
   test("degenerate corpus (fewer docs than k): no τ, no pruning, still exact") {
-    val tf = tfOf(corpus(8))
-    val audit = operators.HybridSearch.maxScoreAudit(tf, k = 10, mSeed = 16)
-      .collect()
+    val audit = maxScore(corpus(8))
     audit.foreach { r =>
       assert(r.getAs[Double]("tau") === 0.0)
       assert(r.getAs[Long]("n_essential") === r.getAs[Long]("n_terms"))
