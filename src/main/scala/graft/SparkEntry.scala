@@ -771,8 +771,9 @@ object SparkEntry {
       "vec_id", "embedding", k = 8)
   })
 
-  /** q_ann_tuned's models — the TUNED operating points the AnnTune sweep
-    * selected (SCALE.md "ANN recall-vs-cost frontier"): a FINER 64-cell
+  /** q_ann_tuned's models — the TUNED operating points of the
+    * recall-vs-cost sweep (SCALE.md "Round 12: the ANN recall-vs-cost
+    * frontier"): a FINER 64-cell
     * coarse quantizer (recall is driven by the nProbe/nCells fraction,
     * so more cells buy the same recall at a smaller scan — nCells should
     * track ~sqrt(corpus) in production) and a finer m=8 product
@@ -789,6 +790,38 @@ object SparkEntry {
   private val ivf128Model = new ModelMemo("ivf128")((s, d) =>
     operators.IvfAnn.train(Tables.embeddings(s, d), "vec_id", "embedding",
       k = 128))
+
+  /** The ANN audits' ground truth: the brute-force top-5 (query_id,
+    * cand_id, rank) of the probe queries `q`, pinned once (50 rows) and
+    * broadcast into every lane's intersection join. */
+  private def annTruth(q: DataFrame, e: DataFrame): DataFrame =
+    operators.Ckpt.viaParquet(Similarity.bruteForceTopK(q, e, k = 5)
+      .select(col("query_id"), col("cand_id"), col("rank")), parts = 1)
+
+  /** The approximate ladder q_ann_recall and q_ann_rank_metrics audit:
+    * each lane at its own hash-checked definition (q_ann_ivf, q_ann_lsh,
+    * q_ann_pq), plus LSH at probe radius 2 — the same hash family one
+    * tuning step on. */
+  private def annLadder(s: SparkSession, dir: String, q: DataFrame,
+                        e: DataFrame): Seq[(String, DataFrame)] = {
+    val coarse = ivfModel(s, dir)
+    Seq(
+      "ivf" -> operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = 4, spill = 1),
+      "lsh" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 6),
+      "lsh_r2" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 6, probeRadius = 2),
+      "pq" -> operators.PqAnn.adcTopK(q, e, k = 5, coarse, pqModel(s, dir),
+        nProbe = 4))
+  }
+
+  /** Per lane, how many of its (query_id, cand_id) rows are in `truth`. */
+  private def annHits(lanes: Seq[(String, DataFrame)],
+                      truth: DataFrame): DataFrame =
+    lanes.map { case (lane, df) =>
+      df.select(col("query_id"), col("cand_id"))
+        .join(broadcast(truth), Seq("query_id", "cand_id"))
+        .agg(count(lit(1)).as("n_hits"))
+        .select(lit(lane).as("lane"), col("n_hits"))
+    }.reduce(_.unionByName(_))
 
   /** q_quality_lr's trained classifier (bounded-sample in-process GD is
     * bit-deterministic: fixed sample order, fixed iteration count — see
@@ -3410,7 +3443,8 @@ object SparkEntry {
       // centroids as SQL literals (see ivfModel).
       val e = Tables.embeddings(s, dir)
       val model = ivfModel(s, dir)
-      operators.IvfAnn.topK(e.filter($"vec_id" < 10), e, k = 5, model, nProbe = 4)
+      operators.IvfAnn.topK(e.filter($"vec_id" < 10), e, k = 5, model,
+          nProbe = 4, spill = 1)
         .orderBy($"query_id", $"rank")
     }),
 
@@ -3438,34 +3472,16 @@ object SparkEntry {
       // each approximate lane (LSH / IVF / IVFADC) against the
       // bruteforce ground truth, as integer hit counts + integer-ppm
       // recall — the number a 100 TB deployment tunes nProbe/nPlanes
-      // against. Each lane runs its EXACT production definition (same
-      // operators, same parameters as its own hash-checked query);
-      // ground truth (50 rows) is pinned once and broadcast into the
-      // three intersection joins.
+      // against. Each lane runs its EXACT production definition
+      // (annLadder: same operators, same parameters as its own
+      // hash-checked query); lsh_r2 makes the audit double as the
+      // tuning loop (radius 1 vs 2 recall, same hash family).
       val e = Tables.embeddings(s, dir)
       val q = e.filter($"vec_id" < 10)
-      val brute = operators.Ckpt.viaParquet(
-        Similarity.bruteForceTopK(q, e, k = 5)
-          .select($"query_id", $"cand_id"), parts = 1) // 50 rows
-      val coarse = ivfModel(s, dir)
-      val codebooks = pqModel(s, dir)
-      // lsh_r2 = the same LSH lane at probe radius 2: the audit doubles
-      // as the tuning loop (radius 1 vs 2 recall, same hash family)
-      val lanes: Seq[(String, DataFrame)] = Seq(
-        "ivf" -> operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = 4),
-        "lsh" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 6),
-        "lsh_r2" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 6,
-          probeRadius = 2),
-        "pq" -> operators.PqAnn.adcTopK(q, e, k = 5, coarse, codebooks,
-          nProbe = 4))
+      val brute = annTruth(q, e).select($"query_id", $"cand_id")
       val tot = brute.agg(count(lit(1)).as("n_possible"),
         countDistinct($"query_id").as("n_queries"))
-      lanes.map { case (lane, df) =>
-        df.select($"query_id", $"cand_id")
-          .join(broadcast(brute), Seq("query_id", "cand_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(lane).as("lane"), $"n_hits")
-      }.reduce(_.union(_))
+      annHits(annLadder(s, dir, q, e), brute)
         .crossJoin(broadcast(tot))
         .select($"lane", $"n_queries", $"n_possible", $"n_hits",
           expr("(1000000 * n_hits) div n_possible").as("recall_ppm"))
@@ -3486,19 +3502,8 @@ object SparkEntry {
       // division of exact integers each, round-6.
       val e = Tables.embeddings(s, dir)
       val q = e.filter($"vec_id" < 10)
-      val brute = operators.Ckpt.viaParquet(
-        Similarity.bruteForceTopK(q, e, k = 5)
-          .select($"query_id", $"cand_id", (lit(6L) - $"rank").as("rel")),
-        parts = 1) // 50 rows
-      val coarse = ivfModel(s, dir)
-      val codebooks = pqModel(s, dir)
-      val lanes: Seq[(String, DataFrame)] = Seq(
-        "ivf" -> operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = 4),
-        "lsh" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 6),
-        "lsh_r2" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 6,
-          probeRadius = 2),
-        "pq" -> operators.PqAnn.adcTopK(q, e, k = 5, coarse, codebooks,
-          nProbe = 4))
+      val brute = annTruth(q, e)
+        .select($"query_id", $"cand_id", (lit(6L) - $"rank").as("rel"))
       // integer-micro discount grid: round(1e6 / log2(rank + 1))
       val disc = when($"rank" === 1, 1000000L).when($"rank" === 2, 630930L)
         .when($"rank" === 3, 500000L).when($"rank" === 4, 430677L)
@@ -3506,7 +3511,7 @@ object SparkEntry {
       val idcgMicro = 5L * 1000000L + 4L * 630930L + 3L * 500000L +
         2L * 430677L + 1L * 386853L // = 10271927, the ideal top-5 DCG
       val tot = brute.agg(countDistinct($"query_id").as("n_queries"))
-      lanes.map { case (lane, df) =>
+      annLadder(s, dir, q, e).map { case (lane, df) =>
         df.select($"query_id", $"cand_id", $"rank")
           .join(broadcast(brute), Seq("query_id", "cand_id"))
           .groupBy($"query_id")
@@ -3528,8 +3533,10 @@ object SparkEntry {
     "q_ann_tuned" -> ((s, dir) => {
       import s.implicits._
       // The CLOSED tuning loop q_ann_recall opened: each approximate
-      // lane at the operating point the AnnTune sweep selected, with its
-      // recall@5 AND its scan cost in one frontier table. Tuned points:
+      // lane at its tuned operating point (the recall-vs-cost sweeps in
+      // SCALE.md "Round 12: the ANN recall-vs-cost frontier" and "The
+      // ANN frontier at the 25% budget"), with its recall@5 AND its scan
+      // cost in one frontier table. Tuned points:
       //  - ivf_t: 64-cell quantizer, nProbe=32 — recall tracks the
       //    nProbe/nCells FRACTION, so the finer quantizer reaches >=90%
       //    probing half the cells (>=96% at sf0.01, 90% at sf0.1);
@@ -3545,14 +3552,17 @@ object SparkEntry {
       // columns integer -> bit-stable hash vs the literal-replay oracle.
       val e = Tables.embeddings(s, dir)
       val q = e.filter($"vec_id" < 10)
-      val brute = operators.Ckpt.viaParquet(
-        Similarity.bruteForceTopK(q, e, k = 5)
-          .select($"query_id", $"cand_id"), parts = 1) // 50 rows
+      val brute = annTruth(q, e).select($"query_id", $"cand_id")
       val coarse = ivf64Model(s, dir)
       val pq8 = pq8Model(s, dir)
       val m128 = ivf128Model(s, dir)
+      // each operating point is written once: its lane ranks the
+      // candidate pairs of these probe parameters and its cost row
+      // counts the same pairs' visits (operators.Ann.pairs)
+      val (tProbe, sProbe, sSpill, lshPlanes, lshRadius) = (32, 10, 3, 4, 2)
       val lanes: Seq[(String, DataFrame)] = Seq(
-        "ivf_t" -> operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = 32),
+        "ivf_t" -> operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = tProbe,
+          spill = 1),
         // the 25%-budget frontier lane (r14): 128 cells × spill-3
         // multi-assignment, 10 probes — the best measured recall inside
         // a <=250k-ppm visited-pair budget on these ISOTROPIC
@@ -3561,79 +3571,48 @@ object SparkEntry {
         // vs ivf_t's 900k). The corpus has no cluster structure (mean
         // pairwise cos ~0.001), so every family saturates near the
         // fraction law — the full evidence ladder is in SCALE.md r14.
-        "ivf_s" -> operators.IvfAnn.topKSpill(q, e, k = 5, m128,
-          nProbe = 10, spill = 3),
+        "ivf_s" -> operators.IvfAnn.topK(q, e, k = 5, m128, nProbe = sProbe,
+          spill = sSpill),
         // r15: the SQ8 × spill combo — same spilled index geometry
         // (same pair-visits), but the cell scan reads 1-byte codes
         // with a shortlist-200 exact rerank; the frontier row records
         // whether the code-domain shortlist costs recall vs ivf_s
         "ivf_s8" -> operators.SqAnn.topKSpillSq8(q, e, k = 5, m128,
-          nProbe = 10, spill = 3, shortlist = 200),
-        "lsh_t" -> Similarity.lshTopK(q, e, k = 5, nPlanes = 4,
-          probeRadius = 2),
+          nProbe = sProbe, spill = sSpill, shortlist = 200),
+        "lsh_t" -> Similarity.lshTopK(q, e, k = 5, nPlanes = lshPlanes,
+          probeRadius = lshRadius),
         "pq_rerank" -> operators.PqAnn.adcRerankTopK(q, e, k = 5,
-          shortlist = 200, coarse, pq8, nProbe = 32))
+          shortlist = 200, coarse, pq8, nProbe = tProbe))
       val tot = brute.agg(count(lit(1)).as("n_possible"),
         countDistinct($"query_id").as("n_queries"))
       val ncorp = e.agg(count(lit(1)).as("n_corpus"))
-      // scan-cost of the two cell lanes: the probed-cell candidate pairs
-      val cellOf = e.select($"vec_id",
-        operators.IvfAnn.assignCell($"embedding", coarse).as("cell"))
-      val cand = q.select($"vec_id".as("qid"),
-          explode(operators.IvfAnn.probeCells($"embedding", coarse, 32))
-            .as("cell"))
-        .join(cellOf, Seq("cell")).filter($"vec_id" =!= $"qid")
-      // scan-cost of the LSH lane: radius-2 bucket-adjacent pairs (the
-      // query side is 10 rows — broadcast into a non-equi hamming join)
-      val planes4 = Similarity.hyperplanes(4, 64)
-      val b4 = e.select($"vec_id",
-        Similarity.bucketOf($"embedding", planes4).as("b"))
-      val qb = b4.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"b".as("qb"))
-      val lshCand = b4.join(broadcast(qb),
-        bit_count($"qb".bitwiseXOR($"b")) <= 2 && $"vec_id" =!= $"qid")
-      // ivf_s scan-cost: pair-VISITS through the spilled index (a pair
-      // can meet in up to 2 shared cells and both visits are work)
-      val cellOfS = e.select($"vec_id",
-        explode(operators.IvfAnn.assignCells($"embedding", m128, 3))
-          .as("cell"))
-      val candS = q.select($"vec_id".as("qid"),
-          explode(operators.IvfAnn.probeCells($"embedding", m128, 10))
-            .as("cell"))
-        .join(cellOfS, Seq("cell")).filter($"vec_id" =!= $"qid")
-      // r18 (VERDICT r17 ask 4 — the q_bm25_pruned lesson applied): the
-      // ivf_t and spilled candidate-pair derivations each feed TWO cost
-      // rows (ivf_t + pq_rerank share `cand`'s probe geometry; ivf_s +
-      // ivf_s8 share `candS`'s by construction). Pin the shared 1-row
-      // aggregate explicitly instead of relying on AQE exchange reuse —
-      // reuse is an optimization, not a contract; without the pin each
-      // reference re-runs the full probe join over the corpus (2× the
-      // dominant scan at any scale).
-      val candCost = operators.OpCaches.track(cand.agg(count(lit(1)).as("n_scored"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val candSCost = operators.OpCaches.track(candS.agg(count(lit(1)).as("n_scored"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      // pair VISITS of a probe (a spilled pair meeting in 2 shared cells
+      // is 2 visits: both are work). ivf_t's feeds pq_rerank's row too
+      // and the spilled one ivf_s8's (same probe geometry by
+      // construction), so the 1-row aggregate is pinned rather than
+      // left to AQE exchange reuse — reuse is an optimization, not a
+      // contract; without the pin each reference re-runs the probe join
+      // over the corpus.
+      def visits(p: operators.Ann.Probe): DataFrame = operators.OpCaches.track(
+        operators.Ann.pairs(q, e, Some(p), Nil, Nil)
+          .agg(count(lit(1)).as("n_scored"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val candCost = visits(operators.IvfAnn.probe(coarse, tProbe, 1))
+      val candSCost = visits(operators.IvfAnn.probe(m128, sProbe, sSpill))
       val costs = Seq(
         ncorp.crossJoin(broadcast(tot))
           .select(lit("brute").as("lane"),
             ($"n_queries" * ($"n_corpus" - 1)).as("n_scored")),
         candCost.select(lit("ivf_t").as("lane"), $"n_scored"),
         candSCost.select(lit("ivf_s").as("lane"), $"n_scored"),
-        // ivf_s8 scans the SAME spilled pair-visits (in code domain)
         candSCost.select(lit("ivf_s8").as("lane"), $"n_scored"),
-        lshCand.agg(count(lit(1)).as("n_scored"))
+        visits(Similarity.lshProbe(lshPlanes, 64, lshRadius))
           .select(lit("lsh_t").as("lane"), $"n_scored"),
         candCost.select(lit("pq_rerank").as("lane"), $"n_scored"))
         .reduce(_.unionByName(_))
-      val hits = (
-        brute.agg(count(lit(1)).as("n_hits"))
-          .select(lit("brute").as("lane"), $"n_hits") +:
-        lanes.map { case (lane, df) =>
-          df.select($"query_id", $"cand_id")
-            .join(broadcast(brute), Seq("query_id", "cand_id"))
-            .agg(count(lit(1)).as("n_hits"))
-            .select(lit(lane).as("lane"), $"n_hits")
-        }).reduce(_.unionByName(_))
+      val hits = brute.agg(count(lit(1)).as("n_hits"))
+        .select(lit("brute").as("lane"), $"n_hits")
+        .unionByName(annHits(lanes, brute))
       hits.join(broadcast(costs), Seq("lane"))
         .crossJoin(broadcast(tot)).crossJoin(broadcast(ncorp))
         .select($"lane", $"n_queries", $"n_possible", $"n_hits",

@@ -163,10 +163,12 @@ object HybridSearch {
     val champions = ranked.filter(col("rn") <= m)
       .select(col("term"), col("doc_id"), col("w"))
     val zero = lit(0).cast(DecimalType(18, 6))
-    // per-(query, term) miss bound; a term whose list is complete hides 0
+    // per-(query, term) miss bound; a term whose list is complete hides 0.
+    // qTerms is the preserved side, which a left join cannot build: the
+    // broadcast hint goes on the bound rows
     val qub = qTerms
-      .join(ranked.filter(col("rn") === m)
-        .select(col("term"), col("w").as("ub")), Seq("term"), "left")
+      .join(broadcast(ranked.filter(col("rn") === m)
+        .select(col("term"), col("w").as("ub"))), Seq("term"), "left")
       .select(col("query_id"), col("term"),
         coalesce(col("ub"), zero).as("ub"))
     val ubTotal = qub.groupBy(col("query_id"))

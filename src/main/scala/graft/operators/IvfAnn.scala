@@ -1,8 +1,6 @@
 package graft.operators
 
-import graft.functions.VectorFns
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,7 +23,7 @@ import org.apache.spark.sql.types._
   *  - within probed cells, scoring is the exact one-pass codegen cosine,
   *    and per-query top-k runs through row_number (rewritten to the
   *    bounded-heap TopKPerGroup operator when GraftExtensions is
-  *    installed).
+  *    installed) — the [[Ann]] candidate pairs and exact rerank.
   *
   * Everything is deterministic: the training sample is id-ordered, Lloyd
   * iterations are fixed-count with left-to-right accumulation, empty cells
@@ -121,49 +119,33 @@ object IvfAnn {
   def assignCells(emb: Column, model: Model, spill: Int): Column =
     graft.plans.Ivf.probeCells(emb, model.centroids, spill)
 
-  /** [[topK]] over a spilled index: candidates meet a query in up to
-    * `spill` shared cells, so scored pairs are deduplicated by a
-    * (query, cand) aggregation (cosine is identical per copy — max is
-    * the value). Scan cost = the JOIN's pair-visits, which the ivf_s
-    * audit lane reports honestly (duplicates included). */
-  def topKSpill(queries: DataFrame, candidates: DataFrame, k: Int,
-                model: Model, nProbe: Int, spill: Int): DataFrame = {
-    val q = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        explode(probeCells(col("embedding"), model, nProbe)).as("cell"))
-    val c = candidates
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-        explode(assignCells(col("embedding"), model, spill)).as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(max(VectorFns.cosine6(col("q_emb"), col("c_emb"))).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
+  /** The IVF search as an [[Ann.Probe]]: a query searches its `nProbe`
+    * nearest cells; a corpus vector sits in its nearest cell or, with
+    * `spill` > 1, in each of its top-`spill` cells ([[assignCells]]) —
+    * then a pair can meet in up to `spill` shared cells. */
+  def probe(model: Model, nProbe: Int, spill: Int): Ann.Probe = {
+    val emb = col("embedding")
+    Ann.Probe("cell", probeCells(emb, model, nProbe),
+      if (spill == 1) assignCell(emb, model)
+      else explode(assignCells(emb, model, spill)),
+      multi = spill > 1)
   }
 
   /** Exact-rerank IVF top-k: candidates restricted to each query's
-    * `nProbe` nearest cells, scored by exact cosine, ties by candidate id.
-    * The query side (with its probe fan-out) is broadcast; the candidate
-    * side is scanned map-side with its cell computed in the scan stage —
-    * at index time you'd materialize `cell` once and partition by it. */
+    * `nProbe` nearest cells of an index built with `spill`-way
+    * assignment ([[probe]]), scored by exact cosine, ties by candidate
+    * id. The query side (with its probe fan-out) is broadcast; the
+    * candidate side is scanned map-side with its cell computed in the
+    * scan stage — at index time you'd materialize `cell` once and
+    * partition by it. A spilled index deduplicates the (query, cand)
+    * pairs met in several cells; its scan cost is the join's
+    * pair-visits, which the ivf_s audit lane reports honestly
+    * (duplicates included). */
   def topK(queries: DataFrame, candidates: DataFrame, k: Int, model: Model,
-           nProbe: Int): DataFrame = {
-    val q = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        explode(probeCells(col("embedding"), model, nProbe)).as("cell"))
-    val c = candidates
-      .select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-        assignCell(col("embedding"), model).as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine6(col("q_emb"), col("c_emb")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
+           nProbe: Int, spill: Int): DataFrame = {
+    val p = probe(model, nProbe, spill)
+    Ann.exactTopK(Ann.pairs(queries, candidates, Some(p),
+      Seq(col("embedding").as("q_emb")), Seq(col("embedding").as("c_emb"))),
+      k, dedup = p.multi)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
@@ -152,72 +151,57 @@ object PqAnn {
 
   /** IVFADC with an exact-rerank shortlist (the standard FAISS two-stage
     * search): ADC ranks every in-cell candidate by its m table lookups,
-    * the per-query top-`shortlist` survive, and ONLY those are scored by
-    * the exact one-pass codegen cosine for the final top-k. This is the
-    * production recall/cost point: the 100 TB corpus is still touched
-    * only through codes (m ints per candidate), and the full-float exact
-    * work is bounded at `shortlist` vectors per query regardless of cell
-    * population. Output schema matches the other ANN lanes (query_id,
-    * cand_id, cosine, rank) so the recall audit can compare directly;
-    * ranking is cosine DESC with candidate-id tie-breaks, and the
-    * shortlist cut uses the same deterministic (adc_dist, cand_id)
-    * order as [[adcTopK]]. */
+    * the per-query top-`shortlist` survive ([[Ann.shortlist]]), and ONLY
+    * those are scored by the exact one-pass codegen cosine for the final
+    * top-k ([[Ann.exactTopK]]). This is the production recall/cost
+    * point: the 100 TB corpus is still touched only through codes (m
+    * ints per candidate), and the full-float exact work is bounded at
+    * `shortlist` vectors per query regardless of cell population. Output
+    * schema matches the other ANN lanes (query_id, cand_id, cosine,
+    * rank) so the recall audit can compare directly; the shortlist cut
+    * uses the same deterministic (adc_dist, cand_id) order as
+    * [[adcTopK]]. */
   def adcRerankTopK(queries: DataFrame, candidates: DataFrame, k: Int,
                     shortlist: Int, coarse: IvfAnn.Model, model: Model,
-                    nProbe: Int): DataFrame = {
-    import graft.functions.VectorFns
-    adcScored(queries, candidates, coarse, model, nProbe)
-      .withColumn("srank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(round(col("adc_raw"), 6), col("cand_id"))))
-      .filter(col("srank") <= shortlist)
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine6(col("q_emb"), col("c_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("cand_id"))).cast(LongType))
-      .filter(col("rank") <= k)
-  }
+                    nProbe: Int): DataFrame =
+    Ann.exactTopK(
+      Ann.shortlist(adcScored(queries, candidates, coarse, model, nProbe),
+          round(col("adc_raw"), 6), shortlist)
+        .select(col("query_id"), col("cand_id"), col("q_emb"), col("c_emb")),
+      k, dedup = false)
 
-  /** The shared IVFADC candidate scan: each query's nProbe coarse cells
-    * (IvfAnn's quantizer) equi-joined to the candidate side, every
+  /** The shared IVFADC candidate scan: the [[Ann.pairs]] of each query's
+    * nProbe coarse cells (IvfAnn's quantizer, single assignment), every
     * in-cell candidate carrying its raw (unrounded) ADC sum plus the two
     * embeddings for whichever rerank/verification stage follows. The
     * query side (probe fan-out + dist table) broadcasts; the candidate
-    * side is one map-side scan computing (cell, codes) in the scan
+    * side is one map-side scan computing (codes, cell) in the scan
     * stage. */
   private def adcScored(queries: DataFrame, candidates: DataFrame,
                         coarse: IvfAnn.Model, model: Model,
                         nProbe: Int): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      distTable(col("embedding"), model).as("dt"),
-      explode(IvfAnn.probeCells(col("embedding"), coarse, nProbe)).as("cell"))
-    val c = candidates.select(
-      col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-      IvfAnn.assignCell(col("embedding"), coarse).as("cell"),
-      codes(col("embedding"), model).as("codes"))
+    val emb = col("embedding")
     val adc = (0 until model.m)
       .map(sub => element_at(element_at(col("dt"), sub + 1),
         element_at(col("codes"), sub + 1) + 1))
       .reduceLeft(_ + _)
-    c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
+    Ann.pairs(queries, candidates, Some(IvfAnn.probe(coarse, nProbe, 1)),
+        Seq(emb.as("q_emb"), distTable(emb, model).as("dt")),
+        Seq(emb.as("c_emb"), codes(emb, model).as("codes")))
       .select(col("query_id"), col("cand_id"), col("q_emb"), col("c_emb"),
         adc.as("adc_raw"))
   }
 
-  /** IVFADC top-k: the shared candidate scan ranked ascending by rounded
-    * ADC with candidate-id tie-breaks; exact L2² rides along to exhibit
-    * the approximation. */
+  /** IVFADC top-k: the shared candidate scan cut at k by rounded ADC
+    * ascending with candidate-id tie-breaks ([[Ann.shortlist]]); exact
+    * L2² rides along to exhibit the approximation. */
   def adcTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               coarse: IvfAnn.Model, model: Model, nProbe: Int): DataFrame =
-    adcScored(queries, candidates, coarse, model, nProbe)
-      .select(col("query_id"), col("cand_id"),
-        round(col("adc_raw"), 6).as("adc_dist"),
-        round(l2sq(col("q_emb"), col("c_emb")), 6).as("exact_dist"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("adc_dist"), col("cand_id"))).cast(LongType))
-      .filter(col("rank") <= k)
+    Ann.shortlist(adcScored(queries, candidates, coarse, model, nProbe)
+        .select(col("query_id"), col("cand_id"),
+          round(col("adc_raw"), 6).as("adc_dist"),
+          round(l2sq(col("q_emb"), col("c_emb")), 6).as("exact_dist")),
+        col("adc_dist"), k)
+      .select(col("query_id"), col("cand_id"), col("adc_dist"),
+        col("exact_dist"), col("srank").cast(LongType).as("rank"))
 }

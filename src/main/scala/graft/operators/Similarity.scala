@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.VectorFns
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,6 +16,7 @@ import org.apache.spark.sql.types._
   *    the query's sign-bucket, turning the scan into a bucket-local join.
   *    Planes are deterministic (seeded), so bucketing is reproducible and
   *    can be precomputed + bucket-partitioned as a materialized index.
+  * Both are [[Ann]] compositions (candidate pairs, exact rerank).
   *
   * All pair scoring goes through the one-pass codegen cosine
   * (graft.plans.CosineSimilarity) — dot and both norms in a single
@@ -91,19 +91,13 @@ object Similarity {
     }
   }
 
-  /** Exact top-k neighbors for each query vector by cosine similarity.
-    * Ties broken by candidate id for determinism. */
-  def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val c = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine6(col("q_emb"), col("c_emb")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
-  }
+  /** Exact top-k neighbors for each query vector by cosine similarity:
+    * every (query, cand) pair through [[Ann.exactTopK]]. Ties broken by
+    * candidate id for determinism. */
+  def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    Ann.exactTopK(Ann.pairs(queries, candidates, None,
+      Seq(col("embedding").as("q_emb")), Seq(col("embedding").as("c_emb"))),
+      k, dedup = false)
 
   /** Deterministic random hyperplanes: `planes` × `dim`, components from a
     * seeded java.util.Random (platform-stable LCG). */
@@ -118,41 +112,41 @@ object Similarity {
   def bucketOf(emb: Column, planes: Array[Array[Double]]): Column =
     graft.plans.Hyperplane.bucket(emb, planes)
 
-  /** ANN top-k via multi-probe hyperplane LSH: each query searches its own
-    * sign-bucket plus every bucket within Hamming distance `probeRadius`
-    * (flipping 1–2 sign bits). Multi-probe trades a small constant probe
-    * fan-out for the recall that single-probe loses on weakly-correlated
-    * vectors — without adding more hash tables (i.e. without re-bucketing
-    * the 100 TB candidate side, which stays partitioned by one bucket id). */
-  def lshTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-              nPlanes: Int = 8, dim: Int = 64, probeRadius: Int = 1): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim)
-    val flips: Seq[Column] = {
-      val base = Seq(col("bucket"))
-      val one = if (probeRadius >= 1)
-        (0 until nPlanes).map(i => col("bucket").bitwiseXOR(lit(1L << i)))
-      else Nil
-      val two = if (probeRadius >= 2)
-        (for { i <- 0 until nPlanes; j <- (i + 1) until nPlanes } yield
-          col("bucket").bitwiseXOR(lit((1L << i) | (1L << j))))
-      else Nil
-      base ++ one ++ two
-    }
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        bucketOf(col("embedding"), planes).as("bucket"))
-      .withColumn("bucket", explode(array(flips: _*)))
-    val c = candidates.select(col("vec_id").as("cand_id"), col("embedding").as("c_emb"),
-      bucketOf(col("embedding"), planes).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        VectorFns.cosine6(col("q_emb"), col("c_emb")).as("cosine"))
-      .distinct() // a pair can surface through several probes
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    scored.withColumn("rank", row_number().over(w).cast(LongType))
-      .filter(col("rank") <= k)
+  /** The XOR masks that reach every bucket at Hamming distance 1 and
+    * (radius 2) distance 2 under `nPlanes` planes — pairwise distinct
+    * and non-zero. */
+  private def probeMasks(nPlanes: Int, radius: Int): Seq[Long] = {
+    val one = if (radius >= 1) (0 until nPlanes).map(i => 1L << i) else Nil
+    val two = if (radius >= 2)
+      for { i <- 0 until nPlanes; j <- (i + 1) until nPlanes } yield (1L << i) | (1L << j)
+    else Nil
+    one ++ two
   }
+
+  /** Multi-probe hyperplane LSH as an [[Ann.Probe]]: a query searches its
+    * own sign-bucket and every bucket within Hamming distance
+    * `probeRadius` (the bucket kernel written once, flipped by a
+    * transform); a corpus vector sits in its one bucket. */
+  def lshProbe(nPlanes: Int, dim: Int, probeRadius: Int): Ann.Probe = {
+    val b = bucketOf(col("embedding"), hyperplanes(nPlanes, dim))
+    Ann.Probe("bucket",
+      transform(typedlit(0L +: probeMasks(nPlanes, probeRadius)), m => b.bitwiseXOR(m)),
+      b, multi = false)
+  }
+
+  /** ANN top-k via multi-probe hyperplane LSH ([[lshProbe]]): flipping
+    * 1–2 sign bits trades a small constant probe fan-out for the recall
+    * that single-probe loses on weakly-correlated vectors — without adding
+    * more hash tables (i.e. without re-bucketing the 100 TB candidate side,
+    * which stays partitioned by one bucket id). The probe buckets are
+    * pairwise distinct and a candidate has one bucket, so a pair meets at
+    * most once: no dedup. */
+  def lshTopK(queries: DataFrame, candidates: DataFrame, k: Int,
+              nPlanes: Int = 8, dim: Int = 64, probeRadius: Int = 1): DataFrame =
+    Ann.exactTopK(Ann.pairs(queries, candidates,
+      Some(lshProbe(nPlanes, dim, probeRadius)),
+      Seq(col("embedding").as("q_emb")), Seq(col("embedding").as("c_emb"))),
+      k, dedup = false)
 
   /** Embedding near-duplicate pairs over hyperplane-LSH buckets: emits
     * (id_a < id_b, cosine >= threshold) for every pair whose sign-buckets
@@ -183,12 +177,9 @@ object Similarity {
 
     val v = cliques.docs.select(col("vec_id"), col("embedding"),
       bucketOf(col("embedding"), planes).as("bucket"))
-    val probes: Seq[Column] = col("bucket") +:
-      (if (probeRadius >= 1)
-        (0 until nPlanes).map(i => col("bucket").bitwiseXOR(lit(1L << i)))
-      else Nil)
     val a = v.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"),
-      explode(array(probes: _*)).as("bucket"))
+      explode(array(col("bucket") +: probeMasks(nPlanes, probeRadius)
+        .map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
     val b = v.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"),
       col("bucket"))
     val verified = a.join(b, Seq("bucket"))

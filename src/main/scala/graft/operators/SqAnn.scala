@@ -1,8 +1,6 @@
 package graft.operators
 
-import graft.functions.VectorFns
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,7 +24,7 @@ import org.apache.spark.sql.types._
   * Determinism: codes are floor() of an identical double expression on
   * both engines (clamped to [0,255] for intent, though in-range inputs
   * cannot escape it); approximate scores round at 6 with candidate-id
-  * tiebreaks; the rerank is the house cosine6. */
+  * tiebreaks; the rerank is the house cosine6 ([[Ann.exactTopK]]). */
 object SqAnn {
 
   /** 1-row frame (mn_arr, mx_arr): per-dimension corpus min/max in
@@ -52,7 +50,7 @@ object SqAnn {
       |  CASE WHEN element_at(mx_arr, j) = element_at(mn_arr, j)
       |    THEN CAST(0 AS BIGINT)
       |    ELSE least(CAST(255 AS BIGINT), greatest(CAST(0 AS BIGINT),
-      |      CAST(floor((CAST(element_at(c_emb, j) AS DOUBLE)
+      |      CAST(floor((CAST(element_at(embedding, j) AS DOUBLE)
       |          - element_at(mn_arr, j)) * 255.0
       |        / (element_at(mx_arr, j) - element_at(mn_arr, j)))
       |        AS BIGINT))) END)""".stripMargin
@@ -68,86 +66,55 @@ object SqAnn {
 
   /** SQ8 scan INSIDE the spilled-IVF index (r15 — the frontier combo
     * the r14 verdict asked for): candidates meet queries in up to
-    * `spill` shared cells ([[IvfAnn.assignCells]] multi-assignment,
-    * the 25%-budget recall winner on isotropic data), but the cell
-    * scan reads 1-byte-per-dimension CODES instead of floats — at
-    * 100 TB the probed-cell scan is memory-bandwidth-bound, so the 8×
-    * compression is the speedup — and only the per-query `shortlist`
-    * by approximate score re-joins the float table for the exact
-    * cosine rerank. Pair-visits (duplicates across shared cells
-    * included) are the honest scan cost, identical to the plain
-    * spilled lane's — SQ8 changes the bandwidth per visit, not the
-    * visit count; the q_ann_tuned frontier row records what the
-    * rerank shortlist costs in recall (none, at shortlist ≥ the
-    * per-query candidate count). Deterministic: approx rounds at 6
-    * with cand_id tiebreaks, duplicates collapse by max (the value is
-    * identical per copy), rerank is the house cosine6. */
+    * `spill` shared cells ([[IvfAnn.probe]] multi-assignment, the
+    * 25%-budget recall winner on isotropic data), but the cell scan
+    * reads 1-byte-per-dimension CODES instead of floats — at 100 TB the
+    * probed-cell scan is memory-bandwidth-bound, so the 8× compression
+    * is the speedup — and only the per-query `shortlist` by approximate
+    * score re-joins the float table for the exact cosine rerank.
+    * Pair-visits (duplicates across shared cells included) are the
+    * honest scan cost, identical to the plain spilled lane's — SQ8
+    * changes the bandwidth per visit, not the visit count; the
+    * q_ann_tuned frontier row records what the rerank shortlist costs in
+    * recall (none, at shortlist ≥ the per-query candidate count). */
   def topKSpillSq8(queries: DataFrame, corpus: DataFrame, k: Int,
                    model: IvfAnn.Model, nProbe: Int, spill: Int,
-                   shortlist: Int): DataFrame = {
+                   shortlist: Int): DataFrame =
+    search(queries, corpus, Some(IvfAnn.probe(model, nProbe, spill)),
+      shortlist, k)
+
+  /** Top-k by exact cosine over an SQ8-scanned shortlist of every
+    * (query, cand) pair. Queries keep full precision (asymmetric
+    * distance); candidates are scanned as codes only, floats re-fetched
+    * for the shortlist. */
+  def topK(queries: DataFrame, corpus: DataFrame,
+           shortlist: Int, k: Int): DataFrame =
+    search(queries, corpus, None, shortlist, k)
+
+  /** The SQ8 search over the [[Ann.pairs]] of `probe`: the corpus side
+    * carries codes, not floats; approx is scored in the code domain
+    * (pairs met in several spilled cells collapse by max — the value is
+    * identical per copy), cut to the per-query `shortlist` by (approx
+    * desc, cand_id), and only the shortlist re-joins the floats for the
+    * exact cosine rerank, `approx` riding along. */
+  private def search(queries: DataFrame, corpus: DataFrame,
+                     probe: Option[Ann.Probe], shortlist: Int,
+                     k: Int): DataFrame = {
     val stats = dimStats(corpus)
-    val coded = corpus.crossJoin(broadcast(stats))
-      .select(col("vec_id").as("cand_id"),
-        col("embedding").as("c_emb"), col("mn_arr"), col("mx_arr"))
-      .select(col("cand_id"), expr(codesExpr).as("codes"),
-        explode(IvfAnn.assignCells(col("c_emb"), model, spill)).as("cell"))
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"),
-      explode(IvfAnn.probeCells(col("embedding"), model, nProbe)).as("cell"))
-    val scored = coded.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("cand_id"))
+    val visits = Ann.pairs(queries, corpus.crossJoin(broadcast(stats)), probe,
+        Seq(col("embedding").as("q_emb")), Seq(expr(codesExpr).as("codes")))
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("cand_id"), expr(approxExpr).as("approx"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(max(col("approx")).as("approx"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("cand_id"))
-    val short = scored
-      .withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= shortlist)
-      .drop("srank")
-    val rr = short
-      .join(corpus.select(col("vec_id").as("cand_id"),
-        col("embedding").as("c_emb")), "cand_id")
-      .join(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb")), "query_id")
-      .select(col("query_id"), col("cand_id"), col("approx"),
-        VectorFns.cosine6(col("q_emb"), col("c_emb")).as("cosine"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    rr.withColumn("rank", row_number().over(wr).cast(LongType))
-      .filter(col("rank") <= k)
-  }
-
-  /** Top-k by exact cosine over an SQ8-scanned shortlist. Queries keep
-    * full precision (asymmetric distance); candidates are scanned as
-    * codes only, floats re-fetched for the shortlist. */
-  def topK(queries: DataFrame, corpus: DataFrame,
-           shortlist: Int, k: Int): DataFrame = {
-    val stats = dimStats(corpus)
-    val codes = corpus.crossJoin(broadcast(stats))
-      .select(col("vec_id").as("cand_id"),
-        col("embedding").as("c_emb"), col("mn_arr"), col("mx_arr"))
-      .select(col("cand_id"), expr(codesExpr).as("codes"))
-    val q = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = codes.crossJoin(broadcast(stats))
-      .join(broadcast(q), col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), expr(approxExpr).as("approx"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("cand_id"))
-    val short = scored
-      .withColumn("srank", row_number().over(ws)).filter(col("srank") <= shortlist)
-      .drop("srank")
-    val rr = short
-      .join(corpus.select(col("vec_id").as("cand_id"),
-        col("embedding").as("c_emb")), "cand_id")
-      .join(q, "query_id")
-      .select(col("query_id"), col("cand_id"), col("approx"),
-        VectorFns.cosine6(col("q_emb"), col("c_emb")).as("cosine"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("cand_id"))
-    rr.withColumn("rank", row_number().over(wr).cast(LongType))
-      .filter(col("rank") <= k)
+    val scored = if (probe.exists(_.multi))
+      visits.groupBy(col("query_id"), col("cand_id"))
+        .agg(max(col("approx")).as("approx"))
+    else visits
+    Ann.exactTopK(Ann.shortlist(scored, col("approx").desc, shortlist)
+        .drop("srank")
+        .join(corpus.select(col("vec_id").as("cand_id"),
+          col("embedding").as("c_emb")), "cand_id")
+        .join(queries.select(col("vec_id").as("query_id"),
+          col("embedding").as("q_emb")), "query_id"),
+      k, dedup = false)
   }
 }

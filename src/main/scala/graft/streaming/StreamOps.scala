@@ -305,7 +305,7 @@ object StreamOps {
                                  model: graft.operators.IvfAnn.Model,
                                  nProbe: Int): Unit = {
     if (!batch.isEmpty) // idle micro-batches must not litter the log
-      graft.operators.IvfAnn.topK(batch, index, k, model, nProbe)
+      graft.operators.IvfAnn.topK(batch, index, k, model, nProbe, spill = 1)
         .write.mode("append").parquet(outDir)
   }
 

@@ -39,19 +39,18 @@ class IvfAnnSpec extends AnyFunSuite with SparkSpec {
     val e = Tables.embeddings(spark, sf)
     val q = e.filter($"vec_id" < 50)
     val model = IvfAnn.train(e, "vec_id", "embedding", k = 16)
-    val exact = Similarity.bruteForceTopK(q, e, k = 1)
+    def pairs(df: org.apache.spark.sql.DataFrame) = bag(df
       .select($"query_id", $"cand_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def recall(nProbe: Int): Int = {
-      val got = IvfAnn.topK(q, e, k = 1, model, nProbe)
-        .select($"query_id", $"cand_id").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      exact.count { case (qid, cid) => got.get(qid).contains(cid) }
-    }
+      .map(r => (r.getLong(0), r.getLong(1))))
+    val exact = pairs(Similarity.bruteForceTopK(q, e, k = 1))
+    val n = exact.values.sum
+    def recall(nProbe: Int): Int =
+      pairs(IvfAnn.topK(q, e, k = 1, model, nProbe, spill = 1))
+        .map { case (pair, c) => c * exact.getOrElse(pair, 0) }.sum
     val r1 = recall(1)
     val r4 = recall(4)
     assert(r4 >= r1, s"nProbe=4 recall ($r4) must not lose to nProbe=1 ($r1)")
-    assert(r4 >= (exact.size * 3) / 5, s"IVF recall too low: $r4/${exact.size}")
+    assert(r4 >= (n * 3) / 5, s"IVF recall too low: $r4/$n")
   }
 
   test("probe list is the nProbe distinct nearest cells") {
@@ -72,29 +71,60 @@ class IvfAnnSpec extends AnyFunSuite with SparkSpec {
     assert(probes.map(_.head).sameElements(first))
   }
 
+  // The name predates the fold of topKSpill into topK's spill parameter.
   test("spill=1 topKSpill degenerates to plain topK; spill raises recall at fixed probes") {
     import spark.implicits._
     val e = Tables.embeddings(spark, sf)
     val q = e.filter($"vec_id" < 30)
     val model = IvfAnn.train(e, "vec_id", "embedding", k = 16)
-    val plain = IvfAnn.topK(q, e, k = 3, model, nProbe = 4)
-      .select($"query_id", $"cand_id", $"rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val s1 = IvfAnn.topKSpill(q, e, k = 3, model, nProbe = 4, spill = 1)
-      .select($"query_id", $"cand_id", $"rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(s1 === plain, "spill=1 must be value-identical to single assignment")
+    val (qv, ev) = (AnnReference.vectors(q), AnnReference.vectors(e))
+    // spill=1 holds each candidate in its one nearest cell only, and
+    // topK over it is the reference restricted to the probed cells
+    val probed = q.select($"vec_id", IvfAnn.probeCells($"embedding", model, 4))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSet).toMap
+    val held = e.select($"vec_id", IvfAnn.assignCell($"embedding", model),
+        IvfAnn.assignCells($"embedding", model, 1))
+      .collect().map { r =>
+        assert(r.getSeq[Int](2) == Seq(r.getInt(1)), "spill=1 must assign the nearest cell alone")
+        r.getLong(0) -> r.getInt(1)
+      }.toMap
+    val expect = AnnReference.topK(qv, ev, k = 3)((a, b) => probed(a).contains(held(b)))
+    val got = AnnReference.rows(IvfAnn.topK(q, e, k = 3, model, nProbe = 4, spill = 1))
+    assert(bag(got) == bag(expect))
     // recall vs brute truth must not DROP when the index spills wider —
     // every single-assign candidate is still a candidate
-    val exact = Similarity.bruteForceTopK(q, e, k = 3)
+    val exact = bag(Similarity.bruteForceTopK(q, e, k = 3)
       .select($"query_id", $"cand_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+      .map(r => (r.getLong(0), r.getLong(1))))
     def hits(spill: Int): Int =
-      IvfAnn.topKSpill(q, e, k = 3, model, nProbe = 4, spill = spill)
+      IvfAnn.topK(q, e, k = 3, model, nProbe = 4, spill = spill)
         .select($"query_id", $"cand_id").collect()
         .count(r => exact.contains((r.getLong(0), r.getLong(1))))
     val h1 = hits(1)
     val h2 = hits(2)
     assert(h2 >= h1, s"spill=2 recall ($h2) must not lose to spill=1 ($h1)")
+  }
+
+  test("topK equals the exact reference over its probed cells (all cells; spill 3)") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter($"vec_id" < 30)
+    val model = IvfAnn.train(e, "vec_id", "embedding", k = 16)
+    val (qv, ev) = (AnnReference.vectors(q), AnnReference.vectors(e))
+    def cells(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.select($"vec_id", c).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Int](1).toSet).toMap
+    // probing every cell is exact: the brute-force reference itself
+    val all = IvfAnn.topK(q, e, k = 3, model, nProbe = model.nCells, spill = 1)
+    assert(bag(AnnReference.rows(all)) ==
+      bag(AnnReference.topK(qv, ev, k = 3)((_, _) => true)))
+    // as multisets: a (query, cand) pair met in two shared cells and
+    // not collapsed would show as a duplicated row
+    val probed = cells(q, IvfAnn.probeCells($"embedding", model, 4))
+    val held = cells(e, IvfAnn.assignCells($"embedding", model, 3))
+    val expect = AnnReference.topK(qv, ev, k = 3)((a, b) =>
+      (probed(a) & held(b)).nonEmpty)
+    val got = AnnReference.rows(IvfAnn.topK(q, e, k = 3, model, nProbe = 4, spill = 3))
+    assert(bag(got) == bag(expect))
   }
 }

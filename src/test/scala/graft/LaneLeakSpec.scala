@@ -13,9 +13,9 @@ class LaneLeakSpec extends AnyFunSuite with SparkSpec {
 
   /** The lanes that reach the clique collapse, the BM25 retrieval
     * family, the iterative graph lanes (components, BFS, k-core, label
-    * propagation, PageRank) and the two lanes that pin a shared
-    * aggregate (q_ann_tuned's candidate counts, q_forecast_backtest's
-    * sorted history). */
+    * propagation, PageRank), the ANN search lanes and audits (the
+    * audits pin their brute-force truth; q_ann_tuned also pins its
+    * candidate counts) and q_forecast_backtest (its sorted history). */
   private val lanes = Seq(
     "q_dedup_minhash", "q_split_leakage", "q_dedup_clusters",
     "q_dedup_keep_best", "q_dedup_incremental", "q_containment",
@@ -24,7 +24,9 @@ class LaneLeakSpec extends AnyFunSuite with SparkSpec {
     "q_allpairs_compact", "q_minhash_recall",
     "q_bm25", "q_bm25_pruned", "q_wand", "q_bmw", "q_hybrid_search",
     "q_graph_components", "q_bfs_hops", "q_kcore", "q_communities",
-    "q_pagerank", "q_ppr", "q_ann_tuned", "q_forecast_backtest")
+    "q_pagerank", "q_ppr", "q_ann_bruteforce", "q_ann_lsh", "q_ann_ivf",
+    "q_ann_pq", "q_ann_sq8", "q_ann_recall", "q_ann_rank_metrics",
+    "q_ann_tuned", "q_forecast_backtest")
 
   for (lane <- lanes) test(s"$lane: OpCaches.releaseAll frees every cache it persisted") {
     // start from an empty block manager, whatever ran before

@@ -60,18 +60,21 @@ class PqAnnSpec extends AnyFunSuite with SparkSpec {
   test("rerank with a full shortlist is row-identical to exact IVF topK") {
     // With shortlist >= the whole candidate pool, the ADC stage keeps
     // everything and the exact-cosine rerank IS IvfAnn.topK over the
-    // same probed cells — the two lanes must agree bit-for-bit.
+    // same probed cells — the two lanes must agree bit-for-bit, and both
+    // equal the exact reference over those cells (as multisets).
     import spark.implicits._
     val q = emb.filter($"vec_id" < 5)
     val n = emb.count().toInt
-    val rerank = PqAnn.adcRerankTopK(q, emb, k = 5, shortlist = n, coarse,
-        pq, nProbe = 4)
-      .select($"query_id", $"cand_id", $"cosine", $"rank")
-      .orderBy($"query_id", $"rank").collect().toSeq
-    val exact = IvfAnn.topK(q, emb, k = 5, coarse, nProbe = 4)
-      .select($"query_id", $"cand_id", $"cosine", $"rank")
-      .orderBy($"query_id", $"rank").collect().toSeq
-    assert(rerank == exact)
+    val rerank = bag(AnnReference.rows(PqAnn.adcRerankTopK(q, emb, k = 5,
+      shortlist = n, coarse, pq, nProbe = 4)))
+    assert(rerank == bag(AnnReference.rows(
+      IvfAnn.topK(q, emb, k = 5, coarse, nProbe = 4, spill = 1))))
+    val probed = q.select($"vec_id", IvfAnn.probeCells($"embedding", coarse, 4))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSet).toMap
+    val cell = emb.select($"vec_id", IvfAnn.assignCell($"embedding", coarse))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(rerank == bag(AnnReference.topK(AnnReference.vectors(q),
+      AnnReference.vectors(emb), k = 5)((a, b) => probed(a)(cell(b)))))
   }
 
   test("rerank recall against bruteforce is monotone in the shortlist") {

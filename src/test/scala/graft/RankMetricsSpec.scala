@@ -23,13 +23,16 @@ class RankMetricsSpec extends AnyFunSuite with SparkSpec {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"),
         6L - r.getAs[Long]("rank")))
     val rel = brute.map(t => (t._1, t._2) -> t._3).toMap
+    assert(bag(brute.map(t => (t._1, t._2))).values.forall(_ == 1),
+      "a duplicated truth pair would be hidden by the lookup")
     val nq = brute.map(_._1).distinct.length.toLong
     val got = SparkEntry.queries("q_ann_rank_metrics")(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toMap
     // recompute the ivf lane by hand from its production definition
     val coarse = graft.operators.IvfAnn.train(e, "vec_id", "embedding", k = 16)
-    val lane = graft.operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = 4)
+    val lane = graft.operators.IvfAnn.topK(q, e, k = 5, coarse, nProbe = 4,
+        spill = 1)
       .collect().map(r => (r.getAs[Long]("query_id"),
         r.getAs[Long]("cand_id"), r.getAs[Long]("rank")))
     val hits = lane.flatMap { case (qid, cid, rk) =>

@@ -5,6 +5,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
+  /** Driver-side sign-bucket of `v` under `planes`. */
+  private def bucket(planes: Array[Array[Double]], v: Array[Double]): Long = {
+    var b = 0L
+    planes.indices.foreach { p =>
+      var dot = 0.0
+      v.indices.foreach(j => dot += v(j) * planes(p)(j))
+      if (dot >= 0) b |= (1L << p)
+    }
+    b
+  }
+
   test("semanticDedup: collapsed clique path is output-identical to naive") {
     import spark.implicits._
     val base = Tables.embeddings(spark, sf).filter($"vec_id" < 100)
@@ -55,62 +66,60 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("bruteForceTopK and lshTopK equal the exact reference over their candidates") {
+    import spark.implicits._
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter($"vec_id" < 20)
+    val (qv, ev) = (AnnReference.vectors(q), AnnReference.vectors(e))
+    assert(bag(AnnReference.rows(Similarity.bruteForceTopK(q, e, k = 5))) ==
+      bag(AnnReference.topK(qv, ev, k = 5)((_, _) => true)))
+    // LSH: a query meets the candidates whose bucket is within the probe
+    // radius of its own; as multisets, so a pair surfacing twice fails
+    val planes = Similarity.hyperplanes(6, 64)
+    val b = ev.map { case (id, v) => id -> bucket(planes, v) }.toMap
+    for (radius <- Seq(1, 2)) {
+      val got = Similarity.lshTopK(q, e, k = 5, nPlanes = 6, probeRadius = radius)
+      val expect = AnnReference.topK(qv, ev, k = 5)((x, y) =>
+        java.lang.Long.bitCount(b(x) ^ b(y)) <= radius)
+      assert(bag(AnnReference.rows(got)) == bag(expect), s"radius $radius")
+    }
+  }
+
   test("LSH top-1 recall vs brute force is reasonable") {
     import spark.implicits._
     val e = Tables.embeddings(spark, sf)
     val q = e.filter($"vec_id" < 50)
-    val exact = Similarity.bruteForceTopK(q, e, k = 1)
+    def pairs(df: org.apache.spark.sql.DataFrame) = bag(df
       .select($"query_id", $"cand_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val single = Similarity.lshTopK(q, e, k = 1, nPlanes = 4, probeRadius = 0)
-      .select($"query_id", $"cand_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val multi = Similarity.lshTopK(q, e, k = 1, nPlanes = 4, probeRadius = 2)
-      .select($"query_id", $"cand_id").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def recall(m: Map[Long, Long]): Int =
-      exact.count { case (qid, cid) => m.get(qid).contains(cid) }
+      .map(r => (r.getLong(0), r.getLong(1))))
+    val exact = pairs(Similarity.bruteForceTopK(q, e, k = 1))
+    val single = pairs(Similarity.lshTopK(q, e, k = 1, nPlanes = 4, probeRadius = 0))
+    val multi = pairs(Similarity.lshTopK(q, e, k = 1, nPlanes = 4, probeRadius = 2))
+    def recall(m: Map[(Long, Long), Int]): Int =
+      m.map { case (pair, c) => c * exact.getOrElse(pair, 0) }.sum
+    val n = exact.values.sum
     // multi-probe must materially beat single-probe and clear a floor
     assert(recall(multi) > recall(single),
       s"multi-probe (${recall(multi)}) should beat single-probe (${recall(single)})")
-    assert(recall(multi) >= exact.size / 5,
-      s"LSH top-1 recall too low: ${recall(multi)}/${exact.size}")
+    assert(recall(multi) >= n / 5,
+      s"LSH top-1 recall too low: ${recall(multi)}/$n")
   }
 
   test("cosineNearDupPairs equals a driver-side bucket+verify reference") {
     import spark.implicits._
-    val vecs = Tables.embeddings(spark, sf).filter($"vec_id" % 5 === 0)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val vecs = AnnReference.vectors(
+      Tables.embeddings(spark, sf).filter($"vec_id" % 5 === 0))
     val planes = Similarity.hyperplanes(6, 64)
-    def bucket(v: Array[Float]): Long = {
-      var b = 0L
-      planes.indices.foreach { p =>
-        var dot = 0.0
-        v.indices.foreach(j => dot += v(j).toDouble * planes(p)(j))
-        if (dot >= 0) b |= (1L << p)
-      }
-      b
-    }
-    def cos6(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      a.indices.foreach { i =>
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-      }
-      BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    val expected = (for {
+    val expected = bag(for {
       (ia, va) <- vecs; (ib, vb) <- vecs
       if ia < ib
-      if java.lang.Long.bitCount(bucket(va) ^ bucket(vb)) <= 1
-      if cos6(va, vb) >= 0.3
-    } yield (ia, ib)).toSet
-    val got = Similarity.cosineNearDupPairs(Tables.embeddings(spark, sf),
+      if java.lang.Long.bitCount(bucket(planes, va) ^ bucket(planes, vb)) <= 1
+      if AnnReference.cosine6(va, vb) >= 0.3
+    } yield (ia, ib))
+    val got = bag(Similarity.cosineNearDupPairs(Tables.embeddings(spark, sf),
         threshold = 0.3, sampleMod = 5, nPlanes = 6, dim = 64, probeRadius = 1)
       .select($"id_a", $"id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
     assert(expected.nonEmpty && got == expected)
   }
 
@@ -119,43 +128,23 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // 8 copies of each of the first 40 sampled embeddings → distinct/raw
     // = 40/320 < 0.8 triggers the collapsed path; expected set from the
     // same driver-side bucket+verify reference over ALL member vectors
-    val baseRows = Tables.embeddings(spark, sf).filter($"vec_id" < 200)
-      .filter($"vec_id" % 5 === 0)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val baseRows = AnnReference.vectors(Tables.embeddings(spark, sf)
+      .filter($"vec_id" < 200).filter($"vec_id" % 5 === 0))
     val members = for {
-      (id, emb) <- baseRows.toSeq
+      (id, emb) <- baseRows
       c <- 0 until 8
     } yield (id * 1000 + c, emb)
     val df = members.map { case (id, e) => (id, e.toSeq) }
       .toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>"))
     val planes = Similarity.hyperplanes(6, 64)
-    def bucket(v: Array[Float]): Long = {
-      var b = 0L
-      planes.indices.foreach { p =>
-        var dot = 0.0
-        v.indices.foreach(j => dot += v(j).toDouble * planes(p)(j))
-        if (dot >= 0) b |= (1L << p)
-      }
-      b
-    }
-    def cos6(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      a.indices.foreach { i =>
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dot += x * y; na += x * x; nb += y * y
-      }
-      BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
     // multisets (row → count) including the cosine: a duplicated
     // expansion row or a wrong inherited value fails
     val expected = bag(for {
       (ia, va) <- members; (ib, vb) <- members
       if ia < ib
-      if java.lang.Long.bitCount(bucket(va) ^ bucket(vb)) <= 1
-      c = cos6(va, vb)
+      if java.lang.Long.bitCount(bucket(planes, va) ^ bucket(planes, vb)) <= 1
+      c = AnnReference.cosine6(va, vb)
       if c >= 0.3
     } yield (ia, ib, c))
     val got = bag(Similarity.cosineNearDupPairs(df,

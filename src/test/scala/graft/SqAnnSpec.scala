@@ -50,40 +50,55 @@ class SqAnnSpec extends AnyFunSuite with SparkSpec {
   test("sq8 top-5 recalls the brute-force top-5 through a 20-shortlist") {
     val e = Tables.embeddings(spark, sf)
     val q = e.filter($"vec_id" % 100 === 0)
-    val truth = Similarity.bruteForceTopK(q, e, k = 5).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))).toSet
-    val got = SqAnn.topK(q, e, shortlist = 20, k = 5).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))).toSet
-    val recall = got.intersect(truth).size.toDouble / truth.size
+    def pairs(df: org.apache.spark.sql.DataFrame) = bag(df.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))))
+    val truth = pairs(Similarity.bruteForceTopK(q, e, k = 5))
+    val got = pairs(SqAnn.topK(q, e, shortlist = 20, k = 5))
+    val recall = got.map { case (pair, c) => c * truth.getOrElse(pair, 0) }
+      .sum.toDouble / truth.values.sum
     assert(recall >= 0.8, s"sq8 recall@5 $recall vs exact")
   }
 
   test("spilled SQ8 lane == plain spilled lane when the shortlist covers every candidate") {
     // r15 frontier combo: the SQ8 code scan inside the spilled index
     // changes bandwidth, not candidates — with shortlist >= corpus the
-    // exact rerank sees every visited pair, so (query, cand, rank)
-    // must equal IvfAnn.topKSpill's exactly
+    // exact rerank sees every visited pair, so (query, cand, cosine,
+    // rank) must equal the spilled IvfAnn.topK's exactly, and both the
+    // exact reference over the probed cells (as multisets: a pair met
+    // in two shared cells must surface once)
     val e = Tables.embeddings(spark, sf)
     val q = e.filter($"vec_id" < 10)
     val model = graft.operators.IvfAnn.train(e, "vec_id", "embedding", k = 32)
-    def trip(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"),
-        r.getAs[Long]("rank"))).toSet
-    val plain = trip(graft.operators.IvfAnn.topKSpill(q, e, k = 5, model,
-      nProbe = 6, spill = 2))
-    val sq8 = trip(SqAnn.topKSpillSq8(q, e, k = 5, model,
-      nProbe = 6, spill = 2, shortlist = Int.MaxValue))
+    val plain = bag(AnnReference.rows(graft.operators.IvfAnn.topK(q, e, k = 5,
+      model, nProbe = 6, spill = 2)))
+    val sq8 = bag(AnnReference.rows(SqAnn.topKSpillSq8(q, e, k = 5, model,
+      nProbe = 6, spill = 2, shortlist = Int.MaxValue)))
     assert(sq8 == plain,
-      s"missing=${(plain -- sq8).take(3)} extra=${(sq8 -- plain).take(3)}")
+      s"missing=${(plain.toSet -- sq8.toSet).take(3)} extra=${(sq8.toSet -- plain.toSet).take(3)}")
+    def cells(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.select($"vec_id", c).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Int](1).toSet).toMap
+    val probed = cells(q, graft.operators.IvfAnn.probeCells($"embedding", model, 6))
+    val held = cells(e, graft.operators.IvfAnn.assignCells($"embedding", model, 2))
+    assert(sq8 == bag(AnnReference.topK(AnnReference.vectors(q),
+      AnnReference.vectors(e), k = 5)((a, b) => (probed(a) & held(b)).nonEmpty)))
+  }
+
+  test("flat SQ8 with a full shortlist equals the exact reference") {
+    val e = Tables.embeddings(spark, sf)
+    val q = e.filter($"vec_id" % 50 === 0)
+    val got = SqAnn.topK(q, e, shortlist = Int.MaxValue, k = 5)
+    assert(bag(AnnReference.rows(got)) == bag(AnnReference.topK(
+      AnnReference.vectors(q), AnnReference.vectors(e), k = 5)((_, _) => true)))
   }
 
   test("approx scores order like true scores at the top (rank-1 agreement)") {
     val e = Tables.embeddings(spark, sf)
     val q = e.filter($"vec_id" % 100 === 0)
-    val truth = Similarity.bruteForceTopK(q, e, k = 1).collect()
-      .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("cand_id")).toMap
-    val got = SqAnn.topK(q, e, shortlist = 20, k = 1).collect()
-      .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("cand_id")).toMap
-    assert(got == truth, "exact rerank over the shortlist must pin rank 1")
+    def pairs(df: org.apache.spark.sql.DataFrame) = bag(df.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("cand_id"))))
+    assert(pairs(SqAnn.topK(q, e, shortlist = 20, k = 1)) ==
+      pairs(Similarity.bruteForceTopK(q, e, k = 1)),
+      "exact rerank over the shortlist must pin rank 1")
   }
 }
