@@ -80,8 +80,8 @@ object Harness {
     * DataFrame is built), and the noop sink materializes every row and
     * column — count() would let Catalyst prune the work being measured.
     * A failure is recorded in the returned [[LaneRun]], never rethrown.
-    * Stage totals cover exactly this run: the listener bus is drained
-    * before the run starts and again before the snapshot. */
+    * Job and stage totals cover exactly this run: the listener bus is
+    * drained before the run starts and again before the snapshot. */
   def runLane(spark: SparkSession,
               f: (SparkSession, String) => org.apache.spark.sql.DataFrame,
               dir: String): LaneRun = {
@@ -102,10 +102,10 @@ object Harness {
     val jit1 = Sentinel.jitMs()
     val cg1 = Sentinel.codegenCompiles()
     meter.drain(spark.sparkContext)
-    val (top, stages, stageWall) = meter.snapshot()
+    val (top, jobs, stages, stageWall) = meter.snapshot()
     LaneRun(seconds, error, build,
       if (jit0 < 0 || jit1 < 0) None else Some(jit1 - jit0),
-      cg1 - cg0, stages, stageWall, top)
+      cg1 - cg0, jobs, stages, stageWall, top)
   }
 
   /** Drop everything a finished lane left behind so the next one is

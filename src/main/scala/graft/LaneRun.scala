@@ -31,36 +31,42 @@ final case class StageRow(id: Int, wall: Double, cpu: Double, run: Double,
   *                        ("no meter" is not "no JIT work")
   * @param codegenCompiles whole-stage-codegen compiles during the run — a
   *                        compile is a codegen-cache miss
+  * @param jobs            Spark jobs started during the run — the fixed
+  *                        per-job cost (scheduling, a result stage, a
+  *                        listener round) is paid once each
   * @param stages          stages completed during the run
   * @param stageWall       their summed wall seconds
   * @param topStages       the slowest stages over 0.5 s (at most 20),
   *                        slowest first */
 final case class LaneRun(seconds: Double, error: Option[String],
                          buildSeconds: Double, jitMs: Option[Long],
-                         codegenCompiles: Long, stages: Long,
+                         codegenCompiles: Long, jobs: Long, stages: Long,
                          stageWall: Double, topStages: Seq[StageRow]) {
   def json: String =
     s"""{"seconds":${Json.num(seconds)},""" +
     s""""error":${error.map(Json.str).getOrElse("null")},""" +
     s""""build_s":${Json.num(buildSeconds)},""" +
     s""""jit_ms":${jitMs.fold("null")(_.toString)},""" +
-    s""""codegen_compiles":$codegenCompiles,"n_stages":$stages,""" +
+    s""""codegen_compiles":$codegenCompiles,"n_jobs":$jobs,""" +
+    s""""n_stages":$stages,""" +
     s""""stage_wall_sum":${Json.num(stageWall)},""" +
     s""""stages":${topStages.map(_.json).mkString("[", ",", "]")}}"""
 }
 
 /** The stage listener behind [[Harness.runLane]], attached once per
-  * SparkContext ([[StageMeter.on]]). It folds every completed stage into
-  * a (count, wall) total and keeps a row per stage over 0.5 s — slow
-  * lanes are often many sub-second stages, which only the totals show.
+  * SparkContext ([[StageMeter.on]]). It counts job starts, folds every
+  * completed stage into a (count, wall) total and keeps a row per stage
+  * over 0.5 s — slow lanes are often many sub-second stages, which only
+  * the totals show.
   *
   * Listener events arrive asynchronously, so a stage of a finished run
   * could otherwise land in the next run's record. [[drain]] closes that:
   * it runs a one-task marker job and waits for the marker's job-end
   * event, which the bus delivers after every event queued before it.
-  * The marker's own stage is not counted. */
+  * The marker's own job and stage are not counted. */
 private[graft] final class StageMeter extends SparkListener {
   private val rows = scala.collection.mutable.ArrayBuffer.empty[StageRow]
+  private var jobs = 0L
   private var count = 0L
   private var wallMs = 0L
   private val markerJobs =
@@ -69,12 +75,14 @@ private[graft] final class StageMeter extends SparkListener {
   private val pending =
     new java.util.concurrent.ConcurrentHashMap[String, CountDownLatch]()
 
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    Option(e.properties).flatMap(p => Option(p.getProperty(StageMeter.Marker)))
-      .foreach { token => synchronized {
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    Option(e.properties).flatMap(p => Option(p.getProperty(StageMeter.Marker))) match {
+      case Some(token) =>
         markerStages ++= e.stageIds
         Option(pending.remove(token)).foreach(markerJobs(e.jobId) = _)
-      }}
+      case None => jobs += 1
+    }
+  }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
     synchronized(markerJobs.remove(e.jobId)).foreach(_.countDown())
@@ -114,12 +122,12 @@ private[graft] final class StageMeter extends SparkListener {
     }
   }
 
-  /** (top stages, stage count, stage wall s) since the last snapshot;
-    * resets all three. */
-  def snapshot(): (Seq[StageRow], Long, Double) = synchronized {
+  /** (top stages, job count, stage count, stage wall s) since the last
+    * snapshot; resets all four. */
+  def snapshot(): (Seq[StageRow], Long, Long, Double) = synchronized {
     val top = rows.sortBy(-_.wall).take(20).toSeq
-    val r = (top, count, wallMs / 1000.0)
-    rows.clear(); count = 0L; wallMs = 0L
+    val r = (top, jobs, count, wallMs / 1000.0)
+    rows.clear(); jobs = 0L; count = 0L; wallMs = 0L
     r
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
   *
@@ -13,8 +14,33 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Per input path, the schema Spark inferred for it and the version it
+    * was inferred at: the files' [[operators.DerivedCache.fingerprint]]
+    * plus the session's parquet read confs (`nanosAsLong` changes a
+    * column's type). One entry per path; a new version replaces it. */
+  private val known =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** The table `name` under `sfDir`. The first read of a file version
+    * infers its schema through Spark (a one-task footer job); later reads
+    * of the same version hand Spark that schema and run no job. Spark
+    * marks a file relation all-nullable either way, so both reads expose
+    * the same schema. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val version = operators.DerivedCache.fingerprint(Seq(path)) + "|" +
+      spark.conf.getAll.toSeq.sorted.collect {
+        case (k, v) if k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") => s"$k=$v"
+      }.mkString(",")
+    Option(known.get(path)) match {
+      case Some((`version`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        known.put(path, (version, df.schema))
+        df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

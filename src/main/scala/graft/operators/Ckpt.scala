@@ -59,7 +59,8 @@ object Ckpt {
     * Exactness: loop frames here are longs/doubles/strings — parquet
     * round-trips them bit-exactly (the DerivedCache contract). Files
     * live under the JVM's checkpoint dir and are reclaimed by the same
-    * shutdown hook. */
+    * shutdown hook. The read-back takes the written frame's schema, so
+    * the round-trip is the write job alone: no footer-inference job. */
   def viaParquet(df: DataFrame, parts: Int = 0): DataFrame =
     viaParquetPath(df, parts)._1
 
@@ -72,7 +73,7 @@ object Ckpt {
     val p = s.sparkContext.getCheckpointDir.get + "/pq" + seq.incrementAndGet()
     val w = if (parts > 0) df.coalesce(parts) else df
     w.write.mode("overwrite").parquet(p)
-    (s.read.parquet(p), p)
+    (s.read.schema(w.schema).parquet(p), p)
   }
 
   /** Delete EVERYTHING under the JVM's checkpoint dir — both Spark's

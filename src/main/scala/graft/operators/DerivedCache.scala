@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Write-once derived-table cache — the generalized form of the
   * machinery [[CoPurchase]] introduced: build a deterministic derived
@@ -24,11 +25,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * derived table would nest computes on the same map, which throws
   * "Recursive update" whenever the two keys share a hash bin (bin
   * placement depends on the key string, so it bites only on some data
-  * dirs — found the hard way in round 11). */
+  * dirs — found the hard way in round 11).
+  * Reads: each entry keeps the schema of the frame it wrote, and every
+  * read hands Spark that schema, so no read runs a footer-inference job
+  * for a file this JVM wrote itself. */
 object DerivedCache {
 
-  private val paths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** A written derivation: its parquet path and the written frame's
+    * schema, set together and dropped together. */
+  private final case class Written(path: String, schema: StructType)
+
+  private val written =
+    new java.util.concurrent.ConcurrentHashMap[String, Written]()
   // birth order of cache entries (monotonic, no wall clock): eviction
   // spares any entry born after an evictor captured its view of the
   // input state — see evictSuperseded
@@ -158,7 +166,7 @@ object DerivedCache {
   private def evictSuperseded(baseKey: String, keep: String,
                               inputs: Seq[String]): Unit = {
     import scala.jdk.CollectionConverters._
-    val stale = paths.keySet.asScala.toSeq
+    val stale = written.keySet.asScala.toSeq
       .filter(k => k != keep && k.startsWith(baseKey + "@"))
     if (stale.nonEmpty) {
       val cutoff = births.get() // BEFORE the refingerprint, see above
@@ -178,10 +186,10 @@ object DerivedCache {
         born.getOrDefault(k, 0L) <= cutoff)
       .foreach { k =>
         keyLocks.computeIfAbsent(k, _ => new Object).synchronized {
-          val p = paths.remove(k)
+          val w = written.remove(k)
           born.remove(k)
-          if (p != null)
-            try graft.Fs.deleteRec(java.nio.file.Paths.get(p))
+          if (w != null)
+            try graft.Fs.deleteRec(java.nio.file.Paths.get(w.path))
             catch { case _: Exception => () }
         }
       }
@@ -196,22 +204,26 @@ object DerivedCache {
     * JVM's lifetime — prefer [[tableFor]], which checks instead of
     * trusting. */
   def table(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val existing = paths.get(key)
-    val p = if (existing != null) existing
+    val existing = written.get(key)
+    val w = if (existing != null) existing
     else keyLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val again = paths.get(key)
+      val again = written.get(key)
       if (again != null) again
       else {
         val out = s"$baseDir/${Integer.toHexString(key.hashCode)}_" +
           key.replaceAll("[^A-Za-z0-9_.-]", "_").takeRight(40)
         // build time is once-per-JVM amortized work, metered separately
         // so bench cold numbers can split query from build (BuildMeter)
-        BuildMeter.time { build.write.mode("overwrite").parquet(out) }
+        val w = Written(out, BuildMeter.time {
+          val df = build
+          df.write.mode("overwrite").parquet(out)
+          df.schema
+        })
         born.put(key, births.incrementAndGet())
-        paths.put(key, out)
-        out
+        written.put(key, w)
+        w
       }
     }
-    s.read.parquet(p)
+    s.read.schema(w.schema).parquet(w.path)
   }
 }

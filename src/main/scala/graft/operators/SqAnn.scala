@@ -92,18 +92,19 @@ object SqAnn {
     search(queries, corpus, None, shortlist, k)
 
   /** The SQ8 search over the [[Ann.pairs]] of `probe`: the corpus side
-    * carries codes, not floats; approx is scored in the code domain
-    * (pairs met in several spilled cells collapse by max — the value is
-    * identical per copy), cut to the per-query `shortlist` by (approx
-    * desc, cand_id), and only the shortlist re-joins the floats for the
-    * exact cosine rerank, `approx` riding along. */
+    * carries codes, not floats, and the per-dimension ranges (computed
+    * once, cross-joined to the corpus scan); approx is scored in the code
+    * domain (pairs met in several spilled cells collapse by max — the
+    * value is identical per copy), cut to the per-query `shortlist` by
+    * (approx desc, cand_id), and only the shortlist re-joins the floats
+    * for the exact cosine rerank, `approx` riding along. */
   private def search(queries: DataFrame, corpus: DataFrame,
                      probe: Option[Ann.Probe], shortlist: Int,
                      k: Int): DataFrame = {
-    val stats = dimStats(corpus)
-    val visits = Ann.pairs(queries, corpus.crossJoin(broadcast(stats)), probe,
-        Seq(col("embedding").as("q_emb")), Seq(expr(codesExpr).as("codes")))
-      .crossJoin(broadcast(stats))
+    val visits = Ann.pairs(queries,
+        corpus.crossJoin(broadcast(dimStats(corpus))), probe,
+        Seq(col("embedding").as("q_emb")),
+        Seq(expr(codesExpr).as("codes"), col("mn_arr"), col("mx_arr")))
       .select(col("query_id"), col("cand_id"), expr(approxExpr).as("approx"))
     val scored = if (probe.exists(_.multi))
       visits.groupBy(col("query_id"), col("cand_id"))

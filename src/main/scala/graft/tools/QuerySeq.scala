@@ -14,7 +14,7 @@ import graft.{Harness, SparkEntry}
   * error, the once-per-JVM build seconds charged inside it, HotSpot JIT
   * ms and whole-stage-codegen compiles (codegen-cache misses — the
   * direct test of "is a repeat execution recompiling its plans?"), the
-  * stage count and wall, and every stage over 0.5 s.
+  * job count, the stage count and wall, and every stage over 0.5 s.
   *
   * Args: <q1,q2,...> [dir]
   */

@@ -176,6 +176,20 @@ class CacheLifecycleSpec extends AnyFunSuite with SparkSpec {
     assert(baseChildren.subsetOf(ckptChildren()))
   }
 
+  test("Ckpt.viaParquet's read-back adds no job beyond the write") {
+    import graft.operators.Ckpt
+    import spark.implicits._
+    val df = (1L to 100L).toDF("v").repartition(2).select($"v", ($"v" % 7).as("m"))
+    val plain = java.nio.file.Files.createTempDirectory("ckpt-plain")
+    val (_, writeJobs) = jobsDuring(
+      df.write.mode("overwrite").parquet(plain.toString))
+    val (out, jobs) = jobsDuring { val o = Ckpt.viaParquet(df); o.schema; o }
+    assert(jobs == writeJobs, s"write alone ran $writeJobs job(s), viaParquet $jobs")
+    assert(out.schema == spark.read.parquet(plain.toString).schema)
+    assert(bag(out.collect().toSeq) == bag(df.collect().toSeq))
+    graft.Fs.deleteRec(plain)
+  }
+
   test("Ckpt.clearAll empties the checkpoint dir; later queries recheckpoint fine") {
     import graft.operators.Ckpt
     import spark.implicits._

@@ -58,6 +58,24 @@ class DerivedCacheSpec extends AnyFunSuite with SparkSpec {
     assert(builds.get() == 1)
   }
 
+  test("a second read runs no job and exposes the file's inferred schema") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val key = s"spec#schema-${System.nanoTime()}"
+    def get() = DerivedCache.table(spark, key) {
+      Seq((1L, Seq(1.5f, 2.5f), Map("a" -> 2), java.sql.Date.valueOf("2020-01-02"),
+          BigDecimal("1.25"), 0.5))
+        .toDF("l", "arr", "m", "d", "dec", "x")
+        .withColumn("st", struct($"l", $"arr", $"d"))
+    }
+    val first = get()
+    val (schema, jobs) = jobsDuring(get().schema)
+    assert(jobs == 0, s"a read of a written derivation ran $jobs job(s)")
+    val dir = new org.apache.hadoop.fs.Path(first.inputFiles.head).getParent.toString
+    assert(schema == spark.read.parquet(dir).schema)
+    assert(get().collect().toSeq == spark.read.parquet(dir).collect().toSeq)
+  }
+
   test("tableFor rebuilds when an input file changes, caches when it doesn't") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}

@@ -40,6 +40,8 @@ class LaneRunSpec extends AnyFunSuite with SparkSpec {
     assert(r.stageWall >= 0 && r.buildSeconds >= 0 && r.codegenCompiles >= 0)
     assert(r.topStages.forall(_.wall > 0.5))
     assert(r.json.contains(s""""n_stages":${r.stages}"""))
+    assert(r.jobs >= 1, s"expected >= 1 job, got ${r.jobs}")
+    assert(r.json.contains(s""""n_jobs":${r.jobs}"""))
   }
 
   test("repeated runs share one listener and never inherit earlier stages") {
@@ -62,8 +64,10 @@ class LaneRunSpec extends AnyFunSuite with SparkSpec {
     } finally sc.removeSparkListener(slow)
     assert(Seq(first, bigger, again).forall(_.error.isEmpty))
     assert(first.stages >= 2, s"late stage events missed: $first")
+    assert(first.jobs >= 1, s"late job events missed: $first")
     assert(bigger.stages > first.stages, s"$bigger vs $first")
-    // double counting (two listeners) or carry-over would inflate it
+    // double counting (two listeners) or carry-over would inflate them
     assert(again.stages == first.stages, s"$again vs $first")
+    assert(again.jobs == first.jobs, s"$again vs $first")
   }
 }

@@ -14,4 +14,16 @@ trait SparkSpec {
     * row, which a Set comparison lets pass. */
   def bag[T](rows: Iterable[T]): Map[T, Int] =
     rows.groupBy(identity).view.mapValues(_.size).toMap
+
+  /** `body`'s value and the Spark jobs it started, counted by the lane
+    * meter ([[Harness.runLane]]'s `n_jobs`). */
+  def jobsDuring[T](body: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val meter = StageMeter.on(sc)
+    meter.drain(sc)
+    meter.snapshot()
+    val r = body
+    meter.drain(sc)
+    (r, meter.snapshot()._2)
+  }
 }
