@@ -826,14 +826,24 @@ object SparkEntry {
   /** q_quality_lr's trained classifier (bounded-sample in-process GD is
     * bit-deterministic: fixed sample order, fixed iteration count — see
     * QualityLr.train's scaladoc). */
-  private val qualityLrModel = new ModelMemo("qualityLr")((s, d) => {
-    val toks = graft.functions.TextFns.tokens(col("text"))
-    val keep = graft.functions.TextFns.qualityKeep(
-      length(col("text")).cast(LongType), size(toks).cast(LongType),
-      graft.functions.TextFns.meanWordLen(toks))
+  private val qualityLrModel = new ModelMemo("qualityLr")((s, d) =>
     operators.QualityLr.train(Tables.documents(s, d), col("text"),
-      col("doc_id"), when(keep, 1.0).otherwise(0.0))
-  })
+      col("doc_id"), when(qualityKeepRule, 1.0).otherwise(0.0)))
+
+  /** The quality lanes' teacher: TextFns.qualityKeep's band rule. */
+  private def qualityKeepRule: Column = {
+    val toks = TextFns.tokens(col("text"))
+    TextFns.qualityKeep(length(col("text")).cast(LongType),
+      size(toks).cast(LongType), TextFns.meanWordLen(toks))
+  }
+
+  /** q_quality_lr's per-doc (doc_id, y, logit, pred): the memoized
+    * model scored over the documents, the keep rule as y. The four
+    * quality lanes read the same scored corpus. */
+  private def qualityLrScored(s: SparkSession, dir: String): DataFrame =
+    operators.QualityLr.score(Tables.documents(s, dir), col("text"),
+      col("doc_id"), when(qualityKeepRule, 1L).otherwise(0L),
+      qualityLrModel(s, dir))
 
   /** q_bpe_merges/q_bpe_encode's tokenizer vocab (training is
     * deterministic: argmax tiebreak is (freq DESC, left, right) over
@@ -2782,18 +2792,14 @@ object SparkEntry {
       // (degree-ordered orientation bounds wedge fan-out at O(m^1.5) —
       // the hub-safe classic; see operators.Triangles). Integer counts
       // → exact SQL replay; top-50 via TakeOrderedAndProject. Shared
-      // materialized edge table (operators.CoPurchase). r15: the lane
-      // is SELF-SIZING — wedge volume (one cheap agg) picks the
-      // close-shuffle width and the K-slice count, so the sf1+ wedge
-      // growth that spilled the fixed 32-partition close (80-170 s)
-      // runs wide instead (~40-65 s measured at sf1), and sf10's
-      // 4.1B-wedge disk wall engages the batched plan automatically.
-      // r15 second half: the MERGE-plan (edge-iterator over sorted
-      // adjacency arrays through the primitive intersect kernel) —
-      // no wedge table ever materializes, so the close-shuffle sizing
-      // question disappears; sf1 157 s (wedge) → ~25 s (merge). The
-      // wedge-join machinery (perNode/perNodeAdaptive, K-slices)
-      // stays for the scale tools and as the spec cross-check.
+      // materialized edge table (operators.CoPurchase). r15: the
+      // MERGE plan (edge-iterator over sorted adjacency arrays through
+      // the primitive intersect kernel) — no wedge table ever
+      // materializes, so the close-shuffle sizing question of the
+      // wedge plan disappears; sf1 157 s (wedge) → ~25 s (merge). The
+      // wedge plan (Triangles.perNode, K slices) stays for
+      // tools.TriangleScale's bounded-disk sf10 runs and as the spec
+      // cross-check.
       // r16: the orientation and sorted-adjacency builds MATERIALIZE
       // write-once next to the edge table (CoPurchase.orientedFull /
       // triAdjacency — index-build work, metered in build_cold), so
@@ -4009,7 +4015,6 @@ object SparkEntry {
     }),
 
     "q_quality_lr" -> ((s, dir) => {
-      import s.implicits._
       // the DISCRIMINATIVE data-selection brick (GPT-3 §2.2 /
       // fasttext-style quality filter; q_dsir_weights is the generative
       // twin): TextFns.qualityKeep's band rule DISTILLED into a
@@ -4017,18 +4022,13 @@ object SparkEntry {
       // features — the cheap linear model a 100 TB curation pass runs
       // where the rule's raw-text scans are too hot. Trained once per
       // dir on the bounded id-ordered sample (the IvfAnn discipline),
-      // scored distributed (broadcast weight table, one corpus pass);
-      // the oracle replays scoring from the trained weights as SQL
-      // literals (the kmeansOracle recipe). The rule's label rides
-      // along as y, so the driver hash-checks the full per-doc
-      // CONFUSION SURFACE (y, logit, pred), not just scores.
-      val m = qualityLrModel(s, dir)
-      val toksQ = graft.functions.TextFns.tokens($"text")
-      val keep = graft.functions.TextFns.qualityKeep(
-        length($"text").cast(LongType), size(toksQ).cast(LongType),
-        graft.functions.TextFns.meanWordLen(toksQ))
-      operators.QualityLr.score(Tables.documents(s, dir), $"text",
-        $"doc_id", when(keep, 1L).otherwise(0L), m)
+      // scored row-locally (the weights as a literal: one corpus pass,
+      // no shuffle, so no ORDER BY either — one row per doc, compared
+      // as sorted rows); the oracle replays scoring from the trained
+      // weights as SQL literals (the kmeansOracle recipe). The rule's
+      // label rides along as y, so the oracle check hashes the full
+      // per-doc CONFUSION SURFACE (y, logit, pred), not just scores.
+      qualityLrScored(s, dir)
     }),
 
     "q_pipeline_audit" -> ((s, dir) => {
@@ -6750,13 +6750,7 @@ object SparkEntry {
       // 8, bins are floor(10p) clamped, empirical rate exact-integer
       // ppm, mean p a decimal sum. One tiny rollup after the scoring
       // pass — the audit costs one aggregation at any corpus size.
-      val m = qualityLrModel(s, dir)
-      val toksQ = graft.functions.TextFns.tokens($"text")
-      val keep = graft.functions.TextFns.qualityKeep(
-        length($"text").cast(LongType), size(toksQ).cast(LongType),
-        graft.functions.TextFns.meanWordLen(toksQ))
-      val scored = operators.QualityLr.score(Tables.documents(s, dir),
-        $"text", $"doc_id", when(keep, 1L).otherwise(0L), m)
+      val scored = qualityLrScored(s, dir)
       val p = round(lit(1.0) / (lit(1.0) + exp(-$"logit")), 8)
       scored.select($"y", p.as("p"))
         .withColumn("bin",
@@ -6793,13 +6787,7 @@ object SparkEntry {
       // Same trained model as q_quality_lr; the oracle wraps that
       // query's literal replay in a CTE so the audit cannot drift
       // from the model it audits.
-      val m = qualityLrModel(s, dir)
-      val toksQ = graft.functions.TextFns.tokens($"text")
-      val keep = graft.functions.TextFns.qualityKeep(
-        length($"text").cast(LongType), size(toksQ).cast(LongType),
-        graft.functions.TextFns.meanWordLen(toksQ))
-      val scored = operators.QualityLr.score(Tables.documents(s, dir),
-        $"text", $"doc_id", when(keep, 1L).otherwise(0L), m)
+      val scored = qualityLrScored(s, dir)
       operators.RankStats.aucByMidrank(scored,
         expr("CAST(CAST(logit AS DECIMAL(18,6)) * 1000000 AS BIGINT)"),
         $"y")
@@ -6815,30 +6803,32 @@ object SparkEntry {
       // Same trained model and round-8 sigmoid as q_lr_calibration;
       // the corpus collapses to the distinct-p grid first (the
       // q_lr_auc shape — count + positives per exact p in 1e-8
-      // units), then nine broadcast threshold rows sweep the grid,
-      // so the per-threshold rollup costs grid-rows × 9, never
-      // corpus × 9. Exact integer ppm ratios; a threshold selecting
-      // nothing drops from the table identically on both engines
-      // (inner θ-join), and the NULL-precision guard covers the
-      // n_selected = 0 case should a future label source allow it.
-      val m = qualityLrModel(s, dir)
-      val toksQ = graft.functions.TextFns.tokens($"text")
-      val keep = graft.functions.TextFns.qualityKeep(
-        length($"text").cast(LongType), size(toksQ).cast(LongType),
-        graft.functions.TextFns.meanWordLen(toksQ))
-      val scored = operators.QualityLr.score(Tables.documents(s, dir),
-        $"text", $"doc_id", when(keep, 1L).otherwise(0L), m)
+      // units), then ONE aggregate over the grid sums the positives
+      // and, per threshold, the docs and positives at or above it — the
+      // rollup costs grid-rows × 9, never corpus × 9, and the corpus
+      // is scored once (a θ-join against threshold rows would copy the
+      // row-local scorer into the join's inferred not-null filter, and
+      // a separate totals branch would score it again). Exact integer ppm
+      // ratios; a threshold selecting nothing has NULL sums and drops
+      // from the table, as the oracle's inner θ-join drops it, and the
+      // NULL-precision guard covers the n_selected = 0 case should a
+      // future label source allow it.
+      val scored = qualityLrScored(s, dir)
       val grid = scored
         .select(expr(
             "CAST(CAST(round(1.0 / (1.0 + exp(-logit)), 8) AS DECIMAL(18,8))" +
             " * 100000000 AS BIGINT)").as("p8"), $"y")
         .groupBy($"p8").agg(count(lit(1)).as("t"), sum($"y").as("pos"))
-      val tot = grid.agg(sum($"t").as("n_docs"), sum($"pos").as("n_pos"))
-      val thr = (1 to 9).map(i => i * 10000000L).toDF("thr8")
-      grid.join(broadcast(thr), $"p8" >= $"thr8")
-        .groupBy($"thr8")
-        .agg(sum($"t").as("n_selected"), sum($"pos").as("tp"))
-        .crossJoin(broadcast(tot))
+      val perThreshold = (1 to 9).map { i =>
+        val at = $"p8" >= i * 10000000L
+        struct(lit(i * 10000000L).as("thr8"),
+          sum(when(at, $"t")).as("n_selected"),
+          sum(when(at, $"pos")).as("tp"))
+      }
+      grid.agg(sum($"pos").as("n_pos"), array(perThreshold: _*).as("ts"))
+        .select($"n_pos", explode($"ts").as("th"))
+        .select($"n_pos", $"th.*")
+        .filter($"n_selected".isNotNull)
         .select(expr("thr8 div 100").cast(LongType).as("threshold_ppm"),
           $"n_selected", $"tp",
           when($"n_selected" === 0, lit(null).cast(LongType))

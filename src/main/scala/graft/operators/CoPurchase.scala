@@ -203,10 +203,4 @@ object CoPurchase {
   def refreshedEdges(existingEdges: DataFrame, deltaFact: DataFrame,
                      cap: Int = FullCap): DataFrame =
     existingEdges.unionByName(edgeDelta(existingEdges, deltaFact, cap))
-
-  /** The refreshed items table: existing ∪ the delta's capped items —
-    * disjoint by construction (new baskets only), so a plain union. */
-  def refreshedItems(existingItems: DataFrame, deltaFact: DataFrame,
-                     cap: Int = FullCap): DataFrame =
-    existingItems.unionByName(itemsOf(deltaFact, cap))
 }

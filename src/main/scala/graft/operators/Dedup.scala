@@ -52,12 +52,6 @@ object Dedup {
         transform(sequence(lit(1), size(toks) - (k - 1)),
           i => concat_ws(" ", slice(toks, i, lit(k))))))
 
-  /** Distinct word k-shingles from raw text. ONLY for single-reference
-    * contexts — tokenization is inlined into the lambda and re-runs per
-    * shingle position. Hot paths: materialize tokens, use wordShinglesOf. */
-  def wordShingles(text: Column, k: Int): Column =
-    wordShinglesOf(TextFns.tokens(text), k)
-
   /** Distinct char n-gram hashes, sorted — native kernel, one UTF-8 walk
     * per doc, no per-gram string allocation. Jaccard over these equals
     * Jaccard over the gram strings (64-bit hashes; collision odds are
@@ -113,8 +107,8 @@ object Dedup {
     * of non-empty shingle sets (two empty sets are jaccard 0.0 by
     * convention, which the verify drops, so the expansion must too).
     * [[MinhashTables]] writes it as derived parquet and reads it back in
-    * this shape, so the inline operators and the derived tables share
-    * [[pairsOf]] and [[clustersOf]]. */
+    * this shape, so the inline pairs and the derived tables share
+    * [[pairsOf]]; the derived clusters are [[clustersOf]] of it. */
   private[operators] final case class LshCore(memb: DataFrame,
                                               verified: DataFrame,
                                               intra: DataFrame)
@@ -143,32 +137,19 @@ object Dedup {
 
   /** Incremental corpus dedup — the production shape of near-dup removal:
     * an INCREMENT (today's crawl) arrives against an EXISTING corpus and
-    * only increment docs may be dropped. Emits one row per increment doc:
-    * (doc_id, n_existing_dups, n_earlier_incoming_dups, kept) with
-    * `kept` = no near-dup partner in the existing corpus AND none among
-    * increment docs with a smaller id (existing always wins; first-wins
-    * inside the increment — the deterministic one-pass greedy policy, NOT
-    * transitive closure: an increment doc is judged on its OWN partners,
-    * so a chain a~b~c with only a dup-of-existing keeps c if c itself has
-    * no dropped-or-existing partner; use [[minhashLshClusters]] when
-    * component-level semantics are wanted).
-    *
-    * Built compositionally: [[minhashLshPairs]] over the tagged union —
-    * all banding/collapse/verify machinery applies — then
-    * [[incrementalKeep]] over those pairs. The pairs are those of the
-    * whole corpus, so a corpus whose pair table is already derived
-    * ([[MinhashTables.pairs]], what q_dedup_incremental reads) skips the
-    * LSH pass entirely and pays only the keep step. */
-  def minhashIncrementalKeep(df: DataFrame, text: Column, id: Column,
-                             isExisting: Column,
-                             shingleK: Int = 3, numHashes: Int = 64,
-                             bands: Int = 16, threshold: Double = 0.5,
-                             splitThreshold: Int = 4096): DataFrame =
-    incrementalKeep(minhashLshPairs(df, text, id, shingleK, numHashes,
-      bands, threshold, splitThreshold), df, id, isExisting)
-
-  /** The keep step of [[minhashIncrementalKeep]] over a near-dup pair
-    * table (id_a, id_b, ...) of the corpus `df`. */
+    * only increment docs may be dropped. Over a near-dup pair table
+    * (id_a, id_b, ...) of the whole corpus `df` (the tagged union —
+    * [[minhashLshPairs]], or the derived [[MinhashTables.pairs]] that
+    * q_dedup_incremental reads, so the lane pays only this keep step),
+    * emits one row per increment doc: (doc_id, n_existing_dups,
+    * n_earlier_incoming_dups, kept) with `kept` = no near-dup partner in
+    * the existing corpus AND none among increment docs with a smaller id
+    * (existing always wins; first-wins inside the increment — the
+    * deterministic one-pass greedy policy, NOT transitive closure: an
+    * increment doc is judged on its OWN partners, so a chain a~b~c with
+    * only a dup-of-existing keeps c if c itself has no
+    * dropped-or-existing partner; use [[MinhashTables.clusters]] when
+    * component-level semantics are wanted). */
   def incrementalKeep(pairs: DataFrame, df: DataFrame, id: Column,
                       isExisting: Column): DataFrame = {
     val tags = df.select(id.as("doc_id"), isExisting.as("is_existing"))
@@ -194,33 +175,19 @@ object Dedup {
         coalesce(col("n_earlier_incoming_dups"), lit(0L)) === 0).as("kept"))
   }
 
-  /** Near-duplicate CLUSTERS via MinHash LSH + connected components,
-    * (doc_id, cluster_id = min reachable doc id) — only docs that appear
-    * in at least one near-dup pair, exactly [[DedupClusters.clusters]]
-    * over [[minhashLshPairs]], but when exact-dup cliques dominate the
-    * iterative CC runs on the REPRESENTATIVE pair graph (one node per
-    * distinct shingle set) and member labels attach afterwards with one
-    * join: a clique's members all carry their rep's component label, and
-    * every rep is its clique's MINIMUM member id, so the rep graph's
+  /** Near-duplicate CLUSTERS of a core, (doc_id, cluster_id = min
+    * reachable doc id) — only docs that appear in at least one near-dup
+    * pair, exactly [[DedupClusters.clusters]] over the core's member
+    * pairs ([[pairsOf]]). On the collapsed side the CC runs on the
+    * REPRESENTATIVE pair graph (one node per distinct shingle set, never
+    * the expanded clique edges) and member labels attach afterwards with
+    * one join: a clique's members all carry their rep's component label,
+    * and every rep is its clique's MINIMUM member id, so the rep graph's
     * component minima ARE the expanded graph's labels. At 100× bench
     * scale this iterates over thousands of rep edges instead of tens of
-    * millions of expanded clique edges. The verified pairs are written
-    * to parquet once here, so the CC rounds scan them instead of
-    * re-running the LSH plan. The near-dup lanes read it from the
-    * derived [[MinhashTables.clusters]] table. */
-  def minhashLshClusters(df: DataFrame, text: Column, id: Column,
-                         shingleK: Int = 3, numHashes: Int = 64,
-                         bands: Int = 16, threshold: Double = 0.5,
-                         splitThreshold: Int = 4096): DataFrame = {
-    val core = minhashLshCore(df, text, id, shingleK, numHashes, bands,
-      threshold, splitThreshold)
-    clustersOf(core.copy(verified = Ckpt.viaParquet(core.verified)))
-  }
-
-  /** The clusters of a core: CC over its verified pairs, which are the
-    * rep pairs on the collapsed side (never the expanded clique edges),
-    * with member labels attached there. `core.verified` should be a
-    * plain scan ([[DedupClusters.clusters]] reads it more than once). */
+    * millions of expanded clique edges. `core.verified` should be a
+    * plain scan ([[DedupClusters.clusters]] reads it more than once);
+    * [[MinhashTables.clusters]] passes its derived `verified` table. */
   private[operators] def clustersOf(core: LshCore): DataFrame = {
     val clusters =
       DedupClusters.clusters(core.verified, col("id_a"), col("id_b")).labels

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * small-star rounds (Kiveris et al., "Connected Components in MapReduce
   * and Beyond", SoCC 2014), run until the edges form a verified star
   * forest. The one CC operator: near-dup clustering
-  * ([[Dedup.minhashLshClusters]], [[MinhashTables.clusters]]) and
-  * q_graph_components both call [[clusters]].
+  * ([[MinhashTables.clusters]]) and q_graph_components both call
+  * [[clusters]].
   *
   * Input: undirected edges (idA, idB), any orientation, duplicates and
   * self-loops allowed. Output: (doc_id, cluster_id) for every id in the

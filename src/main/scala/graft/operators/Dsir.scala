@@ -25,12 +25,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *
   * Scale shape (the 100 TB path):
   *  - feature extraction is row-local (explode never shuffles a doc's
-  *    features as a set);
-  *  - both histograms are map-side partial aggregations down to at most
-  *    B rows — the ONLY corpus-wide state, independent of corpus size;
+  *    features as a set) and runs once into a persisted table;
+  *  - both histograms come from one map-side partial aggregation down
+  *    to at most B rows — the ONLY corpus-wide state, independent of
+  *    corpus size;
   *  - the λ table (≤ B rows) is BROADCAST by intent, so scoring is one
-  *    map-side join + a per-doc aggregation: two corpus scans total,
-  *    nothing quadratic, no driver-side loops.
+  *    map-side join + a per-doc aggregation: nothing quadratic, and
+  *    nothing corpus-sized is collected.
   */
 object Dsir {
 
@@ -60,67 +61,23 @@ object Dsir {
         "i -> concat(toks[i - 1], ' ', toks[i])) END)")).as("feature"): _*)
   }
 
-  /** Per-bucket smoothed log-ratio table λ[b] = round(ln p_t[b] − ln
-    * p_s[b], 8) over EVERY bucket 0..B-1 (unseen buckets still carry the
-    * smoothing mass — a doc hashing into them must be scored, not
-    * dropped). ≤ B rows; broadcast it. */
-  def logRatios(targetFeats: DataFrame, rawFeats: DataFrame,
-                numBuckets: Int): DataFrame = {
-    val s = targetFeats.sparkSession
-    def hist(f: DataFrame, cntName: String): DataFrame =
-      f.select(bucketOf(col("feature"), numBuckets).as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as(cntName))
-    val domain = s.range(numBuckets).select(col("id").as("bucket"))
-    val joined = domain
-      .join(hist(targetFeats, "cnt_t"), Seq("bucket"), "left")
-      .join(hist(rawFeats, "cnt_s"), Seq("bucket"), "left")
-      .select(col("bucket"),
-        coalesce(col("cnt_t"), lit(0L)).as("cnt_t"),
-        coalesce(col("cnt_s"), lit(0L)).as("cnt_s"))
-    val totals = joined.agg(sum(col("cnt_t")).as("tot_t"),
-      sum(col("cnt_s")).as("tot_s"))
-    joined.crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        round(log((col("cnt_t") + 1).cast(DoubleType) /
-            (col("tot_t") + numBuckets)) -
-          log((col("cnt_s") + 1).cast(DoubleType) /
-            (col("tot_s") + numBuckets)), 8)
-          .cast(DecimalType(18, 8)).as("lambda"))
-  }
-
-  /** Per-doc DSIR log importance weights against a target slice:
-    * (doc_id, n_feats, log_weight) — log_weight is the exact decimal
-    * feature sum cast to double at the end (row order can't move it).
-    * General form for a target corpus DISJOINT from the raw one; when
-    * the target is a SLICE of the raw corpus, [[weightsWithin]] hashes
-    * the corpus once instead of three times. */
-  def weights(raw: DataFrame, target: DataFrame, text: Column, id: Column,
-              numBuckets: Int = 4096): DataFrame = {
-    val rawFeats = docFeatures(raw, text, id)
-    val lam = logRatios(docFeatures(target, text, id), rawFeats, numBuckets)
-    score(rawFeats.select(col("doc_id"),
-      bucketOf(col("feature"), numBuckets).as("bucket")), lam)
-  }
-
-  /** [[weights]] when the target distribution is a PREDICATE-selected
-    * slice of the raw corpus (the common case — "resample the crawl
-    * toward its own English/wiki-like slice"): tokenization and feature
-    * hashing run ONCE, the (doc, bucket, is_target) rows persist, and
-    * both histograms fall out of one conditional aggregation. At 100 TB
-    * the persisted feature table is the materialize-once derived table;
-    * everything after it is bounded by B. */
+  /** Per-doc DSIR log importance weights against a PREDICATE-selected
+    * target slice of the corpus (the common case — "resample the crawl
+    * toward its own English/wiki-like slice"): (doc_id, n_feats,
+    * log_weight), log_weight the exact decimal feature sum cast to
+    * double at the end (row order can't move it). Tokenization and
+    * feature hashing run ONCE, the (doc, is_t, bucket) rows persist,
+    * and both histograms fall out of one conditional aggregation. At
+    * 100 TB the persisted feature table is the materialize-once derived
+    * table; everything after it is bounded by B. */
   def weightsWithin(docs: DataFrame, isTarget: Column, text: Column,
                     id: Column, numBuckets: Int = 4096): DataFrame = {
     // tracked in OpCaches (r14, ADVICE): the returned plan still
     // references fb, so it can't unpersist here — but without tracking,
     // each weightsWithin call left one corpus-sized cache pinned for the
     // JVM lifetime; releaseAll()/the bench teardown now reclaims it
-    val fb = OpCaches.track(
-      explodeFeatures(docs.select(id.as("doc_id"),
-          isTarget.as("is_t"), TextFns.tokens(text).as("toks")))
-        .select(col("doc_id"), col("is_t"),
-          bucketOf(col("feature"), numBuckets).as("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val fb = OpCaches.track(targetBuckets(docs, isTarget, text, id,
+      numBuckets).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     score(fb.select(col("doc_id"), col("bucket")), lambdaOf(fb, numBuckets))
   }
 
@@ -130,11 +87,22 @@ object Dsir {
     * arithmetic to [[weightsWithin]]'s in-query derivation. */
   def lambdaWithin(docs: DataFrame, isTarget: Column, text: Column,
                    id: Column, numBuckets: Int = 4096): DataFrame =
-    lambdaOf(explodeFeatures(docs.select(id.as("doc_id"),
-        isTarget.as("is_t"), TextFns.tokens(text).as("toks")))
-      .select(col("doc_id"), col("is_t"),
-        bucketOf(col("feature"), numBuckets).as("bucket")), numBuckets)
+    lambdaOf(targetBuckets(docs, isTarget, text, id, numBuckets), numBuckets)
 
+  /** (doc_id, is_t, bucket) — one row per feature occurrence, tagged
+    * with its doc's target predicate. */
+  private def targetBuckets(docs: DataFrame, isTarget: Column, text: Column,
+                            id: Column, numBuckets: Int): DataFrame =
+    explodeFeatures(docs.select(id.as("doc_id"), isTarget.as("is_t"),
+        TextFns.tokens(text).as("toks")))
+      .select(col("doc_id"), col("is_t"),
+        bucketOf(col("feature"), numBuckets).as("bucket"))
+
+  /** Per-bucket smoothed log-ratio table λ[b] = round(ln p_t[b] − ln
+    * p_s[b], 8) over EVERY bucket 0..B-1 (unseen buckets still carry the
+    * smoothing mass — a doc hashing into them must be scored, not
+    * dropped): p_t over the is_t rows, p_s over all rows. ≤ B rows;
+    * [[score]] broadcasts it. */
   private def lambdaOf(fb: DataFrame, numBuckets: Int): DataFrame = {
     val hist = fb.groupBy(col("bucket"))
       .agg(sum(when(col("is_t"), 1L).otherwise(0L)).as("cnt_t"),

@@ -20,17 +20,16 @@ import org.apache.spark.sql.functions._
   *    map, with the rep's intra-clique jaccard (null when its clique
   *    does not pair internally).
   * The lanes' tables are derived from that core, chained on the SAME
-  * fingerprint (the [[HybridSearch.rankedTable]] discipline), through
-  * the same [[Dedup.pairsOf]] / [[Dedup.clustersOf]] the inline
-  * operators use:
-  *  - [[pairs]] = [[Dedup.minhashLshPairs]] at [[point]]: `verified`
-  *    itself on the direct side, a `pairs` table re-expanded from the
-  *    core on the collapsed side;
-  *  - [[clusters]] = [[Dedup.minhashLshClusters]] at [[point]] — the
-  *    connected-components loop ([[DedupClusters.clusters]]) also runs
+  * fingerprint (the [[HybridSearch.rankedTable]] discipline):
+  *  - [[pairs]] = [[Dedup.minhashLshPairs]] at [[point]] (both go
+  *    through [[Dedup.pairsOf]]): `verified` itself on the direct side,
+  *    a `pairs` table re-expanded from the core on the collapsed side;
+  *  - [[clusters]] = [[Dedup.clustersOf]] of the core — the
+  *    connected-components loop ([[DedupClusters.clusters]]) runs
   *    once, over the `verified` scan: on the rep graph when collapsed.
-  * MinhashTablesSpec pins both row-identical to the inline operators, as
-  * multisets, in both clique regimes.
+  * MinhashTablesSpec pins, as multisets in both clique regimes, the
+  * pairs to the inline [[Dedup.minhashLshPairs]] and the clusters to
+  * [[DedupClusters.clusters]] over those pairs.
   *
   * Every persist a build makes (the collapse tables, the candidate list)
   * is dead once the table is written: the builds run under an

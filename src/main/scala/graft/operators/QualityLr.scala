@@ -31,9 +31,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * SCORING is distributed and engine-exact (the kmeansOracle recipe:
   * trained weights as SQL literals): logit = round-8 DECIMAL sum of
   * w′_f·x_f plus b′, rounded to 6 — order-independent, replayed
-  * bit-identically by DuckDB. Scale shape: feature extraction is
-  * row-local, the weight table (≤ B+7 rows) broadcasts, scoring is one
-  * map-side join + per-doc aggregation — one corpus pass. */
+  * bit-identically by DuckDB. Scale shape: [[score]] is one row-local
+  * projection with the model as a literal — one corpus pass, no
+  * shuffle. */
 object QualityLr {
 
   /** Number of engineered moment features appended after the B hashed
@@ -48,41 +48,30 @@ object QualityLr {
 
   /** Sparse raw features: (doc_id, bucket, x). Buckets < numBuckets are
     * md5-hashed unigram counts; numBuckets..+5 the moment features
-    * (each rounded at 8 so both engines carry identical doubles). */
+    * (each rounded at 8 so both engines carry identical doubles). Every
+    * doc emits its 6 moment rows. */
   def features(docs: DataFrame, text: Column, id: Column,
-               numBuckets: Int): DataFrame =
-    featuresWithLabel(docs, text, id, lit(0L), numBuckets).drop("y")
-
-  /** [[features]] with an evaluation label `y` carried on EVERY sparse
-    * row (every doc emits its 6 moment rows, so no doc is lost to the
-    * carry) — the shape the STREAMING scorer needs, where a separate
-    * (doc_id, y) side would be a stream-stream join. One definition
-    * for both paths so they cannot drift; the label column is pruned
-    * away by the optimizer when [[features]] drops it. */
-  def featuresWithLabel(docs: DataFrame, text: Column, id: Column,
-                        label: Column, numBuckets: Int): DataFrame = {
+               numBuckets: Int): DataFrame = {
     val toks = docs.select(id.as("doc_id"), text.as("text"),
-      label.cast(LongType).as("y"),
       graft.functions.TextFns.tokens(text).as("toks"))
     val counts = toks
-      .select(col("doc_id"), col("y"), explode(col("toks")).as("term"))
-      .select(col("doc_id"), col("y"),
+      .select(col("doc_id"), explode(col("toks")).as("term"))
+      .select(col("doc_id"),
         Dsir.bucketOf(col("term"), numBuckets).as("bucket"))
-      .groupBy(col("doc_id"), col("y"), col("bucket"))
+      .groupBy(col("doc_id"), col("bucket"))
       .agg(count(lit(1)).cast(DoubleType).as("x"))
-    val m = toks.select(col("doc_id"), col("y"),
+    val m = toks.select(col("doc_id"),
       (length(col("text")).cast(DoubleType) / 100.0).as("m0"),
       graft.functions.TextFns.meanWordLen(col("toks")).as("mwl"),
       (size(col("toks")).cast(DoubleType) / 10.0).as("m2"))
-    val moments = m.select(col("doc_id"), col("y"),
+    val moments = m.select(col("doc_id"),
       array(round(col("m0"), 8), round(col("m0") * col("m0"), 8),
         round(col("m2"), 8), round(col("m2") * col("m2"), 8),
         round(col("mwl"), 8), round(col("mwl") * col("mwl"), 8)).as("ms"))
-      .select(col("doc_id"), col("y"), posexplode(col("ms")).as(Seq("j", "x")))
-      .select(col("doc_id"), col("y"),
+      .select(col("doc_id"), posexplode(col("ms")).as(Seq("j", "x")))
+      .select(col("doc_id"),
         (col("j") + numBuckets).cast(LongType).as("bucket"), col("x"))
     counts.unionByName(moments)
-      .select(col("doc_id"), col("bucket"), col("x"), col("y"))
   }
 
   /** Bounded-sample driver-side training; `label` must be 0/1. The
@@ -161,20 +150,21 @@ object QualityLr {
 
   /** Score a corpus with a trained model: (doc_id, y, logit, pred) —
     * y is the evaluation label carried through for the confusion
-    * audit, pred = logit > 0 on the round-6 value (engine-exact). */
-  /** Row-LOCAL scoring: the whole logit computed inside one stateless
+    * audits, pred = logit > 0 on the round-6 value (engine-exact).
+    *
+    * Row-LOCAL: the whole logit is computed inside one stateless
     * projection — no explode, no join, no aggregation. The weight
     * vector rides along as a map literal (B+6 entries — model-sized,
-    * not corpus-sized), the hashed-BoW counts come from a run-length
-    * fold over the doc's own sorted bucket array, and every term is
-    * the SAME round-8 decimal the join-based [[score]] sums, so the
-    * two paths are value-identical (spec-pinned): per bucket b with
-    * count x, term = round(w_b · x, 8) as DECIMAL(18,8), summed
-    * exactly. This is the DEPLOYED shape — a streaming scorer with
-    * ZERO state (append-mode safe), and at 100 TB the batch shape
-    * that never shuffles the corpus at all. */
-  def scoreRowLocal(docs: DataFrame, text: Column, id: Column,
-                    label: Column, m: Model): DataFrame = {
+    * not corpus-sized), and the hashed-BoW counts come from a
+    * run-length fold over the doc's own sorted bucket array. Per
+    * [[features]] row (bucket b, value x) the term is round(w_b · x, 8)
+    * as DECIMAL(18,8), summed exactly, so the result is the linear
+    * model over [[features]] (QualityLrSpec pins it to a plain-Scala
+    * sum over the collected rows). The batch lanes and the streaming
+    * scorer share it: zero state (append-mode safe), and at 100 TB a
+    * scoring pass that never shuffles the corpus. */
+  def score(docs: DataFrame, text: Column, id: Column, label: Column,
+            m: Model): DataFrame = {
     val wMap = typedLit(m.weights.zipWithIndex
       .map { case (w, b) => b.toLong -> w }.toMap)
     val dec18 = DecimalType(18, 8)
@@ -199,8 +189,7 @@ object QualityLr {
             (acc("s") + term(acc("prev"), acc("run"))).cast(dec28).as("s"))),
       acc => (acc("s") + term(acc("prev"), acc("run"))).cast(dec28))
     // moment terms mirror features(): x_j = round(m_j, 8), term =
-    // round(w_{B+j} · x_j, 8); null moments contribute nothing (the
-    // join path's null-skipping sum)
+    // round(w_{B+j} · x_j, 8); null moments contribute nothing
     val m0 = round(length(text).cast(DoubleType) / 100.0, 8)
     val m2 = round(size(toks).cast(DoubleType) / 10.0, 8)
     val mwlRaw = graft.functions.TextFns.meanWordLen(toks)
@@ -222,25 +211,5 @@ object QualityLr {
     docs.select(id.as("doc_id"), label.cast(LongType).as("y"),
         round(sAll.cast(DoubleType) + m.bias, 6).as("logit"))
       .withColumn("pred", when(col("logit") > 0.0, 1L).otherwise(0L))
-  }
-
-  def score(docs: DataFrame, text: Column, id: Column, label: Column,
-            m: Model): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val wdf = m.weights.zipWithIndex
-      .map { case (w, b) => (b.toLong, w) }.toSeq.toDF("bucket", "w")
-    val terms = features(docs, text, id, m.numBuckets)
-      .join(broadcast(wdf), Seq("bucket"))
-      .groupBy(col("doc_id"))
-      .agg(sum(round(col("w") * col("x"), 8).cast(DecimalType(18, 8)))
-        .as("s"))
-    docs.select(id.as("doc_id"), label.cast(LongType).as("y"))
-      .join(terms, Seq("doc_id"), "left")
-      .withColumn("logit",
-        round(coalesce(col("s").cast(DoubleType), lit(0.0)) + m.bias, 6))
-      .select(col("doc_id"), col("y"), col("logit"),
-        when(col("logit") > 0.0, 1L).otherwise(0L).as("pred"))
-      .orderBy(col("doc_id"))
   }
 }

@@ -125,18 +125,14 @@ object SubstringDedup {
     * leaves the model one memorizable instance per n-gram while keeping
     * order-dependence the distributed pipeline can't afford).
     *
-    * Output: (doc_id, clean_text) for EVERY input document; documents
-    * without duplicated spans pass through unchanged. Removal is a
-    * per-document fold over that document's sorted span list (bounded by
-    * the document's own length) — no driver involvement. */
-  def stripSpans(docs: DataFrame, idCol: Column, textCol: Column,
-                 n: Int): DataFrame =
-    stripSpansFrom(docs, idCol, textCol, duplicateSpans(docs, idCol, textCol, n))
-
-  /** The removal fold applied to a PRECOMPUTED span table (the
-    * [[duplicateSpans]] output, possibly read back from a write-once
-    * derived table — the production pipeline shape: find spans once,
-    * let both the report and the strip consume the same artifact). */
+    * Applied to a PRECOMPUTED span table (the [[duplicateSpans]] output,
+    * possibly read back from a write-once derived table — the production
+    * pipeline shape: find spans once, let both the report and the strip
+    * consume the same artifact). Output: (doc_id, clean_text) for EVERY
+    * input document; documents without duplicated spans pass through
+    * unchanged. Removal is a per-document fold over that document's
+    * sorted span list (bounded by the document's own length) — nothing
+    * is collected. */
   def stripSpansFrom(docs: DataFrame, idCol: Column, textCol: Column,
                      spanTable: DataFrame): DataFrame = {
     val spans = spanTable

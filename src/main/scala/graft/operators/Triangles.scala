@@ -20,60 +20,17 @@ import org.apache.spark.storage.StorageLevel
   * Everything is joins + integer counts — exactly replayable in SQL,
   * so the per-node triangle participation is hash-checked cross-engine.
   *
-  * r15 — the ADAPTIVE plan ([[perNodeAdaptive]]): wedge volume
-  * Σ C(outdeg⁺, 2) is the plan's one true cost driver, and it is ONE
-  * cheap aggregate over the oriented edges (q_skew_report's shape), so
-  * the operator measures it and sizes the physical plan instead of
-  * running a fixed shape at every scale:
-  *  - the CLOSE shuffle (wedges hashed by (v, w)) gets
-  *    wedges / [[wedgesPerPartition]] partitions when that exceeds the
-  *    session's shuffle parallelism — at sf1 the fixed 32-partition
-  *    close put ~13M wedges (~400 MB) in every task and spilled
-  *    (measured 140 s; ~3M wedges/task runs 37-65 s on the same box);
-  *    below the threshold the plan is untouched (no extra exchanges);
-  *  - the slice count K = ceil(wedges / [[wedgesPerSlice]]) bounds LIVE
-  *    shuffle disk at ~1/K of the monolithic plan (the sf10 lesson:
-  *    4.1B wedges fill a single machine's disk), each slice reduced to
-  *    per-node counts and lineage-truncated before the next runs.
-  * Results are identical for every (K, partitions) — TrianglesSpec
-  * pins it — so the switch is pure physics, not semantics.
+  * Two physical plans, identical results (TrianglesSpec pins both to
+  * brute force):
+  *  - the merge plan ([[perNodeMergeOn]], the catalog lane): per
+  *    oriented edge, intersect the two endpoints' sorted out-neighbor
+  *    arrays — no wedge is ever materialized;
+  *  - the wedge plan ([[perNode]]): join out-neighbor pairs and close
+  *    them against the oriented edges, optionally in K hash slices so
+  *    live shuffle disk stays ~1/K of the monolithic plan (the sf10
+  *    lesson: 4.1B wedges fill a single machine's disk).
   */
 object Triangles {
-
-  /** Wedges per close-shuffle partition (~3M ≈ 75 MB of (u,v,w) rows —
-    * sorts in memory with headroom at default executor sizing). */
-  val wedgesPerPartition: Long = 3000000L
-
-  /** Wedges per slice: bounds live shuffle disk of one slice to
-    * ~25 GB; a 100 TB deployment with real cluster disk raises it. */
-  val wedgesPerSlice: Long = 800000000L
-
-  /** The plan the adaptive entry picked — exposed so specs (and
-    * SCALE.md audits) can pin WHEN the slice plan engages. */
-  final case class Plan(wedges: Long, batches: Int, closeParts: Int)
-
-  /** Pure sizing rule (spec-pinned): slices bound disk, close
-    * partitions bound per-task sort size; `defaultParts` (the session
-    * shuffle parallelism) is the floor below which the plan is left
-    * untouched — 0 means "no repartition". */
-  private[graft] def choose(wedges: Long, perSlice: Long, perPart: Long,
-                            defaultParts: Int): Plan = {
-    val batches = math.max(1L, (wedges + perSlice - 1) / perSlice)
-    val wanted = wedges / math.max(1L, perPart)
-    val closeParts =
-      if (wanted <= defaultParts) 0
-      else math.min(wanted, 65536L).toInt
-    Plan(wedges, batches.toInt, closeParts)
-  }
-
-  /** Σ C(outdeg⁺, 2) over an oriented edge list — the exact wedge
-    * count the close join will materialize. One aggregate. */
-  def wedgeVolume(oriented: DataFrame): Long =
-    oriented.groupBy(col("u")).agg(count(lit(1)).as("d"))
-      .agg(sum(expr("d * (d - 1) div 2"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
 
   private[graft] def orient(und: DataFrame): DataFrame = {
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -87,47 +44,29 @@ object Triangles {
   }
 
   /** Per-node triangle participation over a symmetric distinct edge
-    * list (both directions present, no self-loops).
+    * list (both directions present, no self-loops), by the wedge plan.
     *
-    * `batches` bounds the LIVE shuffle footprint, not the total work
-    * (see the object doc); `closeParts` > 0 widens the close join's
-    * shuffle to that many partitions (0 = leave the session default).
-    * [[perNodeAdaptive]] picks both from the measured wedge volume;
-    * this entry keeps them explicit for the scale tools and specs. */
-  def perNode(und: DataFrame, batches: Int = 1,
-              closeParts: Int = 0): DataFrame = {
+    * `batches` bounds the LIVE shuffle footprint, not the total work:
+    * K > 1 closes the wedges of one hash slice of wedge apexes at a
+    * time, each slice reduced to per-node counts and lineage-truncated
+    * before the next runs (the bounded-disk sf10 path that
+    * tools.TriangleScale drives). */
+  def perNode(und: DataFrame, batches: Int = 1): DataFrame = {
     val oriented0 = orient(und)
     val oriented = if (batches > 1)
       OpCaches.track(oriented0.persist(StorageLevel.MEMORY_AND_DISK))
     else oriented0
-    perNodeOn(oriented, batches, closeParts)
-  }
-
-  /** [[perNode]] over an already-oriented (and, for batches > 1,
-    * persisted) edge list. */
-  private def perNodeOn(oriented: DataFrame, batches: Int,
-                        closeParts: Int): DataFrame = {
     def closeSlice(slice: DataFrame): DataFrame = {
       // wedges (u; v ≺ w) from u's oriented out-neighbors, closed by
       // the oriented edge v→w (≺ is the orientation's (deg, id) order)
-      val perSliceParts =
-        if (closeParts <= 0) 0
-        else math.max(1, closeParts / math.max(1, batches))
-      val wedges0 = slice.select(col("u"), col("v"), col("dv"))
+      val wedges = slice.select(col("u"), col("v"), col("dv"))
         .join(slice.select(col("u"), col("v").as("w"), col("dv").as("dw")),
           Seq("u"))
         .filter(col("dv") < col("dw") ||
           (col("dv") === col("dw") && col("v") < col("w")))
         .select(col("u"), col("v"), col("w"))
-      val right0 = oriented.select(col("u").as("v"), col("v").as("w"))
-      // widen the close shuffle when the wedge volume demands it: both
-      // sides repartitioned on the join key, so the SMJ reuses the
-      // exchange — the spill-or-not knob measured in SCALE.md r15
-      val (wedges, right) =
-        if (perSliceParts <= 0) (wedges0, right0)
-        else (wedges0.repartition(perSliceParts, col("v"), col("w")),
-          right0.repartition(perSliceParts, col("v"), col("w")))
-      val tris = wedges.join(right, Seq("v", "w"))
+      val tris = wedges.join(
+        oriented.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"))
       tris.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
         .groupBy(col("node"))
         .agg(count(lit(1)).as("c"))
@@ -157,29 +96,6 @@ object Triangles {
         .groupBy(col("node"))
         .agg(sum(col("c")).as("n_triangles"))
     }
-  }
-
-  /** Edge-iterator plan with merged adjacency intersections (r15) —
-    * the plan that ELIMINATES the wedge materialization entirely
-    * (Shun & Tangwongsan's merge-based exact counting, expressed
-    * relationally): per oriented edge (u, v), the third vertices of
-    * the triangles it closes are exactly N⁺(u) ∩ N⁺(v), computed by
-    * the primitive two-pointer merge kernel over SORTED out-neighbor
-    * arrays (plans.SetKernels.sortedIntersectLongs). Work is the same
-    * O(m^1.5) comparison bound as the wedge-join plan, but the
-    * comparisons are in-cache primitive longs instead of 600M-row
-    * shuffle+sort traffic — measured at sf1: 157 s (wedge plan, 1.8k s
-    * executor CPU in the close) → the merge plan's joins move only
-    * edge-sized tables (m rows + the node-sized adjacency arrays,
-    * out-degree ≤ O(√m) by orientation) and the only output-sized
-    * explode is the 3·T credit rows. Credits: at edge (u, v) with
-    * k = |N⁺(u) ∩ N⁺(v)| common vertices, u and v each participate in
-    * k triangles and each common w in one — summed per node, exactly
-    * [[perNode]]'s result (TrianglesSpec pins identity on random
-    * graphs and the real fixture). */
-  def perNodeMerge(und: DataFrame): DataFrame = {
-    val oriented = orient(und).select(col("u"), col("v"))
-    perNodeMergeOn(oriented, adjacencyOf(oriented))
   }
 
   /** Sorted out-neighbor adjacency of an oriented (u, v) edge list —
@@ -219,12 +135,31 @@ object Triangles {
     perNodeMergeOn(oriented, adj, broadcastAdj)
   }
 
-  /** The merge plan over PRE-BUILT oriented edges + adjacency — the
-    * serving shape when both live as materialized tables. `oriented`
-    * must be the (u, v) rows [[orient]] produces; `adj` must be
-    * [[adjacencyOf]] of exactly those rows. `broadcastAdj` picks the
-    * broadcast-probe physical shape (see [[broadcastableAdjElems]]);
-    * results are identical either way (spec-pinned). */
+  /** Edge-iterator plan with merged adjacency intersections (r15) —
+    * the plan that ELIMINATES the wedge materialization entirely
+    * (Shun & Tangwongsan's merge-based exact counting, expressed
+    * relationally): per oriented edge (u, v), the third vertices of
+    * the triangles it closes are exactly N⁺(u) ∩ N⁺(v), computed by
+    * the primitive two-pointer merge kernel over SORTED out-neighbor
+    * arrays (plans.SetKernels.sortedIntersectLongs). Work is the same
+    * O(m^1.5) comparison bound as the wedge-join plan, but the
+    * comparisons are in-cache primitive longs instead of 600M-row
+    * shuffle+sort traffic — measured at sf1: 157 s (wedge plan, 1.8k s
+    * executor CPU in the close) → the merge plan's joins move only
+    * edge-sized tables (m rows + the node-sized adjacency arrays,
+    * out-degree ≤ O(√m) by orientation) and the only output-sized
+    * explode is the 3·T credit rows. Credits: at edge (u, v) with
+    * k = |N⁺(u) ∩ N⁺(v)| common vertices, u and v each participate in
+    * k triangles and each common w in one — summed per node, exactly
+    * [[perNode]]'s result (TrianglesSpec pins identity on random
+    * graphs and the real fixture).
+    *
+    * It runs over PRE-BUILT oriented edges + adjacency — the serving
+    * shape when both live as materialized tables. `oriented` must be
+    * the (u, v) rows [[orient]] produces; `adj` must be [[adjacencyOf]]
+    * of exactly those rows. `broadcastAdj` picks the broadcast-probe
+    * physical shape (see [[broadcastableAdjElems]]); results are
+    * identical either way (spec-pinned). */
   def perNodeMergeOn(oriented: DataFrame, adj: DataFrame,
                      broadcastAdj: Boolean = false): DataFrame = {
     val hint = (df: DataFrame) => if (broadcastAdj) broadcast(df) else df
@@ -243,21 +178,5 @@ object Triangles {
         lit(1L).as("c")))
       .groupBy(col("node"))
       .agg(sum(col("c")).as("n_triangles"))
-  }
-
-  /** The self-sizing entry (the catalog lane): measures wedge volume on
-    * the persisted oriented edges, then runs [[perNode]]'s machinery at
-    * the [[choose]]-picked slice count and close-shuffle width. Cost of
-    * the measurement: one aggregate over the oriented edge list the
-    * plan needs persisted anyway. Thresholds are parameters so specs
-    * can force the switch on small fixtures. */
-  def perNodeAdaptive(und: DataFrame,
-                      perSlice: Long = wedgesPerSlice,
-                      perPart: Long = wedgesPerPartition): DataFrame = {
-    val oriented =
-      OpCaches.track(orient(und).persist(StorageLevel.MEMORY_AND_DISK))
-    val plan = choose(wedgeVolume(oriented), perSlice, perPart,
-      und.sparkSession.sessionState.conf.numShufflePartitions)
-    perNodeOn(oriented, plan.batches, plan.closeParts)
   }
 }

@@ -26,7 +26,7 @@ import java.sql.Timestamp
   * complete candidate set for a probe landing in it). A probe is
   * verified in-bucket against members with a SMALLER doc id, mirroring
   * the batch greedy first-wins policy (graft.operators.Dedup
-  * .minhashIncrementalKeep): `kept` = no verified partner with a smaller
+  * .incrementalKeep): `kept` = no verified partner with a smaller
   * id — a per-doc property, NOT transitive closure, so retained-set
   * membership of the partner is irrelevant and all members stay
   * comparable. Parity with the batch engine therefore requires ids
@@ -45,7 +45,7 @@ import java.sql.Timestamp
   * the same bounded-state contract as dedupExact. At 100 TB/day the
   * horizon is the knob: near-dup state covers the horizon window only;
   * cross-horizon dedup belongs to the batch engine's incremental pass
-  * (Dedup.minhashIncrementalKeep) over compacted output, exactly like
+  * (Dedup.incrementalKeep) over compacted output, exactly like
   * the exact-dedup split. (The signature-only alternative — state holds
   * sigs, verify estimates Jaccard from band agreement — trades state
   * ×8/numHashes for approximate verdicts; this operator keeps the batch

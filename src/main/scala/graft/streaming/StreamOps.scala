@@ -253,18 +253,18 @@ object StreamOps {
     * q_quality_lr (the [[dsirScore]] pattern for the discriminative
     * filter, but with ZERO streaming state): the logistic model is
     * trained offline ([[graft.operators.QualityLr.train]]) and FROZEN;
-    * each arriving document is scored entirely row-locally
-    * (QualityLr.scoreRowLocal — the weight vector as a model-sized map
-    * literal, hashed-BoW counts from a run-length fold over the doc's
-    * own sorted bucket array, every term the same round-8 decimal the
-    * batch join sums). A stateless projection is append-mode safe and
-    * needs no watermark; value-identity with the oracle-checked batch
-    * query is pinned on real documents in StreamingSpec. */
+    * each arriving document is scored entirely row-locally by the
+    * batch lanes' own scorer ([[graft.operators.QualityLr.score]] — the
+    * weight vector as a model-sized map literal, hashed-BoW counts from
+    * a run-length fold over the doc's own sorted bucket array). A
+    * stateless projection is append-mode safe and needs no watermark;
+    * value-identity with the oracle-checked batch query is pinned on
+    * real documents in StreamingSpec. */
   def qualityLrScore(docs: DataFrame, m: graft.operators.QualityLr.Model,
                      label: Column,
                      textCol: String = "text",
                      idCol: String = "doc_id"): DataFrame =
-    graft.operators.QualityLr.scoreRowLocal(
+    graft.operators.QualityLr.score(
       docs, col(textCol), col(idCol), label, m)
 
   /** Streaming ANN serving (r16) — the similarity-search family's

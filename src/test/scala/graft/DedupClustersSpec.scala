@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class DedupClustersSpec extends AnyFunSuite with SparkSpec {
 
-  private def labelMap(df: DataFrame): Map[Long, Long] =
-    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def labels(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().toSeq.map(r => r.getLong(0) -> r.getLong(1))
 
   /** Brute-force closure: union-find over `pairs`, every id that appears
     * in a pair labelled with its component's minimum. */
@@ -29,9 +29,9 @@ class DedupClustersSpec extends AnyFunSuite with SparkSpec {
     // components: {1,2,3,4} (chain), {10,11}, singleton edge {20,20}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (20L, 20L))
       .toDF("id_a", "id_b")
-    val got = labelMap(DedupClusters.clusters(pairs, $"id_a", $"id_b").labels)
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 20L -> 20L))
+    val got = labels(DedupClusters.clusters(pairs, $"id_a", $"id_b").labels)
+    assert(bag(got) == bag(Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 20L -> 20L)))
   }
 
   test("star rounds are O(log diameter) and match a brute-force closure") {
@@ -55,7 +55,9 @@ class DedupClustersSpec extends AnyFunSuite with SparkSpec {
     val pairs = operators.Dedup.minhashLshPairs(
       Tables.documents(spark, sf), $"text", $"doc_id",
       shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-    val label = labelMap(DedupClusters.clusters(pairs, $"id_a", $"id_b").labels)
+    val rows = labels(DedupClusters.clusters(pairs, $"id_a", $"id_b").labels)
+    assert(bag(rows.map(_._1)).values.forall(_ == 1), "a doc carries two labels")
+    val label = rows.toMap
     // every pair's endpoints must share a cluster, labels are cluster minima
     pairs.select($"id_a", $"id_b").collect().foreach { r =>
       assert(label(r.getLong(0)) == label(r.getLong(1)))
@@ -65,30 +67,35 @@ class DedupClustersSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("rep-graph CC (minhashLshClusters) equals CC over expanded pairs on a clique corpus") {
+  test("rep-graph CC (MinhashTables.clusters) equals CC over expanded pairs on a clique corpus") {
     import spark.implicits._
     // clique-heavy: 6 copies each of 5 texts (two texts near-dups of each
     // other), one token-less doc, one unique doc — triggers the collapsed
-    // path, exercises intra-only cliques, merged cliques, and exclusions
+    // path, exercises intra-only cliques, merged cliques, and exclusions.
+    // The derived table runs the CC on the rep graph; the reference runs
+    // it over the expanded member pairs.
     val texts = Seq(
       "alpha beta gamma delta epsilon zeta eta theta",
       "alpha beta gamma delta epsilon zeta eta iota",
       "one two three four five six seven eight nine ten",
       "lorem ipsum dolor sit amet consectetur adipiscing elit",
       "completely different content about distributed shuffles")
-    val rows = for {
+    val docs = for {
       (t, ti) <- texts.zipWithIndex; c <- 0 until 6
     } yield ((ti * 100 + c).toLong, t)
-    val corpus = (rows ++ Seq((9000L, "!!! ??? ..."),
-      (9100L, "a single unique document with its own words entirely")))
-      .toDF("doc_id", "text")
-    val viaPairs = labelMap(DedupClusters.clusters(
-        operators.Dedup.minhashLshPairs(corpus, $"text", $"doc_id",
-          shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5),
-        $"id_a", $"id_b").labels)
-    val viaReps = labelMap(operators.Dedup.minhashLshClusters(corpus, $"text", $"doc_id",
-        shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5))
-    assert(viaPairs.nonEmpty && viaReps == viaPairs)
+    val dir = java.nio.file.Files.createTempDirectory("dedup-reps-spec")
+    try {
+      (docs ++ Seq((9000L, "!!! ??? ..."),
+        (9100L, "a single unique document with its own words entirely")))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val p = MinhashTables.point
+      val viaPairs = labels(DedupClusters.clusters(
+          operators.Dedup.minhashLshPairs(Tables.documents(spark, dir.toString),
+            $"text", $"doc_id", p.shingleK, p.numHashes, p.bands, p.threshold),
+          $"id_a", $"id_b").labels)
+      val viaReps = labels(MinhashTables.clusters(spark, dir.toString))
+      assert(viaPairs.nonEmpty && bag(viaReps) == bag(viaPairs))
+    } finally Fs.deleteRec(dir)
   }
 
   test("a near-dup chain of eleven hops clusters to its closure (derived table and lane)") {

@@ -12,7 +12,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   /** Ground truth: brute-force word-2-shingle Jaccard >= 0.5 pairs. */
   private lazy val bruteForcePairs: Set[(Long, Long)] = {
     import spark.implicits._
-    val sh = docs.select($"doc_id", Dedup.wordShingles($"text", 2).as("s"))
+    val sh = docs.select($"doc_id", functions.TextFns.tokens($"text").as("toks"))
+      .select($"doc_id", Dedup.wordShinglesOf($"toks", 2).as("s"))
     val a = sh.select($"doc_id".as("id_a"), $"s".as("sh_a"))
     val b = sh.select($"doc_id".as("id_b"), $"s".as("sh_b"))
     a.join(b, $"id_a" < $"id_b")
@@ -48,12 +49,13 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       val nEarlier = partners.count(p => isInc(p) && p < d)
       d -> (nExisting.toLong, nEarlier.toLong, nExisting == 0 && nEarlier == 0)
     }.toMap
-    val got = Dedup.minhashIncrementalKeep(docs, $"text", $"doc_id",
-        isExisting = $"doc_id" % 5 =!= 0,
-        shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
-      .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
-    assert(got == expected)
+    val pairs = Dedup.minhashLshPairs(docs, $"text", $"doc_id",
+      shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
+    val got = Dedup.incrementalKeep(pairs, docs, $"doc_id",
+        isExisting = $"doc_id" % 5 =!= 0)
+      .collect().toSeq.map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    assert(bag(got) == bag(expected.toSeq))
     // the increment must contain BOTH dropped and kept docs or the test
     // proves nothing
     assert(expected.values.exists(_._3) && expected.values.exists(!_._3),
@@ -137,7 +139,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
     // ground truth by brute force over all pairs; both sides compare as
     // multisets (row → count) so a duplicated expansion row fails
-    val sh = corpus.select($"doc_id", Dedup.wordShingles($"text", 2).as("s"))
+    val sh = corpus.select($"doc_id", functions.TextFns.tokens($"text").as("toks"))
+      .select($"doc_id", Dedup.wordShinglesOf($"toks", 2).as("s"))
     val bf = bag(sh.select($"doc_id".as("id_a"), $"s".as("sh_a"))
       .join(sh.select($"doc_id".as("id_b"), $"s".as("sh_b")), $"id_a" < $"id_b")
       .filter(size($"sh_a") > 0 && size($"sh_b") > 0)

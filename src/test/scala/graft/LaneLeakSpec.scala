@@ -13,9 +13,12 @@ class LaneLeakSpec extends AnyFunSuite with SparkSpec {
 
   /** The lanes that reach the clique collapse, the BM25 retrieval
     * family, the iterative graph lanes (components, BFS, k-core, label
-    * propagation, PageRank), the ANN search lanes and audits (the
-    * audits pin their brute-force truth; q_ann_tuned also pins its
-    * candidate counts) and q_forecast_backtest (its sorted history). */
+    * propagation, PageRank, triangles), the ANN search lanes and audits
+    * (the audits pin their brute-force truth; q_ann_tuned also pins its
+    * candidate counts), q_forecast_backtest (its sorted history), the
+    * quality-classifier lanes, the DSIR lanes (their feature rows), the
+    * substring-dedup pair (its candidate windows) and the BPE lanes
+    * (the training word table). */
   private val lanes = Seq(
     "q_dedup_minhash", "q_split_leakage", "q_dedup_clusters",
     "q_dedup_keep_best", "q_dedup_incremental", "q_containment",
@@ -26,7 +29,10 @@ class LaneLeakSpec extends AnyFunSuite with SparkSpec {
     "q_graph_components", "q_bfs_hops", "q_kcore", "q_communities",
     "q_pagerank", "q_ppr", "q_ann_bruteforce", "q_ann_lsh", "q_ann_ivf",
     "q_ann_pq", "q_ann_sq8", "q_ann_recall", "q_ann_rank_metrics",
-    "q_ann_tuned", "q_forecast_backtest")
+    "q_ann_tuned", "q_forecast_backtest",
+    "q_quality_lr", "q_lr_calibration", "q_lr_auc", "q_pr_curve",
+    "q_dsir_weights", "q_dsir_resample", "q_triangles",
+    "q_dedup_substring", "q_substring_strip", "q_bpe_merges", "q_bpe_encode")
 
   for (lane <- lanes) test(s"$lane: OpCaches.releaseAll frees every cache it persisted") {
     // start from an empty block manager, whatever ran before

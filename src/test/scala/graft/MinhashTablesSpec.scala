@@ -1,11 +1,12 @@
 package graft
 
-import graft.operators.{DerivedCache, Dedup, MinhashTables}
+import graft.operators.{DerivedCache, Dedup, DedupClusters, MinhashTables}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The derived MinHash-LSH tables equal the inline operators at the lanes'
-  * operating point, as multisets, in both clique regimes; and they are
+  * operating point, as multisets, in both clique regimes — the pairs the
+  * inline LSH pairs, the clusters the CC over those pairs — and they are
   * built once per documents.parquet fingerprint. */
 class MinhashTablesSpec extends AnyFunSuite with SparkSpec {
 
@@ -21,8 +22,7 @@ class MinhashTablesSpec extends AnyFunSuite with SparkSpec {
 
   private def inlineClusters(docs: DataFrame): DataFrame = {
     import spark.implicits._
-    Dedup.minhashLshClusters(docs, $"text", $"doc_id",
-      p.shingleK, p.numHashes, p.bands, p.threshold)
+    DedupClusters.clusters(inlinePairs(docs), $"id_a", $"id_b").labels
   }
 
   /** The clique corpus of DedupClustersSpec: 6 copies each of 5 texts

@@ -777,18 +777,43 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"iteration lineage leaked into the output plan:\n$p")
   }
 
-  test("a lane plans the same in a fresh session and after another lane ran") {
-    // no rewrite registered yet, as in a session nothing else touched
+  /** `lane`'s optimized plan in a session no rewrite was registered in,
+    * and again after each of `others` ran — expression ids and the
+    * per-call counter in lambda variable names stripped. */
+  private def plansAround(lane: String, others: String*): Seq[String] = {
     spark.experimental.extraOptimizations = Nil
     spark.experimental.extraStrategies = Nil
-    def optimized(name: String): String =
-      SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.toString
-        .replaceAll("#\\d+L?", "#")
-    val fresh = optimized("q_cooccur_recs")
-    SparkEntry.queries("q_window_topk")(spark, sf).collect()
-    val after = optimized("q_cooccur_recs")
+    def optimized: String =
+      SparkEntry.queries(lane)(spark, sf).queryExecution.optimizedPlan.toString
+        .replaceAll("#\\d+L?", "#").replaceAll("(lambda \\w+?)_\\d+", "$1")
+    optimized +: others.map { o =>
+      SparkEntry.queries(o)(spark, sf).collect()
+      optimized
+    }
+  }
+
+  test("a lane plans the same in a fresh session and after another lane ran") {
+    val Seq(fresh, after) = plansAround("q_cooccur_recs", "q_window_topk")
     assert(fresh.contains("TopKPerGroup"), s"fresh-session plan not rewritten:\n$fresh")
     assert(after.contains("TopKPerGroup"), s"plan not rewritten:\n$after")
     assert(fresh == after, s"plan depends on run order:\n$fresh\n---\n$after")
+  }
+
+  test("quality-LR and DSIR lanes plan the same fresh and after other lanes ran") {
+    // the other lanes: the one that installs the session rewrites, and
+    // a sibling that trains or persists what this lane reuses (the
+    // memoized model; the DSIR feature rows)
+    for ((lane, sibling) <- Seq("q_quality_lr" -> "q_pr_curve",
+        "q_dsir_weights" -> "q_dsir_resample")) {
+      val fresh +: after = plansAround(lane, "q_window_topk", sibling)
+      after.foreach(a =>
+        assert(fresh == a, s"$lane plan depends on run order:\n$fresh\n---\n$a"))
+    }
+  }
+
+  test("quality LR: scoring is row-local — no Exchange, no Join") {
+    val p = plan("q_quality_lr")
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      s"scored corpus shuffles or joins:\n$p")
   }
 }

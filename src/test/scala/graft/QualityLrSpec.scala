@@ -58,32 +58,35 @@ class QualityLrSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("row-local scoring is value-identical to the join-based scorer") {
-    // the deployed (zero-state, never-shuffles) scorer must reproduce
-    // the oracle-checked join path bit for bit on the real corpus,
+  test("scoring equals a plain-Scala linear model over the collected features") {
+    // the row-local scorer (run-length fold over the doc's sorted
+    // buckets, moments inline) must equal the linear model summed over
+    // the sparse feature rows, as a multiset, on the real corpus —
     // including repeated-token run-lengths, empty docs, and moments
     val docs = Tables.documents(spark, sf)
     val m = operators.QualityLr.train(docs, $"text", $"doc_id",
       when($"lang" === "en", 1.0).otherwise(0.0), numBuckets = 64,
       iters = 50)
     val lbl = when($"lang" === "en", 1L).otherwise(0L)
-    def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+    val got = operators.QualityLr.score(docs, $"text", $"doc_id", lbl, m)
+      .collect().toSeq
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("y"),
-        r.getAs[Double]("logit"), r.getAs[Long]("pred"))).toSet
-    val joined = asSet(operators.QualityLr.score(
-      docs, $"text", $"doc_id", lbl, m))
-    val local = asSet(operators.QualityLr.scoreRowLocal(
-      docs, $"text", $"doc_id", lbl, m))
-    assert(local == joined,
-      s"paths diverge: onlyLocal=${(local -- joined).take(3)} " +
-        s"onlyJoin=${(joined -- local).take(3)}")
+        r.getAs[Double]("logit"), r.getAs[Long]("pred")))
+    val labels = docs.select($"doc_id", lbl).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val want = QualityLrReference.score(
+      operators.QualityLr.features(docs, $"text", $"doc_id", m.numBuckets),
+      labels, m)
+    assert(bag(got) == bag(want),
+      s"scorer diverges: onlySpark=${(got.toSet -- want).take(3)} " +
+        s"onlyReference=${(want.toSet -- got).take(3)}")
   }
 
   test("row-local scorer plan is one stateless projection: no join, no shuffle") {
     val docs = Tables.documents(spark, sf)
     val m = operators.QualityLr.Model(0.1,
       Array.fill(64 + operators.QualityLr.NumMoments)(0.01), 64)
-    val plan = operators.QualityLr.scoreRowLocal(
+    val plan = operators.QualityLr.score(
         docs, $"text", $"doc_id", lit(1L), m)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Join"),

@@ -969,10 +969,10 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // quality filter: the logistic model is trained once over the
     // batch corpus (bit-deterministic, so this retrain IS the model
     // the batch query cached) and frozen; the same corpus streams
-    // through the ZERO-STATE row-local scorer (append mode — no
-    // aggregation, no watermark). Every logit term is the same round-8
-    // decimal the batch join sums, so the streamed confusion surface
-    // must equal the batch query row for row regardless of batching.
+    // through the ZERO-STATE row-local scorer the batch lane runs
+    // (append mode — no aggregation, no watermark), so the streamed
+    // confusion surface must equal the batch query row for row
+    // regardless of batching.
     val docs = Tables.documents(spark, sf)
     val toks = graft.functions.TextFns.tokens(col("text"))
     val keep = graft.functions.TextFns.qualityKeep(

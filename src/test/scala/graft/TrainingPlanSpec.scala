@@ -19,7 +19,7 @@ class TrainingPlanSpec extends AnyFunSuite with SparkSpec {
       (3L, "xx", "zz9 qq8 vv7 spam spam spam zz9 qq8 vv7 spam"),
       (4L, "xx", "quality prose with careful words and clear structure"),
       (5L, "xx", "vv7 zz9 spam qq8 spam zz9")).toDF("doc_id", "lang", "text")
-    val w = Dsir.weights(docs, docs.filter($"lang" === "en"),
+    val w = Dsir.weightsWithin(docs, $"lang" === "en",
         $"text", $"doc_id", numBuckets = 64)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     // doc 4 repeats the target text verbatim: its weight must match the
@@ -31,15 +31,20 @@ class TrainingPlanSpec extends AnyFunSuite with SparkSpec {
 
   test("weightsWithin (one-pass) equals the general two-corpus form on real data") {
     import spark.implicits._
+    // the general form is DsirReference over the collected feature rows
+    // of the two corpora (raw = every doc, target = the English slice)
     val docs = Tables.documents(spark, sf)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fast = rows(Dsir.weightsWithin(docs, $"lang" === "en",
-      $"text", $"doc_id", numBuckets = 512))
-    val general = rows(Dsir.weights(docs, docs.filter($"lang" === "en"),
-      $"text", $"doc_id", numBuckets = 512))
-    assert(fast == general,
-      s"fast path diverged: onlyFast=${(fast -- general).take(3)}")
+    def features(d: org.apache.spark.sql.DataFrame) =
+      Dsir.docFeatures(d, $"text", $"doc_id").collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1)))
+    val fast = Dsir.weightsWithin(docs, $"lang" === "en",
+        $"text", $"doc_id", numBuckets = 512)
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val general = DsirReference.weights(features(docs),
+      features(docs.filter($"lang" === "en")), numBuckets = 512)
+    assert(general.nonEmpty && bag(fast) == bag(general),
+      s"fast path diverged: onlyFast=${(fast.toSet -- general).take(3)} " +
+        s"onlyGeneral=${(general.toSet -- fast).take(3)}")
   }
 
   test("DSIR feature extraction: unigrams + bigrams with multiplicity, no null bigrams") {
@@ -92,8 +97,8 @@ class TrainingPlanSpec extends AnyFunSuite with SparkSpec {
     val train = docs.filter($"doc_id" % 11 =!= 0)
     def rows(bc: Boolean) = Decontaminate.stripContaminated(
         train, bench, $"text", $"doc_id", n = 5, broadcastCover = bc)
-      .collect().map(_.toSeq).toSet
-    assert(rows(true) == rows(false))
+      .collect().map(_.toSeq).toSeq
+    assert(bag(rows(true)) == bag(rows(false)))
   }
 
   // ---- BitextMine -----------------------------------------------------
@@ -127,13 +132,13 @@ class TrainingPlanSpec extends AnyFunSuite with SparkSpec {
     val a = e.filter($"label" === 0)
     val b = e.filter($"label" === 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getDouble(2), r.getDouble(3))).toSet
+      df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1),
+        r.getDouble(2), r.getDouble(3)))
     val brute = rows(BitextMine.minePairs(a, b, $"vec_id", $"embedding", k = 4))
     val blocked = rows(BitextMine.minePairsBlocked(
       a, b, $"vec_id", $"embedding", lit(0L), k = 4))
-    assert(brute == blocked,
-      s"single-block blocked form diverged: onlyBrute=${(brute -- blocked).take(3)}")
+    assert(bag(brute) == bag(blocked),
+      s"single-block blocked form diverged: onlyBrute=${(brute.toSet -- blocked).take(3)}")
   }
 
   // ---- EpochPlan ------------------------------------------------------

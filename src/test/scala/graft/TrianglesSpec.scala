@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{PageRank, Triangles}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,68 +12,38 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
     (pairs ++ pairs.map(_.swap)).distinct.toDF("src", "dst")
   }
 
+  /** (node, n_triangles) rows as a multiset: a duplicated node row fails
+    * the comparison. */
+  private def counts(df: DataFrame): Map[(Long, Long), Int] =
+    bag(df.collect().toSeq.map(r => r.getLong(0) -> r.getLong(1)))
+
+  /** The merge plan over the inline orientation and adjacency. */
+  private def merge(und: DataFrame): DataFrame = {
+    val oriented = Triangles.orient(und).select(col("u"), col("v"))
+    Triangles.perNodeMergeOn(oriented, Triangles.adjacencyOf(oriented))
+  }
+
   test("triangle + pendant: exactly the triangle's nodes count once each") {
     val und = sym((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
-    val out = Triangles.perNode(und).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), s"got $out")
+    val out = counts(Triangles.perNode(und))
+    assert(out == bag(Seq(1L -> 1L, 2L -> 1L, 3L -> 1L)), s"got $out")
   }
 
   test("K4: every node participates in C(3,2)=3 triangles") {
     val nodes = Seq(1L, 2L, 3L, 4L)
     val und = sym((for { a <- nodes; b <- nodes if a < b } yield (a, b)): _*)
-    val out = Triangles.perNode(und).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out == nodes.map(_ -> 3L).toMap, s"got $out")
+    val out = counts(Triangles.perNode(und))
+    assert(out == bag(nodes.map(_ -> 3L)), s"got $out")
   }
 
   test("batched closure is identical to the single-job plan") {
     import spark.implicits._
     val und = PageRank.coOccurrenceEdges(
       Tables.lineitem(spark, sf), $"l_orderkey", $"l_partkey", maxBasket = 64)
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val one = m(Triangles.perNode(und, batches = 1))
-    val four = m(Triangles.perNode(und, batches = 4))
+    val one = counts(Triangles.perNode(und, batches = 1))
+    val four = counts(Triangles.perNode(und, batches = 4))
     graft.operators.OpCaches.releaseAll()
     assert(one == four, s"batched diverged: ${one.size} vs ${four.size}")
-  }
-
-  test("adaptive plan: slice plan engages above the wedge threshold, output identical") {
-    import spark.implicits._
-    // the r15 plan pin: on the skewed co-purchase fixture, forcing the
-    // thresholds down makes choose() pick batches > 1 AND a widened
-    // close shuffle — and the output stays identical to the plain plan
-    val und = PageRank.coOccurrenceEdges(
-      Tables.lineitem(spark, sf), $"l_orderkey", $"l_partkey", maxBasket = 64)
-    // measure the fixture's real wedge volume (orientation re-derived
-    // exactly as the operator does it)
-    val deg = und.groupBy($"src").agg(count(lit(1)).as("d"))
-    val oriented = und.join(deg.select($"src", $"d".as("du")), "src")
-      .join(deg.select($"src".as("dst"), $"d".as("dv")), "dst")
-      .filter($"du" < $"dv" || ($"du" === $"dv" && $"src" < $"dst"))
-      .select($"src".as("u"), $"dst".as("v"), $"dv")
-    val w = Triangles.wedgeVolume(oriented)
-    assert(w > 0)
-    // the sizing rule: thresholds below the fixture's volume engage
-    // BOTH the slice plan and the wide close
-    val plan = Triangles.choose(w, perSlice = w / 3 + 1, perPart = w / 100 + 1,
-      defaultParts = 4)
-    assert(plan.batches > 1, s"slice plan must engage: $plan")
-    assert(plan.closeParts > 4, s"close must widen: $plan")
-    // and at production thresholds on this small fixture, the plan is
-    // untouched (no extra exchanges at bench scale)
-    val prod = Triangles.choose(w, Triangles.wedgesPerSlice,
-      Triangles.wedgesPerPartition, defaultParts = 32)
-    assert(prod.batches == 1 && prod.closeParts == 0, s"got $prod")
-    // output identity under the forced-adaptive plan
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val plain = m(Triangles.perNode(und, 1))
-    val adaptive = m(Triangles.perNodeAdaptive(und,
-      perSlice = w / 3 + 1, perPart = w / 100 + 1))
-    graft.operators.OpCaches.releaseAll()
-    assert(plain == adaptive, s"adaptive diverged: ${plain.size} vs ${adaptive.size}")
   }
 
   test("merge plan (edge-iterator kernel) identical to the wedge plan") {
@@ -87,20 +58,15 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
       } yield (a, b))
       if (edges.nonEmpty) {
         val und = sym(edges: _*)
-        val wedge = Triangles.perNode(und).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val merge = Triangles.perNodeMerge(und).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(wedge == merge, s"merge plan diverged on n=$n")
+        assert(counts(Triangles.perNode(und)) == counts(merge(und)),
+          s"merge plan diverged on n=$n")
       }
     }
     val real = PageRank.coOccurrenceEdges(
       Tables.lineitem(spark, sf), $"l_orderkey", $"l_partkey", maxBasket = 64)
-    val wedge = Triangles.perNode(real).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val merge = Triangles.perNodeMerge(real).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(wedge == merge, s"real fixture: ${wedge.size} vs ${merge.size}")
+    val wedge = counts(Triangles.perNode(real))
+    val merged = counts(merge(real))
+    assert(wedge == merged, s"real fixture: ${wedge.size} vs ${merged.size}")
   }
 
   test("materialized oriented+adjacency (parquet round-trip) identical to inline merge plan") {
@@ -120,17 +86,14 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
     Triangles.adjacencyOf(oriented)
       .write.mode("overwrite").parquet(s"$dir/adj")
     val adj = spark.read.parquet(s"$dir/adj")
-    val served = Triangles.perNodeMergeOn(oriented, adj).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val inline = Triangles.perNodeMerge(real).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val served = counts(Triangles.perNodeMergeOn(oriented, adj))
+    val inline = counts(merge(real))
     assert(served == inline,
       s"materialized plan diverged: ${served.size} vs ${inline.size}")
     // the broadcast-probe shape (the catalog lane under
     // perNodeMergeAuto while adjacency fits memory) — identical rows
-    val broadcasted = Triangles.perNodeMergeOn(oriented, adj,
-        broadcastAdj = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val broadcasted = counts(Triangles.perNodeMergeOn(oriented, adj,
+        broadcastAdj = true))
     assert(broadcasted == inline,
       s"broadcast plan diverged: ${broadcasted.size} vs ${inline.size}")
     graft.Fs.deleteRec(java.nio.file.Paths.get(dir))
@@ -146,8 +109,7 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
       } yield (a, b))
       if (edges.nonEmpty) {
         val und = sym(edges: _*)
-        val fast = Triangles.perNode(und).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val fast = counts(Triangles.perNode(und))
         // brute force over node triples, driver-side
         val adj = edges.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
           .map { case (k, v) => k -> v.map(_._2).toSet }
@@ -159,7 +121,7 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
           if adj.getOrElse(a, Set()).contains(c) &&
             adj.getOrElse(b, Set()).contains(c)
         } { slow(a) += 1; slow(b) += 1; slow(c) += 1 }
-        assert(fast == slow.toMap, s"trial $trial (n=$n): $fast != $slow")
+        assert(fast == bag(slow.toSeq), s"trial $trial (n=$n): $fast != $slow")
       }
     }
   }
@@ -168,17 +130,15 @@ class TrianglesSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val und = PageRank.coOccurrenceEdges(
       Tables.lineitem(spark, sf), $"l_orderkey", $"l_partkey", maxBasket = 64)
-    val fast = Triangles.perNode(und).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fast = counts(Triangles.perNode(und))
     // brute force: id-oriented wedge closure (no degree trick)
     val o = und.filter($"src" < $"dst")
     val w = o.select($"src".as("u"), $"dst".as("v"))
       .join(o.select($"src".as("u"), $"dst".as("w")), Seq("u"))
       .filter($"v" < $"w")
     val t = w.join(o.select($"src".as("v"), $"dst".as("w")), Seq("v", "w"))
-    val slow = t.select(explode(array($"u", $"v", $"w")).as("node"))
-      .groupBy($"node").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val slow = counts(t.select(explode(array($"u", $"v", $"w")).as("node"))
+      .groupBy($"node").agg(count(lit(1)).as("n")))
     assert(fast == slow,
       s"degree-ordered diverges from brute force: ${fast.size} vs ${slow.size}")
   }
